@@ -30,93 +30,10 @@ def entry(spark: SparkSession) -> DataFrame:
     return specs["q01_pricing_summary"].fn(spark, SMOKE_SF_DIR)
 
 
-#: Queries surfaced FIRST in registration order so an order-sensitive
-#: 50-query driver sampler reaches them; harmless if the sample is
-#: uniform. COMPUTED, not curated (VERDICT r11 item 1): regenerate
-#: with ``python scripts/rotation.py`` after the round's last plan
-#: change. Order: current-round plan-affected queries (enforced by
-#: tests/test_rotation_lint.py), the computed stale set oldest-
-#: evidence-first, a FLOOR_K=10 freshness reserve of the globally
-#: oldest-evidence queries (VERDICT r12 item 2 — reserved AHEAD of
-#: any --must pins so pins can never starve the tail), then pins
-#: and the remaining oldest-first tail. The header line below is
-#: emitted by the generator and records how many pins were absorbed
-#: into higher tiers. Entries past the 50-query sample are next
-#: round's starting debt.
-# computed by scripts/rotation.py (base 9b31c4490655108fadea28eb938a3e8d7d309f11; 62 plan-affected this round; 62 stale; 10 freshness-floor; 0 pins, 0 absorbed)
-_DRIVER_SAMPLE_HEAD = [
-    "q20_invoice_pipeline",  # round-affected
-    "q61_invoice_verify",  # round-affected
-    "q63_csv_roundtrip",  # round-affected
-    "q26_minhash_lsh_pairs",  # round-affected
-    "q76_sparse_cosine_retrieval",  # round-affected
-    "q161_bm25_retrieval",  # round-affected
-    "q50_dup_clusters",  # round-affected
-    "q125_canonical_corpus",  # round-affected
-    "q136_split_leakage",  # round-affected
-    "q137_cluster_split",  # round-affected
-    "q146_soft_dedup_weights",  # round-affected
-    "q96_fk_profile",  # round-affected
-    "q33_media_metadata",  # round-affected
-    "q34_media_features",  # round-affected
-    "q118_image_phash_dedup",  # round-affected
-    "q35_frame_sample_plan",  # round-affected
-    "q164_wav_band_energy",  # round-affected
-    "q166_png_band_energy",  # round-affected
-    "q59_streaming_windows",  # round-affected
-    "q73_incremental_dedup",  # round-affected
-    "q102_incremental_dedup_capped",  # round-affected
-    "q30_cosine_topk",  # round-affected
-    "q107_cosine_topk_grid",  # round-affected
-    "q31_lsh_ann",  # round-affected
-    "q32_embedding_dedup",  # round-affected
-    "q38_ivf_ann",  # round-affected
-    "q101_ivf_nprobe",  # round-affected
-    "q74_semantic_dedup",  # round-affected
-    "q87_embedding_audit",  # round-affected
-    "q104_embedding_quantize",  # round-affected
-    "q105_quantized_ann",  # round-affected
-    "q106_ivf_quantized",  # round-affected
-    "q108_incremental_ann",  # round-affected
-    "q109_hybrid_rrf",  # round-affected
-    "q111_hybrid_rrf_ivf",  # round-affected
-    "q112_ann_recall_gate",  # round-affected
-    "q113_incremental_ann_evict",  # round-affected
-    "q116_contrastive_pairs",  # round-affected
-    "q117_contrastive_ivf",  # round-affected
-    "q119_balanced_clusters",  # round-affected
-    "q120_curriculum_sample",  # round-affected
-    "q121_domain_centroids",  # round-affected
-    "q122_centroid_classify",  # round-affected
-    "q126_knn_label_infer",  # round-affected
-    "q127_ivf_label_infer",  # round-affected
-    "q129_domain_outliers",  # round-affected
-    "q135_mmr_rerank",  # round-affected
-    "q138_mmr_ivf",  # round-affected
-    "q141_kcenter_coreset",  # round-affected
-    "q142_principal_direction",  # round-affected
-    "q143_common_removal",  # round-affected
-    "q147_dedup_disagreement",  # round-affected
-    "q148_split_balance",  # round-affected
-    "q151_bitext_mining",  # round-affected
-    "q152_knn_hubness",  # round-affected
-    "q153_domain_coherence",  # round-affected
-    "q159_knn_recall_gate",  # round-affected
-    "q114_streaming_ann",  # round-affected
-    "q155_streaming_novelty",  # round-affected
-    "q160_streaming_engagement",  # round-affected
-]
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2, with
-    the rotation head registered first (the driver samples the
-    first 50 in registration order)."""
-    specs = load_all()
-    ordered = {n: specs[n].fn for n in _DRIVER_SAMPLE_HEAD if n in specs}
-    ordered.update(
-        (n, s.fn) for n, s in specs.items() if n not in ordered
-    )
-    return ordered
+    """One entry per implemented operator from SURVEY.md §2, in
+    registration order."""
+    return {n: s.fn for n, s in load_all().items()}
 
 
 def oracle_sql() -> dict[str, str]:

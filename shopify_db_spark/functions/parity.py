@@ -38,9 +38,6 @@ from pyspark.sql import types as T
 #: Bounded money type — see module docstring for why (12,4).
 MONEY = T.DecimalType(12, 4)
 
-#: SQL text of the same type for DuckDB oracle strings.
-MONEY_SQL = "DECIMAL(12,4)"
-
 
 def dec(col: Column | str) -> Column:
     """Cast a (double) column to the exact MONEY decimal type."""
@@ -56,13 +53,3 @@ def dlit(value) -> Column:
 def money_out(col: Column, scale: int = 2) -> Column:
     """Final money output: explicit HALF_UP round, then double."""
     return F.round(col, scale).cast("double")
-
-
-def odec(expr: str) -> str:
-    """DuckDB oracle-side twin of :func:`dec`."""
-    return f"CAST({expr} AS {MONEY_SQL})"
-
-
-def omoney_out(expr: str, scale: int = 2) -> str:
-    """DuckDB oracle-side twin of :func:`money_out`."""
-    return f"CAST(ROUND({expr}, {scale}) AS DOUBLE)"

@@ -93,60 +93,11 @@ def ngrams_of_norm(norm: Column, n: int = 8) -> Column:
     ).otherwise(F.array(norm))
 
 
-def char_ngrams(col: Column, n: int = 8) -> Column:
-    """Array of character n-grams of the normalized text (rolling
-    fingerprint unit). Inline form — hot paths should project
-    ``normalize_text(col)`` first and use :func:`ngrams_of_norm`."""
-    return ngrams_of_norm(normalize_text(col), n)
-
-
 def fingerprint(col: Column) -> Column:
     """Exact-dedup fingerprint: md5 of the normalized text. md5 is
     engine-portable (identical hex in Spark, DuckDB, Postgres), which
     keeps dedup results reproducible across systems."""
     return F.md5(normalize_text(col))
-
-
-def winnow_fingerprint(col: Column, n: int = 8) -> Column:
-    """Near-dup document sketch: the minimum md5 over the document's
-    character n-grams (a 1-min-wise rolling-hash fingerprint — the
-    winnowing idea with k=1). Equal sketches ⇒ the documents share
-    their minimal n-gram. Inline form; hot paths project the
-    normalized text and use ``array_min(transform(ngrams_of_norm(...),
-    md5))`` over the materialized column."""
-    return F.array_min(F.transform(char_ngrams(col, n), F.md5))
-
-
-def stopword_count(col: Column, stopwords: list[str] | None = None) -> Column:
-    words = F.array(*[F.lit(w) for w in (stopwords or STOPWORDS_EN)])
-    return F.size(F.filter(tokens(col), lambda t: F.array_contains(words, t)))
-
-
-def punct_ratio(col: Column) -> Column:
-    norm = normalize_text(col)
-    stripped = F.regexp_replace(norm, r"[.,;:!?'\"()\[\]-]", "")
-    return (F.length(norm) - F.length(stripped)).cast("double") / F.nullif(
-        F.length(norm).cast("double"), F.lit(0.0)
-    )
-
-
-def quality_score(col: Column) -> Column:
-    """Composite document-quality heuristic in [0, 1]: rewards
-    mid-length documents, a healthy stopword ratio, and low
-    punctuation density — the standard cheap pre-filter in front of
-    expensive pipeline stages."""
-    n_tok = token_count(col).cast("double")
-    stop_ratio = stopword_count(col).cast("double") / F.nullif(n_tok, F.lit(0.0))
-    length_score = F.least(n_tok / F.lit(100.0), F.lit(1.0))
-    punct_pen = F.least(
-        F.coalesce(punct_ratio(col), F.lit(0.0)) * F.lit(5.0), F.lit(1.0)
-    )
-    stop_score = F.least(F.coalesce(stop_ratio, F.lit(0.0)) * F.lit(4.0), F.lit(1.0))
-    return (
-        F.lit(0.5) * length_score + F.lit(0.3) * stop_score
-        - F.lit(0.2) * punct_pen
-        + F.lit(0.2)
-    )
 
 
 def lang_scores_of_tokens(toks: Column) -> dict[str, Column]:
@@ -160,13 +111,6 @@ def lang_scores_of_tokens(toks: Column) -> dict[str, Column]:
     return out
 
 
-def lang_scores(col: Column) -> dict[str, Column]:
-    """Per-language stopword-hit counts (the n-gram-free language-ID
-    heuristic: function words are the strongest cheap signal).
-    Inline form — hot paths project the token array first."""
-    return lang_scores_of_tokens(tokens(col))
-
-
 def lang_id_from_scores(scores: dict[str, Column]) -> Column:
     """Argmax language from per-language score COLUMNS with the
     deterministic precedence order (en > es > de > fr > zh); 'und'
@@ -177,13 +121,6 @@ def lang_id_from_scores(scores: dict[str, Column]) -> Column:
     for lang in reversed(langs):
         expr = F.when(scores[lang] == best, F.lit(lang)).otherwise(expr)
     return F.when(best > 0, expr).otherwise(F.lit("und"))
-
-
-def lang_id(col: Column) -> Column:
-    """Argmax language with deterministic tie precedence. Inline
-    form — hot paths project score columns and use
-    :func:`lang_id_from_scores`."""
-    return lang_id_from_scores(lang_scores(col))
 
 
 def md5_bucket(col: Column, salt: str, m: int) -> Column:

@@ -175,18 +175,18 @@ def minhash_lsh_pairs(
     fold, so candidates are scored inline — no join back to a cached
     signature table.
 
-    Single-pass bucket fold (round 15; replaces round 14's
-    localCheckpoint pin + bucket-count join + self-join): the bucket
-    cap means a bucket holds at most ``max_bucket`` members, so each
-    (band, band_key) group is collected into ONE bounded array and
-    the candidate pairs are generated by an array comb-explode —
-    the degenerate-bucket guard becomes a ``size(ds) <= max_bucket``
-    filter on the same aggregate (no separate sizing subtree), the
-    self-join disappears, and the tokenize → md5 → min-agg signature
-    pipeline executes exactly ONCE with no materialization barrier
-    (the pin traded 4× recompute for a barrier that measurably lost
-    at sf0.1 — VERDICT r14 item 2; this shape needs neither).
-    Per-bucket work is ≤ C(max_bucket, 2) slim pair structs."""
+    Single-pass bucket fold: each (band, band_key) group is
+    collected into ONE array and the candidate pairs are generated
+    by an array comb-explode, so there is no self-join and the
+    tokenize → md5 → min-agg signature pipeline executes exactly
+    ONCE with no materialization barrier.
+
+    The degenerate-bucket guard is a ``size(ds) <= max_bucket``
+    filter applied AFTER ``collect_list``: an oversized bucket is
+    still collected in full on one reducer before it is dropped, so
+    per-task state is bounded by the largest bucket, not by
+    ``max_bucket``. Only the pair generation is bounded: per-bucket
+    work is ≤ C(max_bucket, 2) slim pair structs."""
     bands = banded_minhash(docs, id_col, text_col, n_seeds, band_size)
     # degenerate-bucket guard: boilerplate shingles put thousands of
     # docs in one bucket → quadratic pair blowup; cap and drop.
@@ -582,7 +582,7 @@ PREFIX_DF_BROADCAST_SOURCE_BYTES = 8 << 20
 #: job-scoped run relies on LRU eviction, while a long-lived service
 #: calls :func:`release_persisted_frames` once results are
 #: materialized to reclaim executor block memory deterministically.
-#: The registry is SELF-BOUNDING (ADVICE r7): each new registration
+#: The registry is SELF-BOUNDING: each new registration
 #: first unpersists every prior frame, so a long-lived caller that
 #: never calls the release hook pins at most ONE frame — no worse
 #: than the pre-hook behavior, where an out-of-scope frame's blocks
@@ -597,8 +597,8 @@ def _register_persisted(df: DataFrame) -> None:
     frame, releasing any prior registrations (bounded-by-one
     contract).
 
-    ORDER MATTERS (round-9 root-cause of the q84 r6→r8 slowdown,
-    2.35 s → 3.93 s): Spark's CacheManager keys cache entries by
+    ORDER MATTERS (the wrong order slowed q84 from 2.35 s to
+    3.93 s): Spark's CacheManager keys cache entries by
     LOGICAL PLAN, and consecutive calls over the same input build
     the same plan — so the prior frame and the new frame share ONE
     cache entry. Releasing the prior frame AFTER persisting the new
@@ -672,7 +672,7 @@ def prefix_filter_jaccard_pairs(
     shuffle path. Both paths are oracle-identical
     (tests/test_dedup_similarity.py), within noise of each other at
     sf0.1 (3.2 vs 3.6 s), and the shuffle path is scale-measured
-    (SCALE.md round 6)."""
+    (SCALE.md)."""
     if broadcast_df is None:
         # plan_size_bytes documents the Spark Connect / private-API
         # caveat: unsizeable lineages return the sentinel and take

@@ -55,7 +55,7 @@ def connected_components(
     appearing in any edge. Raises if ``max_iter`` rounds do not
     converge (diameter > max_iter — not a dedup-shaped graph).
     """
-    # ONE exchange builds the edge table (round-14 optimization):
+    # ONE exchange builds the edge table:
     # hash-partitioning on ``a`` alone already co-locates every
     # (a, b) duplicate, so ``repartition(a)`` BEFORE the dedup lets
     # the planner run the dedup aggregate on that exchange instead of
@@ -194,7 +194,7 @@ def integer_pagerank(
     Returns (node, degree, pr) with ``pr`` at the final iteration."""
     # node-sized degree table, consumed once per iteration (the
     # damping join) plus the rank init; unpinned it re-aggregated the
-    # full edge table every round (round 14)
+    # full edge table every iteration
     out_deg = (
         edges.groupBy(F.col(src_col).alias("node"))
         .agg(F.count(F.lit(1)).alias("degree"))

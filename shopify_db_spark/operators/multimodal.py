@@ -7,12 +7,12 @@ output schema enforcement), the partitioning story (binary payloads
 repartition by media_id so one task never holds more than a batch of
 blobs), and the deterministic byte-level feature path.
 
-What is REAL since rounds 13/14: TWO registered codecs.
+Also REAL: TWO registered codecs.
 (1) RIFF/WAVE 16-bit PCM through the stdlib ``wave`` module
-(VERDICT r12 item 6: synthesis writes genuine WAV files,
+(synthesis writes genuine WAV files,
 :func:`wav_pcm_decode` parses the header and unpacks frames; q164
 gates the path end-to-end against an integer-exact SQL oracle).
-(2) 8-bit grayscale PNG, stdlib-only (VERDICT r13 item 4: synthesis
+(2) 8-bit grayscale PNG, stdlib-only (synthesis
 writes genuine PNGs with CRC-32 chunks and all five scanline filter
 types; :func:`png_gray_decode` walks the chunks CRC-checked,
 inflates IDAT, and reverses the filters; q166 gates it against an
@@ -103,9 +103,9 @@ def fake_decode(content: bytes, kind: str) -> list[float]:
 def decode_media(content: bytes, kind: str) -> list[float]:
     """The codec boundary. TWO real codecs are registered by default:
     RIFF/WAVE PCM audio through the stdlib ``wave`` module
-    (:func:`wav_pcm_decoder`, VERDICT r12 item 6) and 8-bit grayscale
+    (:func:`wav_pcm_decoder`) and 8-bit grayscale
     PNG through stdlib zlib + CRC-validated chunk walk + full
-    defilter (:func:`png_gray_decoder`, VERDICT r13 item 4) — genuine
+    defilter (:func:`png_gray_decoder`) — genuine
     parse/inflate/unpack paths exercised in CI with no extra
     dependencies. Video (and unrecognized containers) still requires
     an injected decoder (pyav is not in this container) and raises
@@ -286,7 +286,7 @@ def wav_energy_features(media: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------- PNG codec
-# The SECOND real in-container codec (VERDICT r13 item 4): 8-bit
+# The SECOND real stdlib codec: 8-bit
 # grayscale PNG, stdlib-only (zlib + struct + binascii). Synthesis
 # writes genuine PNG files — signature, IHDR/IDAT/IEND chunk layout
 # with real CRC-32s, zlib-compressed scanlines, and a per-row filter
@@ -711,23 +711,6 @@ def media_fingerprint(
         media.repartition("media_id")
         .select("media_id", "kind", "content")
         .mapInPandas(run, schema=PHASH_SCHEMA)
-    )
-
-
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: passes content through untouched (STUB — a
-    real pipeline transcodes in the same mapInPandas shape as
-    :func:`extract_features`) while updating the typed metadata,
-    which is the part downstream pruning relies on."""
-    return media.withColumn(
-        "meta",
-        F.struct(
-            F.col("meta.format").alias("format"),
-            F.lit(width).cast("int").alias("width"),
-            F.lit(height).cast("int").alias("height"),
-            F.col("meta.sample_rate").alias("sample_rate"),
-            F.col("meta.duration_ms").alias("duration_ms"),
-        ),
     )
 
 

@@ -112,34 +112,6 @@ def cosine_with_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
     return dot(a, b) / (na * nb)
 
 
-def cosine_arrow(a: Column, b: Column) -> Column:
-    """Arrow-vectorized cosine — the bulk-scoring fast path.
-
-    The HOF form (``zip_with`` + ``aggregate``) evaluates its lambda
-    per element via CodegenFallback — fine per row, costly over
-    millions of candidate pairs. This pandas_udf moves whole record
-    batches over Arrow and scores them as two numpy matmul-style
-    reductions. Trade-off: numpy's pairwise summation is not
-    bit-identical to the sequential HOF sum (≈1e-12 relative), so
-    oracle-hashed catalog queries keep the HOF scorer; use this for
-    production-scale scoring where exact fp ordering is not
-    contractual. Measured 2.6× over the HOF scorer on a 125k-pair
-    candidate set at dim 64 (max abs score diff 4.4e-16)."""
-
-    @F.pandas_udf("double")
-    def _cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        import numpy as np
-
-        A = np.stack(va.to_numpy()).astype("float64")
-        B = np.stack(vb.to_numpy()).astype("float64")
-        num = np.einsum("ij,ij->i", A, B)
-        den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return pd.Series(num / den)
-
-    return _cos(a, b)
-
-
 def _respread_thin_candidates(c: DataFrame) -> DataFrame:
     """Under a broadcast-queries join, the O(|q| × |c|) scoring runs
     with the CANDIDATES side's partitioning — which is scan- or
@@ -154,7 +126,7 @@ def _respread_thin_candidates(c: DataFrame) -> DataFrame:
     parallelizes. A corpus-scale scan already plans
     ≥ defaultParallelism splits and skips this untouched.
 
-    The probe degrades gracefully (ADVICE r13): ``df.rdd`` and
+    The probe degrades gracefully: ``df.rdd`` and
     ``sparkContext`` are unavailable under Spark Connect, and the
     respread is a pure performance optimization — any failure falls
     through to the unrepartitioned candidates (matching
@@ -487,42 +459,6 @@ def lsh_bucket_ann(
     )
 
 
-def cosine_dedup_pairs(
-    vectors: DataFrame,
-    threshold: float = 0.98,
-    block_col: str | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding near-duplicate pairs: cosine ≥ threshold, optionally
-    blocked on a column (label, shard, LSH bucket) to bound the pair
-    join."""
-    a = vectors.select(
-        F.col(id_col).alias("id_a"),
-        as_double(F.col(vec_col)).alias("va"),
-        *( [F.col(block_col).alias("block_a")] if block_col else [] ),
-    ).withColumn("na", norm(F.col("va")))
-    b = vectors.select(
-        F.col(id_col).alias("id_b"),
-        as_double(F.col(vec_col)).alias("vb"),
-        *( [F.col(block_col).alias("block_b")] if block_col else [] ),
-    ).withColumn("nb", norm(F.col("vb")))
-    cond = F.col("id_a") < F.col("id_b")
-    if block_col:
-        cond = cond & (F.col("block_a") == F.col("block_b"))
-    return (
-        a.join(b, cond)
-        .select(
-            "id_a",
-            "id_b",
-            cosine_with_norms(
-                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
 #: auto-banding anchors: planes-per-band targets ~LSH_TARGET_BUCKET
 #: rows per bucket (r = ceil(log2(N / target)), floor 3); the band
 #: count holds the recall target through 1-(1-p^r)^b ≥ LSH_RECALL
@@ -632,7 +568,7 @@ def cosine_dedup_pairs_lsh(
         # both sides of the candidate self-join consume this frame;
         # unpinned, the bands × planes_per_band sign-projection
         # pipeline (each projection a dim-wide fold) executes twice —
-        # the minhash band-table precedent (round 14): pin the output
+        # the minhash band-table precedent: pin the output
         # of the expensive signature tier, 3-int rows per (doc, band)
         .localCheckpoint()
     )
@@ -681,7 +617,7 @@ def _matmul_scored(
 ) -> DataFrame:
     """The scale path of :func:`ivf_assign`: the N×K scoring pass as
     a numpy matmul inside mapInPandas, codebook shipped whole as a
-    Spark broadcast variable (VERDICT r14 scale audit: the JVM
+    Spark broadcast variable (a ×30 scale audit: the JVM
     higher-order-function cosine made the pass q147's quadratic-cost
     semantic side — 19.6→231.6 s from ×10 to ×30 — and q152's 1.67
     slope; BLAS does the same ×30 flops in under a second per task).
@@ -790,7 +726,7 @@ def ivf_assign(
     is the query-side multi-probe used by :func:`ivf_ann`'s
     ``nprobe``.
 
-    Shuffle discipline (round 10): the broadcast expansion is
+    Shuffle discipline: the broadcast expansion is
     map-side, so the only shuffle is the per-vector argmax — and for
     ``n_best == 1`` (the common case) it must NOT carry the N×K
     candidate rows with their ~520-byte vector arrays through a rank
@@ -802,7 +738,7 @@ def ivf_assign(
     re-derive the assignment lazily per round, and the extra join
     re-executed per derivation (measured 2.5 s → 130 s on q138).
 
-    Scale path (round 14): the N×K scoring pass through the JVM
+    Scale path: the N×K scoring pass through the JVM
     higher-order-function cosine is the dominant cost once the
     codebook grows with the corpus — the ×30 audit measured it as
     q147's quadratic-cost semantic side and q152's 1.67 ×10→×30
@@ -843,10 +779,10 @@ def ivf_assign(
         # (desc(c_cos) → NaN first, NULLs last, ties → lowest
         # centroid_id) even for non-finite cosines (zero-norm or
         # null embeddings): a bare -c_cos diverges there, because
-        # struct ordering sorts a negated NULL/NaN key differently
-        # (round-10 advice). Cosines live in [-1, 1], so ±2 are
-        # strict sentinels: NaN → -2 (wins like NaN-first), finite →
-        # -c, NULL → +2 (loses like NULLS LAST).
+        # struct ordering sorts a negated NULL/NaN key differently.
+        # Cosines live in [-1, 1], so ±2 are strict sentinels:
+        # NaN → -2 (wins like NaN-first), finite → -c, NULL → +2
+        # (loses like NULLS LAST).
         neg_key = F.coalesce(
             F.when(F.isnan(F.col("c_cos")), F.lit(-2.0)).otherwise(
                 -F.col("c_cos")
@@ -913,7 +849,7 @@ def ivf_ann(
     bound, ``centroid_id`` is the equi key and the scoring join runs
     as a plain shuffle join on the cell id (oracle-identical).
 
-    Self-graph fast path (round 14): when ``queries`` IS the
+    Self-graph fast path: when ``queries`` IS the
     ``candidates`` frame (the q152 k-NN-graph shape — every vector
     queries the whole corpus), the n×K coarse-assignment pass — the
     dominant cost at fixed cell size — would otherwise run TWICE
@@ -1217,7 +1153,7 @@ def semantic_dedup_pairs(
     its band count as (N/target)^{log2(1/p_t)} to hold recall, so at
     an unselective threshold the candidate volume is superlinear
     (measured ×10 exponent 0.91 on q32's 0.45-threshold gate — the
-    honest LSH cost, SCALE.md round-8 table). IVF cells sidestep the
+    honest LSH cost, SCALE.md). IVF cells sidestep the
     recall trade: the codebook grows WITH the corpus (deterministic
     vec_id % mod subset here, :func:`kmeans_codebook` in
     production), so cells stay ~constant-size and the within-cell
@@ -1237,7 +1173,7 @@ def semantic_dedup_pairs(
     keep vectors out of the multi-band ``dropDuplicates`` exchange;
     with no dedup stage here the slim shape just deferred scoring
     through two extra id-keyed joins of the assignment (6 exchanges
-    + 3 sort-merge joins in q147's before-plan, round 14) for the
+    + 3 sort-merge joins in q147's before-plan) for the
     same vector bytes shuffled. Now: 2 block-keyed exchanges, one
     join, identical cosine expression on identical values — results
     bit-identical. The assignment is still consumed twice (both join
@@ -1368,7 +1304,7 @@ def balanced_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Size-capped cluster assignment (VERDICT r8 #5): each vector
+    """Size-capped cluster assignment: each vector
     is placed in the nearest of its ``nprobe`` candidate cells that
     still has room — the balanced counterpart of :func:`ivf_assign`
     for curriculum/mixture construction, where a raw codebook's
@@ -1461,7 +1397,7 @@ def kmeans_codebook(
     ``pyspark.ml`` (always bundled with Spark).
 
     The training input is hash-repartitioned on ``id_col`` to a
-    FIXED partition count and sorted within partitions (ADVICE r8):
+    FIXED partition count and sorted within partitions:
     kmeans|| init is partitioning-dependent, so without the pin the
     trained codebook — and any recall gate built on it (q112) —
     would shift with the session's parallelism / input splits. With
@@ -1501,16 +1437,17 @@ def sparse_cosine_topk(
     order-independent — no float-summation drift between engines or
     partitionings; only the final ``dot / (‖a‖·‖b‖)`` is floating.
 
-    Scale shape (round 15 — single-pass term-group fold; replaces
-    the inverted-index self-join): per-term candidate fan-out is df²,
-    bounded by pruning terms with document frequency above ``df_cap``
-    (the stop-term / prefix-filtering bound; hot terms carry no
-    ranking signal and are what makes naive term joins quadratic).
-    The cap means every surviving term's posting list fits one
-    bounded array, so ONE ``collect_list`` aggregate per term both
-    applies the df prune (``size(ds) <= df_cap`` — no separate
-    df-count aggregate or broadcast join) and generates the i ≤ j
-    pair products by array comb-explode — the posting lineage
+    Scale shape (single-pass term-group fold): per-term candidate
+    fan-out is df², bounded by pruning terms with document frequency
+    above ``df_cap`` (the stop-term / prefix-filtering bound; hot
+    terms carry no ranking signal and are what makes naive term joins
+    quadratic). ONE ``collect_list`` aggregate per term both applies
+    the df prune and generates the i ≤ j pair products by array
+    comb-explode. The prune is a ``size(ds) <= df_cap`` filter
+    applied AFTER ``collect_list``, so a hot term's whole posting
+    list is still collected on one reducer before it is dropped:
+    per-task state is bounded by the largest df, not by ``df_cap``;
+    only the pair fan-out is bounded. The posting lineage
     (typically tokenize → shingle → tf aggregate) executes exactly
     once instead of once per consumer (norms + both join sides; the
     q76 before-plan carried 24 scans of ``documents``). The i = j
@@ -1522,8 +1459,9 @@ def sparse_cosine_topk(
     capped term space so the metric stays an actual cosine; the
     integer dot sums and the ``sqrt(Σtf²)`` factors are the exact
     expressions of the join form, so scores are bit-identical.
-    Returns (doc_id, neighbor_id, cosine, rank ≤ k); docs sharing no
-    surviving term emit no rows."""
+    ``terms`` must hold one row per (doc, term). Returns (doc_id,
+    neighbor_id, cosine, rank ≤ k); docs sharing no surviving term
+    emit no rows."""
     posts = terms.select(
         F.col(id_col).alias("doc_id"),
         F.col(term_col).alias("term"),
@@ -1656,15 +1594,16 @@ def bm25_topk(
     past 1e8 docs; per-term contributions ≤ ~1e16 there, BIGINT-safe
     summed over any real query length.
 
-    **Scale shape (round 15 — single-pass term-group fold, the q76
-    rewrite).** df prune at ``df_cap`` bounds the candidate fan-out
-    (Σ_term qdf·df, the q76 stop-term bound), and the cap means every
-    surviving term's posting list fits one bounded array: ONE
-    ``collect_list`` aggregate per term applies the prune
-    (``size(ds) <= df_cap`` — the separate df-count aggregate and its
-    term-keyed join disappear; df itself is the array size) and
-    generates the query × candidate products by array comb-explode,
-    so the posting lineage executes once instead of once per consumer
+    **Scale shape (single-pass term-group fold).** df prune at
+    ``df_cap`` bounds the candidate fan-out (Σ_term qdf·df, the q76
+    stop-term bound). ONE ``collect_list`` aggregate per term applies
+    the prune (df itself is the array size) and generates the
+    query × candidate products by array comb-explode. The prune is a
+    ``size(ds) <= df_cap`` filter applied AFTER ``collect_list``, so
+    a hot term's whole posting list is still collected on one reducer
+    before it is dropped: per-task state is bounded by the largest
+    df, not by ``df_cap``; only the fan-out is bounded. The posting
+    lineage executes once instead of once per consumer
     (df + dl + both pruned sides — the q161 before-plan carried 16
     scans of ``documents``). Per-document length rides the posting
     rows via a doc-keyed window over the UNPRUNED space (the standard
@@ -1673,8 +1612,7 @@ def bm25_topk(
     doc-keyed join applied on the same exchange. Corpus stats (N, TL)
     are a 1-row broadcast (the q134 normalizer idiom) — the one
     remaining second pass over the posting aggregate. ``query_ids``
-    must be unique ids (every caller passes a distinct id set; the
-    former inner join had the same multiplicity contract). Returns
+    must be unique ids (every caller passes a distinct id set). Returns
     (query_id, doc_id, score_scaled, rank ≤ k); self-matches
     excluded; query docs sharing no surviving term emit no rows."""
     posts = doc_terms.select(

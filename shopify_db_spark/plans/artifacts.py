@@ -16,7 +16,7 @@ bench.py reports each artifact's cold build as its own
 ``artifact_*`` line item inside ``catalog_total_wall`` — consumers
 then honestly measure artifact-read + their own work.
 
-Lifecycle (round-12, VERDICT r11 item 6): an entry pins its
+Lifecycle: an entry pins its
 ``localCheckpoint`` RDD for as long as the memo references it.
 Releasing is therefore a reference drop — Spark's ContextCleaner
 reclaims the checkpoint blocks once the DataFrame is unreferenced —
@@ -46,8 +46,8 @@ _MEMOS: dict[str, dict[tuple[int, str], tuple[SparkSession, DataFrame]]] = {}
 
 def _sweep(memo: dict) -> None:
     """Drop EVERY entry whose owning session is stopped — not just
-    the key being re-accessed (round-10 advice: per-key eviction
-    leaked entries for other sf_dirs / replaced sessions)."""
+    the key being re-accessed (per-key eviction would leak entries
+    for other sf_dirs / replaced sessions)."""
     for key, (owner, _df) in list(memo.items()):
         try:
             alive = not owner.sparkContext._jsc.sc().isStopped()

@@ -162,8 +162,8 @@ def commerce_tables_from_benchmark(
     the invoice pipeline references them from every branch — the
     lazy form re-derives the mapping 28× per q20 run (28 orders
     scans in the executed plan; measured 0.75 s slower at sf0.1
-    despite persist blocking column pruning, reversing the round-2
-    measurement taken before the branch count grew). This also
+    despite persist blocking column pruning; an earlier measurement
+    favoured the lazy form before the branch count grew). This also
     mirrors the reference, where these ARE materialized Postgres
     tables, not views; at 100 TB the same role is played by writing
     the mapping layer to a staging location once per sync. Pass

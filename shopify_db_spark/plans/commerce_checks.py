@@ -2,9 +2,9 @@
 suite and the CSV round-trip — reference ``tripletex.py:204-242`` and
 ``shopifydb.py:115,144-145``.
 
-Round 1 left the verify suite (SURVEY §2.10 V1-V8), the gateway
-replace map (F14), the empty-string normalization (F17) and the CSV
-source/sink (S6/S7) with pytest-only evidence. These queries put
+The verify suite (SURVEY §2.10 V1-V8), the gateway replace map
+(F14), the empty-string normalization (F17) and the CSV source/sink
+(S6/S7) would otherwise have pytest-only evidence. These queries put
 them under the driver's oracle gate by re-expressing each check as a
 deterministic aggregate over the SAME mapped invoice result that
 q20 already hash-matches, so the oracle is the invoice SQL spec plus
@@ -484,7 +484,7 @@ def q63_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final_sort=False + sort_cols: the reference's (INVOICE NO,
     # CUSTOMER NAME) file order comes from a LOCAL sort on the single
     # writer partition instead of a global range sort that the
-    # single-file funnel re-scrambled anyway (round-14 optimization —
+    # single-file funnel re-scrambled anyway (this
     # drops the range-boundary sampling job and the rangepartitioning
     # exchange; row set unchanged, file order now exactly the
     # reference's).

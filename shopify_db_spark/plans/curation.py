@@ -1264,10 +1264,10 @@ def q123_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so ws = ⌊−4·SCALE·ca·cb/(ca·nb + cb·na)⌋ is PURE INTEGER floor
 # division — computed as −⌈N/D⌉ = −((N + D − 1) div D) on positive
 # N, D so truncating and flooring division agree on every engine.
-# No doubles anywhere: the round-9 double pipeline floored the LAST
+# No doubles anywhere: a double pipeline floors the LAST
 # representable digit of a binary64 at SCALE = 1e15, so a 1-ulp
-# reassociation difference between engine versions flipped floors
-# (the round-9 q124 driver red). The reduction is bit-identical on
+# reassociation difference between engine versions flips floors
+# (a q124 gate failure). The reduction is bit-identical on
 # any engine at any version, and cheaper. Intermediates ride
 # DECIMAL(38,0) (Spark) / HUGEINT (DuckDB): N = 4·SCALE·ca·cb needs
 # ~2·log10(count) + 15.6 digits — safe past 1e11-token sources.

@@ -862,7 +862,7 @@ def q157_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # operand's wrap point, because Spark's shiftright wraps the shift
 # amount mod the BASE WIDTH (mod-32 for an int-typed 1000000: an
 # unguarded 224-day-old event shifts by 32 ≡ 0 and wraps back to
-# weight 10⁶ — the round-9 advice finding). The base is also cast
+# weight 10⁶). The base is also cast
 # to BIGINT so even the 20–63 range is well-defined; both guards
 # applied identically in engine and oracle.
 #

@@ -155,8 +155,8 @@ def product_lines(
     t = stp.filter("transaction_rank = 1").alias("t")
     o = orders.alias("o")
     c = customers.alias("c")
-    # ONE exchange serves both the dedup and the join (round-14
-    # optimization): two rows equal on the full attribute set
+    # ONE exchange serves both the dedup and the join: two rows
+    # equal on the full attribute set
     # necessarily share ``order_id``, so hash-partitioning on
     # ``order_id`` alone satisfies the dedup aggregate's clustering
     # requirement — the explicit repartition replaces the planner's

@@ -31,7 +31,7 @@ _SCRATCH_ROOTS: set[str] = set()
 _SCRATCH_PREFIXES = ("spark_graft_orc_", "spark_graft_evolve_")
 #: a sibling scratch dir older than this AND without a live owner
 #: process is assumed to belong to a dead application (crash before
-#: its atexit ran) and is pruned. The liveness check (ADVICE r7) is
+#: its atexit ran) and is pruned. The liveness check is
 #: a sibling ``<dir>.owner`` pid file written at creation — a
 #: SIBLING, not a member, so `mode("overwrite")` / rmtree-and-
 #: rewrite inside the dir can't destroy it; mtime alone would
@@ -46,7 +46,7 @@ def _owner_alive(marker: str) -> bool:
     malformed markers count as dead — the mtime gate already said
     the dir is old. A live process owned by ANOTHER user raises
     PermissionError from ``os.kill(pid, 0)`` — that is an ALIVE
-    signal (ADVICE r8), not a dead one; only ProcessLookupError
+    signal, not a dead one; only ProcessLookupError
     (no such pid) and read/parse failures mean dead."""
     import os
 
@@ -99,7 +99,7 @@ def _scratch_dir(spark: SparkSession, prefix: str, sf_dir: str) -> str:
             for d in glob.glob(os.path.join(tmp, pfx + "*")):
                 if d.endswith(".owner"):
                     # Reclaim a marker orphaned by a racing remover /
-                    # partial cleanup (ADVICE r8): its companion dir is
+                    # partial cleanup: its companion dir is
                     # gone, so nothing else will ever delete it.
                     try:
                         if (
@@ -420,7 +420,7 @@ def q96_fk_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges union into one 5-row job. The previous shape ran 2
     blocking ``.count()`` actions per edge — 10 sequential jobs +
     driver round-trips for work with no cross-edge dependency
-    (guide §2.6/§5; round 14). The containment division is the same
+    (guide §2.6/§5). The containment division is the same
     binary64 divide the driver-side float() computed."""
     edge_frames = []
     for child, ck, parent, pk in _Q96_EDGES:

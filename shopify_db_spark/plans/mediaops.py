@@ -92,7 +92,7 @@ def q34_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# q118: perceptual-hash image dedup (VERDICT r8 #4) — the multimodal
+# q118: perceptual-hash image dedup — the multimodal
 # tier's missing dedup step. Composition of two driver-certified
 # pieces: the injectable codec boundary (q34's mapInPandas plumbing,
 # here emitting a packed 64-bit fingerprint instead of a float
@@ -244,7 +244,7 @@ def q35_frame_sample_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# q164: REAL WAV PCM decode, end-to-end (VERDICT r12 item 6). The
+# q164: REAL WAV PCM decode, end-to-end. The
 # audio-kind documents become genuine RIFF/WAVE blobs (stdlib `wave`
 # writer, 16-bit PCM mono @ 8 kHz, sample k = (byte_k - 128) * 256);
 # the engine then actually DECODES them — header parse, mono/16-bit
@@ -318,7 +318,7 @@ def q164_wav_band_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# q166: REAL PNG decode, end-to-end (VERDICT r13 item 4 — the image
+# q166: REAL PNG decode, end-to-end (the image
 # twin of q164). The image-kind documents become genuine 8-bit
 # grayscale PNG blobs (stdlib zlib; CRC-32 chunks; scanline filters
 # CYCLE all five standard types), and the engine actually DECODES

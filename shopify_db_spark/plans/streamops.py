@@ -539,7 +539,7 @@ def incremental_minhash_dedup(
     # time. The previous cumulative form re-unioned and re-CHECKPOINTED
     # the whole accumulated index and output every batch — O(B·N) rows
     # rematerialized over B batches for an index that only ever
-    # APPENDS settled rows (round-14 optimization; the batch twin
+    # APPENDS settled rows (the batch twin
     # ``similarity.incremental_ivf_topk`` already accumulated its
     # probe outputs this way). Per batch, only batch-sized frames are
     # now materialized; a union of checkpointed parts is a
@@ -570,7 +570,7 @@ def incremental_minhash_dedup(
             return
         # Single-partition micro-batch → spread before the per-doc
         # signature pass runs pre-shuffle (same root cause and fix
-        # as the q114 sink — SCALE.md round 9).
+        # as the q114 sink — SCALE.md).
         spread = batch_df.repartition(
             spark.sparkContext.defaultParallelism, F.col("doc_id")
         )
@@ -813,7 +813,7 @@ def streaming_ann_maintenance(
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # foreachBatch is at-least-once: a transient failure can
-        # re-invoke the sink with the SAME batch_id (ADVICE r8).
+        # re-invoke the sink with the SAME batch_id.
         # Arrival order is therefore derived from batch_id itself
         # (== the file index under maxFilesPerTrigger=1 + oldest-
         # first + availableNow), and replayed ids are skipped so a
@@ -1237,7 +1237,7 @@ def q160_streaming_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Stateful-sink family registry (round 12, VERDICT r11 item 4).
+# Stateful-sink family registry.
 #
 # Every foreachBatch sink above follows one shape: seen-batch_id
 # guard → isEmpty skip → family-specific MERGE of the micro-batch
@@ -1374,7 +1374,7 @@ def _novelty_merge(
         # no .distinct(): HLL registers are MAX-per-idx, so duplicate
         # shingles cannot change any register — the dedup was a full
         # shingle-row exchange per batch for a mathematically void
-        # step (round-14 optimization; the q133/q90 merges already
+        # step (the q133/q90 merges already
         # hash raw occurrences). The md5 per occurrence is map-side;
         # the only shuffle left is the 64-register partial aggregate.
     )
@@ -1405,14 +1405,14 @@ def _engagement_merge(
     histogram keeps every (user, day) seen with cnt > 0, so
     ``max(d)`` over the final state equals the max over all arrivals
     — the finalize derives it in one 1-row aggregate instead of a
-    per-batch collect job (round-14 optimization: one fewer job and
+    per-batch collect job (one fewer job and
     driver round trip per micro-batch, and one less driver-held
     scalar for the recovery story to reconstruct)."""
     # spread on user_id, not event_id: hash partitioning on a subset
     # of the grouping keys satisfies the aggregate's clustering, so
     # ONE exchange serves the single-partition-micro-batch spread AND
     # the (user, day) count — the event_id spread added a second,
-    # full-batch exchange for no pre-shuffle compute (round 14)
+    # full-batch exchange for no pre-shuffle compute
     spread = batch_df.repartition(
         spark.sparkContext.defaultParallelism, F.col("user_id")
     )
@@ -1478,7 +1478,7 @@ def _ann_merge(
         # ``incremental_ivf_topk``'s shape) instead of re-unioning
         # and re-checkpointing the whole accumulated output every
         # batch — O(B·N) rows rematerialized for an append-only
-        # result (round-14 optimization). The probe plan reads only
+        # result. The probe plan reads only
         # checkpointed inputs (``a`` and the admitted index), so the
         # part checkpoint materializes batch-sized data.
         state["out"].append(
@@ -1564,7 +1564,7 @@ def _ann_result(spark: SparkSession, state: dict) -> DataFrame:
     )
 
 
-#: q163 vocabulary-state prune (VERDICT r12 item 4). ``state["cap"]``
+#: q163 vocabulary-state prune. ``state["cap"]``
 #: = None (the production default) carries the EXACT vocabulary, so
 #: the oracle stays q40's verbatim. An integer cap bounds the carried
 #: state to the ``cap`` highest-tf terms (distributed top-K via
@@ -1573,7 +1573,7 @@ def _ann_result(spark: SparkSession, state: dict) -> DataFrame:
 #: EVICTED (tf, df) mass: state size is O(cap + D·W) rows regardless
 #: of corpus vocabulary — the Zipf long tail at 100 TB never
 #: accumulates. Exactness certificate (``_term_stats_certificate``,
-#: ADVICE r13 — the earlier absent-terms-only condition was unsound:
+#: an absent-terms-only condition would be unsound:
 #: a term evicted at one prune and re-ADDED by a later batch stays
 #: present with tf understated by its stranded evicted mass, so
 #: rank-100 tf > B alone cannot certify kept VALUES): the pruned
@@ -1797,7 +1797,7 @@ def _q163_oracle() -> str:
     # Import textops FIRST: q40 registers there, and load_all()
     # imports streamops before textops — without this explicit edge
     # the lookup only works because of incidental mid-module imports
-    # elsewhere in this file (ADVICE r12). The import is idempotent.
+    # elsewhere in this file. The import is idempotent.
     from shopify_db_spark.plans import textops  # noqa: F401
     from shopify_db_spark.plans.catalog import QUERIES
 
@@ -1925,8 +1925,8 @@ def _reservoir_result(spark: SparkSession, state: dict) -> DataFrame:
 
 
 def _q165_oracle() -> str:
-    # force q80's registration before reading it (q163's lesson —
-    # ADVICE r12: never rely on incidental import order)
+    # force q80's registration before reading it (never rely on
+    # incidental import order)
     from shopify_db_spark.plans import curation  # noqa: F401
     from shopify_db_spark.plans.catalog import QUERIES
 

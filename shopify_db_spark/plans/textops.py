@@ -638,10 +638,11 @@ def q76_sparse_cosine_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     document by cosine over 3-token-shingle count vectors
     (``operators.similarity.sparse_cosine_topk``). The inverted-index
     complement to the dense-embedding tiers (q30–q32): dot products
-    are integer sums (engine-exact), and the posting self-join is
-    bounded by the ``df_cap`` stop-term prune — Σ_term df² with
-    df ≤ 64, the prefix-filtering idea that keeps term joins from
-    going quadratic on hot terms at 100 TB."""
+    are integer sums (engine-exact). Pairs come from one
+    ``collect_list`` fold per term, with no posting self-join; the
+    ``df_cap`` stop-term prune (df ≤ 64, applied after the collect)
+    bounds the pair fan-out to Σ_term df², the prefix-filtering idea
+    that keeps term pairs from going quadratic on hot terms."""
     from shopify_db_spark.operators.similarity import sparse_cosine_topk
 
     docs = load_table(spark, sf_dir, "documents")
@@ -981,7 +982,7 @@ def bpe_merge_rounds(
     truncation every round's plan re-nests all earlier rewrites and
     Catalyst re-optimizes a fold-of-folds expression whose analysis
     cost grows superlinearly in the round count. Measured ×1 wall
-    time at rounds 2/8/32 in SCALE.md (round-8 table) — exponent ≈
+    time at rounds 2/8/32 in SCALE.md — exponent ≈
     linear in rounds with the checkpoint, blowing up without it.
 
     Returns (merge_round int, left_sym, right_sym, pair_count) —
@@ -2024,12 +2025,12 @@ def q156_budget_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 # score sums at any summation order. Full derivation + magnitude
 # bounds in operators/similarity.bm25_topk.
 #
-# Scale shape: one posting aggregate, one df aggregate joined on
-# term WITHOUT a broadcast hint (the shingle vocabulary grows with
-# the corpus; AQE promotes when small), the Σ qdf·df candidate join
-# bounded by df_cap, a 1-row corpus-stats broadcast (q134's
-# normalizer idiom), one (query, doc) rollup, one query-keyed top-k
-# window.
+# Scale shape: one posting aggregate, one ``collect_list`` fold per
+# term that yields df as the array size and explodes the Σ qdf·df
+# query × candidate products (df_cap applied after the collect, so
+# it bounds the fan-out, not the collected list), a 1-row
+# corpus-stats broadcast (q134's normalizer idiom), one (query, doc)
+# rollup, one query-keyed top-k window.
 _Q161_N = 3
 _Q161_DF_CAP = 64
 _Q161_K = 3

@@ -19,7 +19,7 @@ from shopify_db_spark.sources.tables import load_table
 DIM = 64
 QUERY_MOD = 50  # vec_id % QUERY_MOD == 0 rows are the query set
 
-#: Bounded brute-force panel (round 13). The recall gates and the
+#: Bounded brute-force panel. The recall gates and the
 #: MMR demo embed an exact O(|panel| × n) baseline; with the panel
 #: growing as n/QUERY_MOD those tiers were O(n²/QUERY_MOD) — measured
 #: superlinear at ×30 (q112 ×10→×30 slope 1.57, q135 1.49,
@@ -567,7 +567,7 @@ def int8_norm(q) -> F.Column:
     """sqrt of the integer self-dot as a double — precomputed ONCE
     per vector before any pair join (recomputing self-dots inside
     the pair scorer tripled the per-pair work: measured 108 s →
-    9.6 s at the ×10 forced-grid point, SCALE.md round 7).
+    9.6 s at the ×10 forced-grid point, SCALE.md).
     Bit-identical to the
     inline form: same BIGINT fold, same sqrt, and the scorer keeps
     the sqrt(a)·sqrt(b) multiplication order of the oracle."""
@@ -1355,13 +1355,13 @@ def q111_hybrid_rrf_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q112: the KMeans-codebook production ANN (ann_int8) wired into the
 # catalog. A trained codebook is not SQL-expressible (Spark ML's
 # kmeans|| init is distributed and partitioning-dependent), so the
-# declared contract is the RECALL GATE the round-7 verdict sanctioned:
+# declared contract is a RECALL GATE:
 # the engine runs ann_int8 end-to-end, joins its output against the
 # in-engine exact top-k (whose own semantics are driver-certified via
 # q30/q107), and emits the query count plus a recall-floor verdict the
-# oracle states declaratively. Since round 9 the codebook training
+# oracle states declaratively. The codebook training
 # layout is PINNED (``kmeans_codebook`` hash-repartitions + sorts the
-# train frame, ADVICE r8), so recall is a pure function of
+# train frame), so recall is a pure function of
 # (data, k, seed, Spark version) — no environment dependence left in
 # the gate. Measured mean recall with the pinned codebook at
 # nprobe=8/16 cells: 0.78 (sf0.001), 0.74 (sf0.01), 0.825 (sf0.1) —
@@ -1415,7 +1415,6 @@ def q112_ann_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumer; a LEFT join against the (unique-keyed) ANN list
     # folds n_ex and n_hit out of the same rows — counts are exact
     # integers, so the recall doubles are bit-identical
-    # (round 14, guide §2.4)
     per_q = (
         exact.join(
             ann.withColumn("__h", F.lit(1)),
@@ -1441,7 +1440,7 @@ def q112_ann_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # q113: distance-admission incremental ANN — q108's streaming-ingest
-# shape with the PRODUCTION eviction policy (round-8 addition): a
+# shape with the PRODUCTION eviction policy: a
 # full cell evicts its farthest-from-centroid entry instead of
 # rejecting the arrival. Unlike a trained codebook, this policy IS
 # exactly SQL-expressible, because keeping the per-cell top-cap by a
@@ -2053,7 +2052,7 @@ def q122_centroid_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 # argmax ties break toward the smaller label; both engines order
 # identically because every cosine is the same IEEE expression.
 #
-# Pool cap (round 10): the brute tier's labeled pool is capped at a
+# Pool cap: the brute tier's labeled pool is capped at a
 # FIXED deterministic sample — the top _Q126_POOL_CAP pool rows by
 # md5('q126-pool|' || vec_id) (ties → vec_id; the q51/q71 hash
 # discipline, mirrored verbatim in the oracle) — so the pair grid
@@ -2364,7 +2363,7 @@ def _q135_oracle() -> str:
     # whole candidate generation O(2^K) times — measured harmless for
     # q135's brute-force candidates but an OutOfMemoryException for
     # q138's spliced IVF candidate CTEs at sf0.1 under concurrent
-    # memory pressure (round-11 full-catalog sf0.1 sweep). Hinting
+    # memory pressure (full-catalog sf0.1 sweep). Hinting
     # the shared frames collapses the expansion to one evaluation
     # each — the same shape the Spark twin gets from localCheckpoint.
     rounds = []
@@ -2443,7 +2442,7 @@ def mmr_rerank(
     smaller neighbor id. Returns (query_id, neighbor_id, score,
     mmr_rank).
 
-    One-pass per-query fold (round-14 optimization): each query's
+    One-pass per-query fold: each query's
     pool is candidate-sized (C rows + C² pair sims), so the whole
     greedy trajectory folds inside ONE row via JVM higher-order
     functions — two collect_list aggregates + one join + a K-times
@@ -2581,7 +2580,7 @@ def q135_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = query_panel(emb)
     topk = SIM.cosine_topk(queries, emb, k=_Q135_C)
     # Materialize the candidate pool BEFORE deriving the pair-sim
-    # frame from it (round-14 optimization): ps references cand on
+    # frame from it: ps references cand on
     # both sides of its self-join, so an unmaterialized cand re-runs
     # the whole candidate generator 2-3x — the generator (brute
     # top-C grid here, IVF assignment in q138) is the query's
@@ -2696,7 +2695,7 @@ def q138_mmr_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = query_panel(emb)
     topk = SIM.ivf_ann(queries, emb, centroids, k=_Q135_C, nprobe=NPROBE)
     # Materialize the candidate pool BEFORE deriving the pair-sim
-    # frame from it (round-14 optimization): ps references cand on
+    # frame from it: ps references cand on
     # both sides of its self-join, so an unmaterialized cand re-runs
     # the whole candidate generator 2-3x — the generator (brute
     # top-C grid here, IVF assignment in q138) is the query's
@@ -2812,7 +2811,7 @@ def kcenter_greedy(emb: DataFrame, k: int = _Q141_K) -> DataFrame:
     against a growing union-of-picks plan and eagerly
     localCheckpointed each 1-row pick — three extra jobs and two
     broadcast builds per round for frames the driver already holds
-    (round 14; scores unchanged: IEEE max over the same
+    (scores unchanged: IEEE max over the same
     fixed-order cosines is order-insensitive and the collected
     doubles round-trip py4j bit-exactly)."""
     spark = emb.sparkSession
@@ -2903,7 +2902,7 @@ def q141_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
 # negative-division conventions, with the w·S2 product ridden on
 # DECIMAL(38,0) (Spark) / HUGEINT (DuckDB's SUM is already 128-bit)
 # so the renormalization never wraps: int64 would overflow the
-# ·S2 step at N ≈ 4e5 vectors (round-9 advice finding); the widened
+# ·S2 step at N ≈ 4e5 vectors; the widened
 # path is safe to N ≈ 1e24. The Rayleigh mass fraction λ/(|v|²·trace)
 # is accumulated in DECIMAL(38,0)/HUGEINT (dot² sums exceed BIGINT
 # at ~20k vectors) and cast to DOUBLE once at the end: one IEEE
@@ -3283,7 +3282,7 @@ def q143_common_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # row of exact counts plus the agreement = both / (both + lex_only
 # + sem_only) Jaccard as a single IEEE quotient.
 #
-# Semantic generator choice (round-10 change): q74's SemDeDup
+# Semantic generator choice: q74's SemDeDup
 # cell-bounded pairs (`semantic_dedup_pairs`), NOT q32's banded
 # LSH. At q32's unselective gate threshold the recall-holding band
 # count grows as (N/target)^{log2(1/p_t)}, making the LSH pair
@@ -3584,7 +3583,6 @@ def q151_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     # query), so MAX over a rank-gated struct/scalar recovers both
     # rows from a single aggregate — a query with no second
     # candidate yields NULL exactly where the left join did
-    # (round 14, guide §2.4)
     g = topk.groupBy("query_id").agg(
         F.max(
             F.when(
@@ -3780,7 +3778,7 @@ def q153_domain_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
     the table contract, so every row contributes exactly one row
     per dim) — so the per-(source, dim) aggregate carries (Σ xd,
     Σ xd², count) and the per-source rollup squares/sums them.
-    4 parquet scans → 2, one quantize pass (round 14)."""
+    4 parquet scans → 2, one quantize pass."""
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
     base = emb.join(

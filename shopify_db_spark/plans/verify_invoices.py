@@ -260,8 +260,8 @@ def verify_invoices(
             counts["n_refund"],
         )
         # Deliberately SEQUENTIAL: submitting the 8 independent
-        # checks from a thread pool (guide §2.6) was measured in
-        # round 14 as 20-30 % SLOWER here — each check is a tiny
+        # checks from a thread pool (guide §2.6) was measured
+        # 20-30 % SLOWER here — each check is a tiny
         # single-stage job over the cached frame that already
         # saturates local[32], so concurrency only adds scheduler
         # contention. On a cluster where a check's straggler tail

@@ -19,7 +19,6 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from shopify_db_spark.schemas import INVOICE_CSV_COLUMNS
@@ -65,7 +64,7 @@ def write_invoice_csv(
     a range-partitioned exchange, and the subsequent ``repartition(1)``
     destroys that ordering anyway — one local sort on the one final
     partition yields the reference's file order for one shuffle
-    (round-14 optimization, q63)."""
+    (q63)."""
     out = df.select(*INVOICE_CSV_COLUMNS)
     tmp = path + ".tmpdir"
     # repartition(1), NOT coalesce(1): coalesce is a narrow
@@ -107,17 +106,4 @@ def read_invoice_csv(spark: SparkSession, path: str) -> DataFrame:
         .option("header", True)
         .csv(path)
         .select(*INVOICE_CSV_COLUMNS)
-    )
-
-
-def normalize_empty_strings(df: DataFrame) -> DataFrame:
-    """Empty string → null across string columns (the reference's
-    pre-verification ``replace('', nan)``, ``tripletex.py:210``)."""
-    return df.select(
-        *[
-            F.nullif(F.col(c), F.lit("")).alias(c)
-            if f.dataType.simpleString() == "string"
-            else F.col(c)
-            for c, f in zip(df.columns, df.schema.fields)
-        ]
     )

@@ -9,11 +9,10 @@ from the reference, on purpose:
   reference hardcodes its own shop in per-order fetches
   (``shopify.py:176``, a bug we don't replicate);
 * per-order transaction/refund fetches (the reference's sequential
-  N+1 loop, ``shopify.py:391-393,438-440``) run through a bounded
-  thread pool — the workload is IO-bound and rate-limited, so
-  driver-side concurrency is the right tool, not executor fan-out;
-  at very large order counts the same ``fetch_single`` callable can
-  be mapped over an order-id DataFrame with ``mapInPandas``.
+  N+1 loop, ``shopify.py:391-393,438-440``) go through
+  :func:`fetch_single`, which
+  ``spark_datasource.fetch_sub_resource`` maps over an order-id
+  DataFrame on the executors, so order ids never reach the driver.
 
 ``requests`` is imported lazily so the engine works fully offline
 (ingest from JSON files) in environments without it.
@@ -24,7 +23,6 @@ from __future__ import annotations
 import re
 import time
 from collections.abc import Callable, Iterator
-from concurrent.futures import ThreadPoolExecutor
 
 #: retry policy (reference shopify.py:8-11)
 MAX_RETRIES = 10
@@ -125,23 +123,6 @@ def fetch_single(
     url = f"{base_url}orders/{order_id}/{endpoint}.json"
     _, body = _get_with_retry(http_get, url, {"fields": ",".join(fields)})
     return body
-
-
-def fetch_per_order(
-    http_get: HttpGet,
-    base_url: str,
-    order_ids: list[int],
-    endpoint: str,
-    fields: list[str],
-    max_workers: int = 8,
-) -> list[tuple[int, dict]]:
-    """Concurrent replacement for the reference's sequential N+1 loop."""
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        bodies = pool.map(
-            lambda oid: (oid, fetch_single(http_get, base_url, oid, endpoint, fields)),
-            order_ids,
-        )
-        return list(bodies)
 
 
 # Field allowlists (reference shopify.py:13-93) — the projection

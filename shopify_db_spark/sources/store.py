@@ -10,10 +10,12 @@ SURVEY §5.2).
 
 Writes are atomic at directory granularity: Spark cannot overwrite a
 parquet directory it is still reading, so the merge result lands in
-``<table>.parquet.tmp`` and is swapped in with two renames. At
-cluster scale this maps onto the same pattern over an object store
-(write new prefix, flip a manifest/pointer), or disappears entirely
-under Delta's MERGE.
+``<table>.parquet.tmp`` and is swapped in with two renames. A
+process that dies between the renames leaves the pre-batch table in
+``<table>.parquet.old``; the store adopts it on the next access, so
+re-running the lost batch restores the merge. At cluster scale this
+maps onto the same pattern over an object store (write new prefix,
+flip a manifest/pointer), or disappears entirely under Delta's MERGE.
 """
 
 from __future__ import annotations
@@ -37,7 +39,20 @@ class CommerceStore:
         return os.path.join(self.base_dir, f"{table}.parquet")
 
     def exists(self, table: str) -> bool:
+        self._recover(table)
         return os.path.exists(self.path(table))
+
+    def _recover(self, table: str) -> None:
+        """Undo a swap that :meth:`overwrite` left half done: with no
+        table in place, adopt ``.old`` and discard the stale ``.tmp``
+        (it may be partial)."""
+        target = self.path(table)
+        if os.path.exists(target):
+            return
+        if os.path.exists(target + ".tmp"):
+            shutil.rmtree(target + ".tmp")
+        if os.path.exists(target + ".old"):
+            os.rename(target + ".old", target)
 
     def read(self, table: str) -> DataFrame:
         if table not in schemas.COMMERCE_TABLES:

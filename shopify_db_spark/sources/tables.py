@@ -80,24 +80,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = BENCH_TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = BENCH_TABLES
-) -> None:
-    """Register every benchmark table as a temp view for ``spark.sql``.
-
-    Mirrors the DuckDB oracle's pre-registered views so the same SQL
-    text can run on both engines.
-    """
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def write_date_partitioned(
     df: DataFrame,
     path: str,

@@ -111,8 +111,8 @@ def _dtype_family(s: pd.Series) -> str:
     decimal columns comparable across engines. This bucketing
     mirrors that: int and float are distinct families; date,
     datetime and Timestamp collapse to one; Decimal maps to float
-    (``_norm_cell`` compares it through float). The round-9/10 q121
-    red — DuckDB SUM(BIGINT)→HUGEINT→pandas float64 vs Spark int64 —
+    (``_norm_cell`` compares it through float). The q121 gate
+    failure — DuckDB SUM(BIGINT)→HUGEINT→pandas float64 vs Spark int64 —
     is exactly the class this guard makes locally visible."""
     dt = s.dtype
     if pd.api.types.is_bool_dtype(dt):

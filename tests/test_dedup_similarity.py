@@ -374,32 +374,6 @@ def test_lsh_dedup_candidate_join_is_slim(spark):
     )
 
 
-def test_cosine_arrow_matches_hof(spark):
-    """The Arrow-vectorized bulk scorer agrees with the sequential
-    HOF cosine to fp round-off on real embeddings."""
-    from shopify_db_spark.operators.similarity import (
-        as_double,
-        cosine,
-        cosine_arrow,
-    )
-    from shopify_db_spark.sources.tables import load_table
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    a = emb.select(F.col("vec_id").alias("id_a"), as_double("embedding").alias("va"))
-    b = emb.select(F.col("vec_id").alias("id_b"), as_double("embedding").alias("vb"))
-    pairs = (
-        a.withColumn("k", F.col("id_a") % 8)
-        .join(b.withColumn("k", F.col("id_b") % 8), "k")
-        .limit(5000)
-    )
-    worst = pairs.select(
-        F.abs(
-            cosine(F.col("va"), F.col("vb")) - cosine_arrow(F.col("va"), F.col("vb"))
-        ).alias("d")
-    ).agg(F.max("d").alias("m")).collect()[0]["m"]
-    assert worst < 1e-12
-
-
 def test_incremental_dedup_bucket_cap(spark):
     """max_bucket bounds the per-bucket index without changing the
     dup verdicts on a degenerate corpus: every identical later doc

@@ -106,14 +106,6 @@ def test_wav_media_plumbing(spark):
     assert all(r.n_samples > 0 for r in rows)
 
 
-def test_resize_updates_metadata_only(spark, media):
-    out = MM.resize_stub(media, 100, 80)
-    r = out.filter(F.col("media_id") == 1).collect()[0]
-    assert (r["meta"]["width"], r["meta"]["height"]) == (100, 80)
-    assert bytes(r["content"]) == b"\x00\x01\x02PNGDATA"  # payload untouched
-    assert r["meta"]["format"] == "png"
-
-
 def test_frame_sample_plan(spark, media):
     out = MM.frame_sample_plan(media, every_ms=1000).collect()
     by_id: dict[int, list[int]] = {}

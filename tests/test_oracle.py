@@ -36,6 +36,21 @@ def test_entry_smoke(spark):
     assert set(e.oracle_sql()) <= set(e.queries())
 
 
+def test_queries_match_registry():
+    """Every registered query is surfaced by queries(), in registration
+    order, and every spec with an oracle carries it into oracle_sql():
+    a rename cannot silently drop a query out of the catalog."""
+    import __spark_entry__ as e
+
+    specs = load_all()
+    qs = e.queries()
+    assert list(qs) == list(specs)
+    assert all(qs[n] is s.fn for n, s in specs.items())
+    assert e.oracle_sql() == {
+        n: s.oracle for n, s in specs.items() if s.oracle is not None
+    }
+
+
 def test_compare_frames_is_dtype_family_strict():
     """Round-11 structural guard (the q121 r9/r10 lesson): the local
     compare must reproduce the external driver's dtype sensitivity.

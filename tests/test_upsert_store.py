@@ -4,6 +4,7 @@ batch-duplicate tolerance."""
 
 from __future__ import annotations
 
+import os
 from decimal import Decimal as D
 
 import pytest
@@ -57,6 +58,48 @@ def test_upsert_dedups_batch(spark):
     rows = [r for r in merged.collect() if r["id"] == CUSTOMERS[1][0]]
     assert len(rows) == 1  # Postgres would error; we pick deterministically
     assert rows[0]["email"] == "zz@x.no"  # desc-nulls-last order → 'zz' wins
+
+
+def test_store_survives_crash_between_renames(spark, tmp_path, monkeypatch):
+    """A process killed between overwrite's two renames leaves only
+    ``<table>.parquet.old``; a store opened afterwards must read every
+    pre-batch row, and re-running the batch gives the full merge."""
+    base = str(tmp_path / "storedata")
+    before = _customers(spark, CUSTOMERS[:2])
+    changed = list(CUSTOMERS[1])
+    changed[1] = "moved@x.no"
+    batch = _customers(spark, [tuple(changed), CUSTOMERS[2]])
+    CommerceStore(spark, base).upsert("customers", before)
+
+    rename = os.rename
+    calls = []
+
+    def die_on_second_rename(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("killed between renames")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", die_on_second_rename)
+    with pytest.raises(OSError, match="killed"):
+        CommerceStore(spark, base).upsert("customers", batch)
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(base, "customers.parquet"))
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    store = CommerceStore(spark, base)
+    assert rows(store.read("customers")) == rows(before)
+    store.upsert("customers", batch)
+    merged = upsert(
+        before,
+        batch,
+        keys=schemas.UPSERT_KEYS["customers"],
+        frozen_cols=schemas.UPSERT_FROZEN_COLS["customers"],
+    )
+    assert rows(store.read("customers")) == rows(merged)
+    assert len(rows(merged)) == len(CUSTOMERS)
 
 
 def test_store_roundtrip_and_merge(spark, tmp_path):
