@@ -2,13 +2,16 @@
 mechanism (``tripletex.py:204-242``), re-expressed as distributed
 Spark checks.
 
-Each check mirrors one of the 8 pandas checks (SURVEY §2.10 V1-V8):
-it computes its offender set as a DataFrame (so the scan work is
-distributed and shares the cached invoice frame), collects a bounded
-sample for the human-facing warning, and reports pass/fail on the
-*full* count. All checks together take two passes over the invoice
-lines (one cached scan + per-check aggregations) instead of the
-reference's eight pandas scans.
+Each check mirrors one of the 8 pandas checks (SURVEY §2.10 V1-V8).
+The lines are read once: one grouping-sets aggregate yields a row per
+order (V1, V2, V5-V7), per order number (V3), per invoice number (V4)
+and per (order, unknown gateway) pair (V8), local-checkpointed so
+every later job plans against a leaf scan, not the caller's invoice
+plan. One aggregate over it gives every exact offender count; its
+rows are distinct, so a sequence gap is ``max - min + 1 - count``,
+counted and never materialized. Only a failing check runs a job for
+its bounded sample. Jobs run in sequence: each is tiny, so scheduler
+overhead dominates (a thread pool measured 20-30 % slower).
 
 Deviations (documented):
 
@@ -19,14 +22,17 @@ Deviations (documented):
 * ``_price`` uses ``max`` instead of pandas' frame-order-dependent
   ``first`` for the per-order paid amount (all payment-group rows
   share it; refund groups don't, and ``max`` is deterministic).
+* every sample lists the first offenders in sort order, so the
+  per-field ``none_values`` samples are sorted by ORDER NO.
 """
 
 from __future__ import annotations
 
+import itertools
 import logging
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 from shopify_db_spark.schemas import INVOICE_REQUIRED_FIELDS
@@ -35,6 +41,23 @@ log = logging.getLogger(__name__)
 
 #: max offenders listed in a warning message (full count still reported)
 SAMPLE = 50
+
+#: the grouping sets of the pass over the lines, by the kind of row
+#: each yields; ``order_n`` is the '#'-stripped ORDER NO of a
+#: non-refund line (V3), ``gateway`` a payment type off the allowlist
+_KEYS = ("ORDER NO", "order_n", "invoice_n", "gateway")
+_SETS = {
+    "order": ("ORDER NO",),
+    "order_n": ("order_n",),
+    "invoice_n": ("invoice_n",),
+    "gateway": ("ORDER NO", "gateway"),
+}
+#: Spark's ``grouping_id()`` of each set: bit ``len(_KEYS) - 1 - i``
+#: is set when ``_KEYS[i]`` is not grouped
+_GROUPING_ID = {
+    kind: sum(1 << (len(_KEYS) - 1 - i) for i, k in enumerate(_KEYS) if k not in keys)
+    for kind, keys in _SETS.items()
+}
 
 
 @dataclass
@@ -57,167 +80,136 @@ class VerificationReport:
         return all(c.passed for c in self.checks)
 
 
-def _collect_sample(df: DataFrame) -> tuple[int, list]:
-    rows = df.limit(SAMPLE + 1).collect()
-    if len(rows) <= SAMPLE:
-        return len(rows), [r[0] if len(r) == 1 else tuple(r) for r in rows]
-    # offender set larger than the sample — get the exact count
-    return df.count(), [r[0] if len(r) == 1 else tuple(r) for r in rows[:SAMPLE]]
+def _is(kind: str) -> Column:
+    return F.col("grouping_id") == _GROUPING_ID[kind]
 
 
-def _result(name: str, df: DataFrame, describe: str) -> CheckResult:
-    n, sample = _collect_sample(df)
-    passed = n == 0
-    msg = "" if passed else f"{describe}: {n} offender(s), e.g. {sample[:10]}"
-    if msg:
-        log.warning(msg)
-    return CheckResult(name, passed, n, sample, msg)
-
-
-def check_refunds(df: DataFrame) -> CheckResult:
-    """V1: orders whose paid amount is ≤ 0 (refund lines) — flagged
-    for manual review (``tripletex.py:128-139``)."""
-    offenders = (
-        df.filter(F.col("PAID AMOUNT") <= 0).select("ORDER NO").distinct().orderBy("ORDER NO")
-    )
-    return _result("refunds", offenders, "refund orders present")
-
-
-def check_gift_cards(df: DataFrame) -> CheckResult:
-    """V2: orders containing a GIFTCARD line (``tripletex.py:165-177``)."""
-    offenders = (
-        df.filter(F.col("ORDER LINE - PROD NO") == "GIFTCARD")
-        .select("ORDER NO")
-        .distinct()
-        .orderBy("ORDER NO")
-    )
-    return _result("gift_cards", offenders, "gift-card orders present")
-
-
-def _sequence_gaps(observed: DataFrame, col: str) -> DataFrame:
-    """Missing integers strictly inside [min, max] of ``observed[col]``
-    — the distributed form of the reference's ``range(min+1, max)``
-    set difference (``tripletex.py:73-76``)."""
-    bounds = observed.agg(F.min(col).alias("lo"), F.max(col).alias("hi"))
-    cand = bounds.select(
-        F.explode(
-            F.when(
-                F.col("hi") > F.col("lo") + 1,
-                F.sequence(F.col("lo") + 1, F.col("hi") - 1),
-            ).otherwise(F.array().cast("array<int>"))
-        ).alias("missing")
-    ).repartition("missing")
-    return cand.join(
-        observed, cand["missing"] == observed[col], "left_anti"
-    ).orderBy("missing")
-
-
-def check_order_no(df: DataFrame) -> CheckResult:
-    """V3: gaps in the order-number sequence over non-refund rows,
-    after stripping the ``#`` prefix (``tripletex.py:65-82``)."""
-    observed = (
-        df.filter(F.col("PAID AMOUNT") >= 0)
-        .select(F.substring(F.col("ORDER NO"), 2, 18).cast("int").alias("n"))
-        .distinct()
-    )
-    return _result("order_no", _sequence_gaps(observed, "n"), "missing order numbers")
-
-
-def check_invoice_no(df: DataFrame) -> CheckResult:
-    """V4: gaps in the invoice-number sequence (``tripletex.py:85-99``)."""
-    observed = df.select(F.col("INVOICE NO").cast("int").alias("n")).distinct()
-    return _result(
-        "invoice_no", _sequence_gaps(observed, "n"), "missing invoice numbers"
-    )
-
-
-def check_none_values(df: DataFrame) -> CheckResult:
-    """V5: required fields with nulls, reported per field
-    (``tripletex.py:30-42``; reference returns only the last field's
-    status — fixed here to fail on any)."""
-    any_bad = 0
-    samples: list = []
-    messages: list[str] = []
-    # One aggregation pass computes every field's null count.
-    counts = df.agg(
+def _groups(df: DataFrame, gateways: list[str] | None) -> DataFrame:
+    """The lineage-free one-pass aggregate over the lines, after empty
+    strings normalize to null (F17). An ``order`` row (a null ORDER NO
+    is one order) carries the V1/V2/V6 flags, the V7 ``diff`` and
+    ``price``, and for V5 its count of null required cells and the
+    bit set of required fields null on any of its lines."""
+    string_cols = {f.name for f in df.schema.fields if f.dataType.simpleString() == "string"}
+    normalized = df.select(
         *[
-            F.count(F.when(F.col(c).isNull(), 1)).alias(c)
-            for c in INVOICE_REQUIRED_FIELDS
+            F.nullif(F.col(c), F.lit("")).alias(c) if c in string_cols else F.col(c)
+            for c in df.columns
         ]
-    ).collect()[0]
-    for c in INVOICE_REQUIRED_FIELDS:
-        if counts[c]:
-            any_bad += counts[c]
-            missing = (
-                df.filter(F.col(c).isNull()).select("ORDER NO").distinct()
-            )
-            n, sample = _collect_sample(missing)
-            samples.extend(sample)
-            msg = f"required column {c} is missing for {n} order(s), e.g. {sample[:10]}"
-            messages.append(msg)
-            log.warning(msg)
-    return CheckResult(
-        "none_values", any_bad == 0, any_bad, samples, "; ".join(messages)
     )
-
-
-def check_description_or_sku(df: DataFrame) -> CheckResult:
-    """V6: lines where both PROD NO and DESCRIPTION are null
-    (``tripletex.py:45-62``)."""
-    offenders = (
-        df.filter(
-            F.col("ORDER LINE - PROD NO").isNull()
-            & F.col("ORDER LINE - DESCRIPTION").isNull()
-        )
-        .select("ORDER NO")
-        .distinct()
-        .orderBy("ORDER NO")
+    paid = F.col("PAID AMOUNT")
+    prod_no = F.col("ORDER LINE - PROD NO")
+    gateway = F.col("PAYMENT TYPE")
+    unknown = ~gateway.isin(gateways) if gateways is not None else F.lit(False)
+    missing = [F.col(c).isNull() for c in INVOICE_REQUIRED_FIELDS]
+    keyed = normalized.select(
+        "*",
+        F.when(paid >= 0, F.substring(F.col("ORDER NO"), 2, 18).cast("int")).alias("order_n"),
+        F.col("INVOICE NO").cast("int").alias("invoice_n"),
+        F.when(unknown, gateway).alias("gateway"),
     )
-    return _result(
-        "description_or_sku", offenders, "orders missing both PROD NO and DESCRIPTION"
-    )
-
-
-def check_price(df: DataFrame) -> CheckResult:
-    """V7: per-order paid amount vs summed discounted line totals,
-    flagging deviations > 1% of paid (``tripletex.py:102-125``)."""
+    # V7 (tripletex.py:102-125): the discounted line total
     line_total = (
         F.col("ORDER LINE - COUNT")
         * F.col("ORDER LINE - UNIT PRICE")
         * (F.lit(100) - F.coalesce(F.col("ORDER LINE - DISCOUNT"), F.lit(0).cast("decimal(18,2)")))
         / F.lit(100)
     )
-    grouped = (
-        df.withColumn("price_after_discount", line_total)
-        .groupBy("ORDER NO")
+    diff = F.abs(F.col("paid_amount") - F.col("lineitems_total"))
+    return (
+        keyed.groupingSets(list(_SETS.values()), *_KEYS)
         .agg(
-            F.max("PAID AMOUNT").alias("paid_amount"),
-            F.sum("price_after_discount").alias("lineitems_total"),
+            F.grouping_id().alias("grouping_id"),
+            F.bool_or(paid <= 0).alias("refunds"),
+            F.bool_or(prod_no == "GIFTCARD").alias("gift_cards"),
+            F.bool_or(prod_no.isNull() & F.col("ORDER LINE - DESCRIPTION").isNull()).alias(
+                "description_or_sku"
+            ),
+            F.bool_or(paid < 0).alias("has_refund"),
+            F.bool_or(paid >= 0).alias("has_ordinary"),
+            F.max(paid).alias("paid_amount"),
+            F.sum(line_total).alias("lineitems_total"),
+            F.sum(sum(m.cast("int") for m in missing)).alias("null_cells"),
+            F.bit_or(sum(F.when(m, 1 << i).otherwise(0) for i, m in enumerate(missing))).alias(
+                "null_fields"
+            ),
         )
+        .withColumn("diff", diff)
+        .withColumn("price", F.col("diff") > F.abs(F.col("paid_amount")) * F.lit(0.01))
+        .localCheckpoint()
     )
-    offenders = (
-        grouped.withColumn(
-            "diff", F.abs(F.col("paid_amount") - F.col("lineitems_total"))
-        )
-        .filter(F.col("diff") > F.abs(F.col("paid_amount")) * F.lit(0.01))
-        .select("ORDER NO", "diff")
-        .orderBy("ORDER NO")
-    )
-    return _result("price", offenders, "orders with >1% paid-vs-lines deviation")
 
 
-def check_unknown_gateway(df: DataFrame, gateways: list[str] | None) -> CheckResult:
-    """V8: payment types outside the allowlist, one report per
-    (order, gateway) (``tripletex.py:142-162``)."""
-    if gateways is None:
-        return CheckResult("unknown_gateway", True, 0)
-    offenders = (
-        df.filter(~F.col("PAYMENT TYPE").isin(gateways))
-        .select("ORDER NO", "PAYMENT TYPE")
-        .distinct()
-        .orderBy("ORDER NO", "PAYMENT TYPE")
+def _totals(groups: DataFrame) -> Row:
+    """Every check's exact offender count and the two order counts, in
+    one aggregate over ``groups``."""
+
+    def orders(flag: Column) -> Column:
+        return F.count_if(_is("order") & flag)
+
+    def gap_count(key: str) -> Column:
+        # the rows of one set hold distinct values, both ends observed
+        n = F.when(_is(key), F.col(key))
+        return F.coalesce(F.max(n).cast("long") - F.min(n) + 1 - F.count(n), F.lit(0))
+
+    keyed = F.col("ORDER NO").isNotNull()
+    flags = ("refunds", "gift_cards", "description_or_sku", "price")
+    return groups.agg(
+        *[orders(F.col(c)).alias(c) for c in flags],
+        orders(keyed & F.col("has_refund")).alias("n_refund"),
+        orders(keyed & F.col("has_ordinary")).alias("n_ordinary"),
+        gap_count("order_n").alias("order_no"),
+        gap_count("invoice_n").alias("invoice_no"),
+        F.count_if(_is("gateway") & F.col("gateway").isNotNull()).alias("unknown_gateway"),
+        F.coalesce(F.sum(F.when(_is("order"), F.col("null_cells"))), F.lit(0)).alias("none_values"),
+    ).collect()[0]
+
+
+def _first(groups: DataFrame, kind: str, flag: Column, *cols: str) -> list:
+    """The first ``SAMPLE`` ``kind`` rows with ``flag``, sorted by
+    ``cols`` (nulls first), as a bare value or as a tuple."""
+    rows = groups.filter(_is(kind) & flag).select(*cols).orderBy(*cols).limit(SAMPLE).collect()
+    return [r[0] if len(r) == 1 else tuple(r) for r in rows]
+
+
+def _first_missing(groups: DataFrame, key: str) -> list[int]:
+    """The first ``SAMPLE`` integers missing strictly inside [min, max]
+    of the ``key`` rows, read off the gaps between consecutive observed
+    values (the reference's ``range(min+1, max)`` set difference,
+    ``tripletex.py:73-76``)."""
+    n = F.col(key).cast("long")
+    gaps = (
+        groups.filter(_is(key) & n.isNotNull())
+        .select(F.lag(n).over(Window.orderBy(n)).alias("lo"), n.alias("hi"))
+        .filter(F.col("hi") - F.col("lo") > 1)
+        .orderBy("hi")
+        .limit(SAMPLE)
+        .collect()
     )
-    return _result("unknown_gateway", offenders, "unknown payment gateways")
+    missing = (m for lo, hi in gaps for m in range(lo + 1, hi))
+    return list(itertools.islice(missing, SAMPLE))
+
+
+def _none_values(groups: DataFrame, n_cells: int) -> CheckResult:
+    """V5: required fields with nulls, reported per field
+    (``tripletex.py:30-42``; reference returns only the last field's
+    status — fixed here to fail on any). The count is null cells."""
+    if n_cells == 0:
+        return CheckResult("none_values", True, 0)
+    null_in = [
+        F.col("null_fields").bitwiseAND(1 << i) != 0 for i in range(len(INVOICE_REQUIRED_FIELDS))
+    ]
+    n_orders = groups.agg(*[F.count_if(_is("order") & m) for m in null_in]).collect()[0]
+    samples: list = []
+    messages: list[str] = []
+    for c, n, m in zip(INVOICE_REQUIRED_FIELDS, n_orders, null_in):
+        if n:
+            sample = _first(groups, "order", m, "ORDER NO")
+            samples.extend(sample)
+            msg = f"required column {c} is missing for {n} order(s), e.g. {sample[:10]}"
+            messages.append(msg)
+            log.warning(msg)
+    return CheckResult("none_values", False, n_cells, samples, "; ".join(messages))
 
 
 def replace_invoice_gateway(df: DataFrame, gateway_map: dict[str, str]) -> DataFrame:
@@ -238,56 +230,62 @@ def verify_invoices(
     ``tripletex.py:204-242``): empty strings normalize to null first
     (F17), order counts are logged, overall pass = all checks pass.
     """
-    string_cols = [f.name for f in df.schema.fields if f.dataType.simpleString() == "string"]
-    normalized = df.select(
-        *[
-            F.nullif(F.col(c), F.lit("")).alias(c) if c in string_cols else F.col(c)
-            for c in df.columns
-        ]
-    ).cache()
-    try:
-        counts = normalized.agg(
-            F.countDistinct(
-                F.when(F.col("PAID AMOUNT") < 0, F.col("ORDER NO"))
-            ).alias("n_refund"),
-            F.countDistinct(
-                F.when(F.col("PAID AMOUNT") >= 0, F.col("ORDER NO"))
-            ).alias("n_ordinary"),
-        ).collect()[0]
-        log.info(
-            "There are %s ordinary orders and %s refund-only orders",
-            counts["n_ordinary"],
-            counts["n_refund"],
+    groups = _groups(df, gateways)
+    totals = _totals(groups)
+    log.info(
+        "There are %s ordinary orders and %s refund-only orders",
+        totals["n_ordinary"],
+        totals["n_refund"],
+    )
+
+    def check(name: str, describe: str, sample_of) -> CheckResult:
+        n = totals[name]
+        if n == 0:
+            return CheckResult(name, True, 0)
+        sample = sample_of()
+        msg = f"{describe}: {n} offender(s), e.g. {sample[:10]}"
+        log.warning(msg)
+        return CheckResult(name, False, n, sample, msg)
+
+    def orders(flag: str, *cols: str):
+        return lambda: _first(groups, "order", F.col(flag), "ORDER NO", *cols)
+
+    def missing(key: str):
+        return lambda: _first_missing(groups, key)
+
+    checks = [
+        # V1 (tripletex.py:128-139): paid amount <= 0, flagged for review
+        check("refunds", "refund orders present", orders("refunds")),
+        # V2 (tripletex.py:165-177)
+        check("gift_cards", "gift-card orders present", orders("gift_cards")),
+        # V3 (tripletex.py:65-82), V4 (tripletex.py:85-99)
+        check("order_no", "missing order numbers", missing("order_n")),
+        check("invoice_no", "missing invoice numbers", missing("invoice_n")),
+        _none_values(groups, totals["none_values"]),
+        # V6 (tripletex.py:45-62): both PROD NO and DESCRIPTION null
+        check(
+            "description_or_sku",
+            "orders missing both PROD NO and DESCRIPTION",
+            orders("description_or_sku"),
+        ),
+        # V7 (tripletex.py:102-125): paid vs lines deviates > 1 % of paid
+        check("price", "orders with >1% paid-vs-lines deviation", orders("price", "diff")),
+        # V8 (tripletex.py:142-162): one report per (order, gateway)
+        check(
+            "unknown_gateway",
+            "unknown payment gateways",
+            lambda: _first(groups, "gateway", F.col("gateway").isNotNull(), "ORDER NO", "gateway"),
+        ),
+    ]
+    report = VerificationReport(
+        checks,
+        n_ordinary_orders=totals["n_ordinary"],
+        n_refund_orders=totals["n_refund"],
+    )
+    if report.passed:
+        log.info("No irregularities detected in the invoices")
+    else:
+        log.warning(
+            "Invoices contain one or more notices that should be checked manually"
         )
-        # Deliberately SEQUENTIAL: submitting the 8 independent
-        # checks from a thread pool (guide §2.6) was measured
-        # 20-30 % SLOWER here — each check is a tiny
-        # single-stage job over the cached frame that already
-        # saturates local[32], so concurrency only adds scheduler
-        # contention. On a cluster where a check's straggler tail
-        # leaves executors idle, a 2-3-thread pool over these calls
-        # is the documented lever.
-        checks = [
-            check_refunds(normalized),
-            check_gift_cards(normalized),
-            check_order_no(normalized),
-            check_invoice_no(normalized),
-            check_none_values(normalized),
-            check_description_or_sku(normalized),
-            check_price(normalized),
-            check_unknown_gateway(normalized, gateways),
-        ]
-        report = VerificationReport(
-            checks,
-            n_ordinary_orders=counts["n_ordinary"],
-            n_refund_orders=counts["n_refund"],
-        )
-        if report.passed:
-            log.info("No irregularities detected in the invoices")
-        else:
-            log.warning(
-                "Invoices contain one or more notices that should be checked manually"
-            )
-        return report
-    finally:
-        normalized.unpersist()
+    return report
