@@ -20,18 +20,12 @@ Lifecycle: an entry pins its
 ``localCheckpoint`` RDD for as long as the memo references it.
 Releasing is therefore a reference drop — Spark's ContextCleaner
 reclaims the checkpoint blocks once the DataFrame is unreferenced —
-through one of three paths:
+through one of two paths:
 
 * **dead session**: the stale-session sweep on every access drops
   every entry whose owning session is stopped (automatic);
 * **single rebuild**: :func:`evict` drops one ``(name, session,
-  sf_dir)`` entry — bench.py uses this to time honest cold builds;
-* **live long-lived session cycling corpus dirs**: a server session
-  that syncs store after store would otherwise accumulate one
-  pinned artifact set per sf_dir forever. Call
-  :func:`evict_session` when a corpus dir is retired (or with
-  ``sf_dir=None`` on sync-start to flush everything the session
-  owns); the next consumer rebuilds from the new data.
+  sf_dir)`` entry — bench.py uses this to time honest cold builds.
 """
 
 from __future__ import annotations
@@ -86,20 +80,3 @@ def evict(name: str, spark: SparkSession, sf_dir: str) -> None:
     build is honestly COLD even when warm-up already populated it)."""
     _MEMOS.get(name, {}).pop((id(spark), sf_dir), None)
 
-
-def evict_session(spark: SparkSession, sf_dir: str | None = None) -> int:
-    """Drop every artifact entry a LIVE session owns — all names,
-    and (when ``sf_dir`` is given) only that corpus dir. This is the
-    eviction story for a long-lived server session that cycles many
-    sf_dirs: retire a dir's artifacts when its sync completes instead
-    of pinning one localCheckpoint set per dir for the session's
-    life. Returns the number of entries dropped. Identity is the
-    session OBJECT (not just ``id()``), mirroring the hit check in
-    :func:`session_artifact`."""
-    dropped = 0
-    for memo in _MEMOS.values():
-        for key, (owner, _df) in list(memo.items()):
-            if owner is spark and (sf_dir is None or key[1] == sf_dir):
-                memo.pop(key, None)
-                dropped += 1
-    return dropped

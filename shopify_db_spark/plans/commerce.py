@@ -201,9 +201,7 @@ def invoice_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         tables = commerce_tables_from_benchmark(spark, sf_dir)
         holder["tables"] = tables
-        return build_invoices(
-            tables, FROM_DATE, TO_DATE, START_ID, final_sort=False
-        )
+        return build_invoices(tables, FROM_DATE, TO_DATE, START_ID)
 
     out = session_artifact("invoice_table", spark, sf_dir, build)
     # the checkpoint cut the lineage, so a COLD build's persisted

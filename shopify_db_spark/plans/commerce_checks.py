@@ -481,25 +481,17 @@ def q63_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     values are exact at 2 dp; empty strings null on re-read exactly
     as pandas' NaN round-trip does, which the oracle mirrors with
     NULLIF)."""
-    # final_sort=False + sort_cols: the reference's (INVOICE NO,
-    # CUSTOMER NAME) file order comes from a LOCAL sort on the single
-    # writer partition instead of a global range sort that the
-    # single-file funnel re-scrambled anyway (this
-    # drops the range-boundary sampling job and the rangepartitioning
-    # exchange; row set unchanged, file order now exactly the
-    # reference's).
     inv = build_invoices(
         commerce_tables_from_benchmark(spark, sf_dir),
         _CSV_FROM,
         _CSV_TO,
         _CSV_START,
-        final_sort=False,
     )
     path = os.path.join(
         tempfile.gettempdir(),
         f"graft_csv_roundtrip_{os.path.basename(sf_dir.rstrip('/'))}.csv",
     )
-    write_invoice_csv(inv, path, sort_cols=["INVOICE NO", "CUSTOMER NAME"])
+    write_invoice_csv(inv, path)
     back = read_invoice_csv(spark, path)
     return back.select(
         *[

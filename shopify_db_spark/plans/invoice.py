@@ -51,51 +51,17 @@ from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# The two-phase numbering bounds and the plan-time decision now live
-# in ``operators.numbering`` (shared with plans.tpch q08); re-exported
-# here because the invoice pipeline is where they were first derived.
-from shopify_db_spark.operators.numbering import (  # noqa: E402
+# The invoice pipeline reads the two-phase bounds from this module
+# (tests patch them here, and perfbench imports them from here); the
+# plan-time decision itself lives in ``operators.numbering``.
+from shopify_db_spark.operators.numbering import (
     TWO_PHASE_GROUP_ROWS,
     TWO_PHASE_SOURCE_BYTES,
     needs_two_phase,
 )
-
-#: invoice-line column order shared by the four branches (the
-#: reference aligns the four CTEs' shapes so UNION works positionally;
-#: we align by name via unionByName).
-_LINE_COLUMNS = [
-    "transaction_id",
-    "order_id",
-    "payment_tag",
-    "CUSTOMER NO",
-    "CUSTOMER NAME",
-    "ORDER NO",
-    "PAID AMOUNT",
-    "ORDER LINE - COUNT",
-    "ORDER LINE - PROD NAME",
-    "ORDER LINE - UNIT PRICE",
-    "ORDER LINE - DISCOUNT",
-    "ORDER LINE - VAT CODE",
-    "ORDER LINE - DESCRIPTION",
-    "ORDER LINE - PROD NO",
-    "PAYMENT TYPE",
-    "INVOICE DATE",
-    "DELIVERY DATE",
-    "ORDER DATE",
-    "DUE DATE",
-    "rank",
-    "priority",
-]
-
-
-def customer_no(customer_id: Column) -> Column:
-    """Tripletex 9-digit customer id: last 9 digits of the Shopify id
-    (reference ``setup.sql:220`` — CHAR(12) cast + RIGHT + INT cast).
-    """
-    return F.right(customer_id.cast("string"), F.lit(9)).cast("int")
 
 
 # The branch builders below express every projection as a STRING
@@ -106,13 +72,16 @@ def customer_no(customer_id: Column) -> Column:
 # plan-construction time for the full pipeline at any SF, the
 # dominant q20 cost at gate SF. Same technique as the simhash/LSH
 # string-built signature expressions.
-def _customer_no_sql(c_id: str) -> str:
+def customer_no_sql(c_id: str) -> str:
+    """Tripletex 9-digit customer id: last 9 digits of the Shopify id
+    (reference ``setup.sql:220`` — CHAR(12) cast + RIGHT + INT cast).
+    """
     return f"CAST(right(CAST({c_id} AS STRING), 9) AS INT)"
 
 
 def _customer_exprs(c_id: str, c_name: str) -> list[str]:
     return [
-        f"{_customer_no_sql(c_id)} AS `CUSTOMER NO`",
+        f"{customer_no_sql(c_id)} AS `CUSTOMER NO`",
         f"{c_name} AS `CUSTOMER NAME`",
     ]
 
@@ -592,15 +561,13 @@ def invoice_groups(
 
 def assign_invoice_numbers(
     invoice_view: DataFrame,
-    from_date: datetime.date | str,
-    to_date: datetime.date | str,
+    groups: DataFrame,
     invoice_start_id: int,
-    groups: DataFrame | None = None,
-    two_phase: bool = False,
-    final_sort: bool = True,
+    two_phase: bool,
 ) -> DataFrame:
-    """Date-window the invoice lines and attach one consecutive
-    invoice number per (ORDER NO, payment_tag) group, starting at
+    """Attach one consecutive invoice number per in-window
+    (ORDER NO, payment_tag) group of ``groups`` (see
+    :func:`invoice_groups`) to the invoice lines, starting at
     ``invoice_start_id`` (reference ``db.py:409-483``).
 
     The reference's ``ROW_NUMBER() OVER ()`` numbers groups in
@@ -622,42 +589,27 @@ def assign_invoice_numbers(
     unnamed) match nothing in an equi-join; the right join emits
     them as one null-padded line each, reproduced explicitly.
 
-    ``groups`` (see :func:`invoice_groups`) skips re-deriving the
-    group keys from the six-join view; when omitted they are
-    computed from ``invoice_view`` itself.
+    The lines come back unsorted: the reference's closing
+    ``ORDER BY (INVOICE NO, CUSTOMER NAME)`` (``db.py:480-483``)
+    exists only for its CSV file order, which
+    :func:`~shopify_db_spark.sources.csv_io.write_invoice_csv` owns.
 
-    ``final_sort=False`` drops the closing cosmetic
-    ``ORDER BY (INVOICE NO, CUSTOMER NAME)`` — a global range sort
-    of the full result (~2.2 s of q20 at sf0.1, and the widest
-    shuffle of the pipeline at scale). The sort exists for the
-    reference's CSV file order (``db.py:480-483``); consumers that
-    aggregate or re-shuffle the lines anyway (the verify suite, the
-    upsert sink) should skip it.
-
-    ``two_phase=True`` swaps the single-partition numbering window
+    A true ``two_phase`` swaps the single-partition numbering window
     for :func:`~shopify_db_spark.operators.numbering.global_row_numbers`
     (range-partition → local row_number → offset join) — the 100×
-    escape hatch SURVEY §4 reserves for when invoice cardinality in
-    one window outgrows a single task. Identical numbering (asserted
-    in tests/test_numbering.py); the windowed path stays the
-    small-cardinality default because at one-row-per-invoice scale
+    path SURVEY §4 reserves for when invoice cardinality in one
+    window outgrows a single task. Identical numbering (asserted in
+    tests/test_numbering.py); the windowed path stays the
+    small-cardinality choice because at one-row-per-invoice scale
     the window is cheaper than two extra shuffles.
-    :func:`build_invoices` picks the path automatically from a cheap
-    upper bound on group cardinality (``TWO_PHASE_SOURCE_BYTES``).
+    :func:`build_invoices` picks the path from a cheap upper bound
+    on group cardinality (``TWO_PHASE_SOURCE_BYTES``).
 
     The broadcast of the numbered-group side (see the inline note)
     is only applied on the windowed path: flipping to two-phase
     *means* the group set outgrew a single task, so it has also
     outgrown a broadcast — the join falls back to AQE's choice.
     """
-    if groups is None:
-        groups = (
-            invoice_view.filter(
-                F.col("INVOICE DATE").between(F.lit(from_date), F.lit(to_date))
-            )
-            .select("ORDER NO", "payment_tag")
-            .distinct()
-        )
     if two_phase:
         from shopify_db_spark.operators.numbering import global_row_numbers
 
@@ -731,10 +683,7 @@ def assign_invoice_numbers(
             for c in out_cols
         ]
     )
-    out = matched.unionByName(null_padded)
-    if final_sort:
-        out = out.orderBy("INVOICE NO", "CUSTOMER NAME")
-    return out
+    return matched.unionByName(null_padded)
 
 
 def build_invoices(
@@ -742,42 +691,35 @@ def build_invoices(
     from_date: datetime.date | str,
     to_date: datetime.date | str,
     invoice_start_id: int = 1,
-    two_phase: bool | None = None,
-    final_sort: bool = True,
 ) -> DataFrame:
     """End-to-end: view + numbering (the reference's
-    ``tripletex-generate`` path, SURVEY §3.2). The group keys come
-    from :func:`invoice_groups` so the six-join view executes once,
-    not twice.
+    ``tripletex-generate`` path, SURVEY §3.2), lines unsorted. The
+    group keys come from :func:`invoice_groups` so the six-join view
+    executes once, not twice.
 
-    ``two_phase=None`` (default) auto-selects the numbering path:
-    group cardinality is upper-bounded by the orders + refunds
-    inputs (every payment group maps to one rank-1-paid order, every
-    refund group to one refunds row — see :func:`invoice_groups`),
-    sized via Catalyst's plan-time ``sizeInBytes`` estimate — a
-    driver-side statistic, no job runs and nothing is scanned
-    (counting the mapped frames would execute their whole lineage:
-    measured ~2 s per q20 run). Above ``TWO_PHASE_SOURCE_BYTES`` the
-    single-partition numbering window would funnel the whole group
-    set through one task, so the two-phase numbering takes over;
-    below it the window is cheaper (two fewer shuffles). Lineages
-    whose stats Catalyst cannot estimate (Long.MaxValue sentinel,
-    e.g. Python local relations) fall back to two count jobs against
-    ``TWO_PHASE_GROUP_ROWS``. Explicit True/False overrides."""
-    if two_phase is None:
-        # bounds passed explicitly so this module's (patchable)
-        # globals stay authoritative for the invoice pipeline
-        two_phase = needs_two_phase(
-            [tables["orders"], tables["refunds"]],
-            byte_bound=TWO_PHASE_SOURCE_BYTES,
-            row_bound=TWO_PHASE_GROUP_ROWS,
-        )
+    The numbering path is picked at plan time: group cardinality is
+    upper-bounded by the orders + refunds inputs (every payment group
+    maps to one rank-1-paid order, every refund group to one refunds
+    row — see :func:`invoice_groups`), sized via Catalyst's plan-time
+    ``sizeInBytes`` estimate — a driver-side statistic, no job runs
+    and nothing is scanned (counting the mapped frames would execute
+    their whole lineage: measured ~2 s per q20 run). Above
+    ``TWO_PHASE_SOURCE_BYTES`` the single-partition numbering window
+    would funnel the whole group set through one task, so the
+    two-phase numbering takes over; below it the window is cheaper
+    (two fewer shuffles). Lineages whose stats Catalyst cannot
+    estimate (Long.MaxValue sentinel, e.g. Python local relations)
+    fall back to two count jobs against ``TWO_PHASE_GROUP_ROWS``."""
+    # bounds passed explicitly so this module's (patchable) globals
+    # stay authoritative for the invoice pipeline
+    two_phase = needs_two_phase(
+        [tables["orders"], tables["refunds"]],
+        byte_bound=TWO_PHASE_SOURCE_BYTES,
+        row_bound=TWO_PHASE_GROUP_ROWS,
+    )
     return assign_invoice_numbers(
         tripletex_invoice(tables),
-        from_date,
-        to_date,
+        invoice_groups(tables, from_date, to_date),
         invoice_start_id,
-        two_phase=two_phase,
-        groups=invoice_groups(tables, from_date, to_date),
-        final_sort=final_sort,
+        two_phase,
     )

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from shopify_db_spark.functions.parity import dec, money_out
 from shopify_db_spark.plans.catalog import query
-from shopify_db_spark.plans.invoice import customer_no
+from shopify_db_spark.plans.invoice import customer_no_sql
 from shopify_db_spark.sources.tables import load_table
 
 
@@ -34,7 +34,7 @@ def customer_map(customers: DataFrame) -> DataFrame:
     """``tripletex_customer_map`` (setup.sql:396-404)."""
     return customers.select(
         F.col("id").alias("shopify_id"),
-        customer_no(F.col("id")).alias("tripletex_id"),
+        F.expr(customer_no_sql("id")).alias("tripletex_id"),
         "name",
         "phone",
         "email",

@@ -5,11 +5,13 @@ column order (``shopifydb.py:144-145``, order =
 required + optional fields from ``tripletex.py:6-27``) and re-reads
 it for standalone verification (``shopifydb.py:115``).
 
-The sink coalesces to a single partition and renames the part file
-so the output is one plain ``.csv`` file, byte-compatible with the
-reference's pandas ``to_csv(sep=';')``. At scale you would drop the
-``coalesce(1)`` and emit a sharded directory — the reader below
-accepts both.
+The sink funnels the finished lines through one writer and renames
+the part file, so the output is one plain ``.csv`` file,
+byte-compatible with the reference's pandas ``to_csv(sep=';')``. It
+owns the file order: the reference's ``ORDER BY "INVOICE NO",
+"CUSTOMER NAME"`` (``db.py:480-483``) exists only for this file, so
+callers hand over unsorted lines. The reader below accepts a single
+file or a sharded directory.
 """
 
 from __future__ import annotations
@@ -48,35 +50,32 @@ INVOICE_CSV_SCHEMA = T.StructType(
 )
 
 
-def write_invoice_csv(
-    df: DataFrame,
-    path: str,
-    single_file: bool = True,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Write invoice lines as ``;``-separated CSV in the Tripletex
-    column order.
+#: the reference's file order (``db.py:480-483``), then every other
+#: column: lines tied on the reference key keep no input-layout order,
+#: so the file's bytes depend only on its rows.
+_FILE_ORDER = ["INVOICE NO", "CUSTOMER NAME"] + [
+    c for c in INVOICE_CSV_COLUMNS if c not in ("INVOICE NO", "CUSTOMER NAME")
+]
 
-    ``sort_cols`` orders the file content with a LOCAL sort after the
-    single-writer funnel (``sortWithinPartitions``). For a
-    single-file sink this replaces an upstream global ``orderBy``
-    outright: the global sort pays a range-boundary sampling job plus
-    a range-partitioned exchange, and the subsequent ``repartition(1)``
-    destroys that ordering anyway — one local sort on the one final
-    partition yields the reference's file order for one shuffle
-    (q63)."""
-    out = df.select(*INVOICE_CSV_COLUMNS)
+
+def write_invoice_csv(df: DataFrame, path: str) -> None:
+    """Write invoice lines as one ``;``-separated CSV file in the
+    Tripletex column order, rows in the reference's file order.
+
+    The order comes from one LOCAL sort on the single writer
+    partition: a global ``orderBy`` upstream would pay a
+    range-boundary sampling job and a range exchange, and the
+    ``repartition(1)`` funnel would scramble its order anyway."""
     tmp = path + ".tmpdir"
     # repartition(1), NOT coalesce(1): coalesce is a narrow
     # dependency, so it would collapse the WHOLE upstream plan (e.g.
     # the six-join invoice pipeline) into one task; repartition keeps
     # the upstream parallel and funnels only the finished rows
     # through the single writer (measured 2x on the invoice slice).
-    funneled = out.repartition(1) if single_file else out
-    if sort_cols:
-        funneled = funneled.sortWithinPartitions(*sort_cols)
-    writer = (
-        funneled
+    (
+        df.select(*INVOICE_CSV_COLUMNS)
+        .repartition(1)
+        .sortWithinPartitions(*_FILE_ORDER)
         .write.mode("overwrite")
         .option("sep", ";")
         .option("header", True)
@@ -86,14 +85,11 @@ def write_invoice_csv(
         # name with an empty variant keep their trailing space.
         .option("ignoreLeadingWhiteSpace", False)
         .option("ignoreTrailingWhiteSpace", False)
+        .csv(tmp)
     )
-    if single_file:
-        writer.csv(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
-        shutil.move(part, path)
-        shutil.rmtree(tmp)
-    else:
-        writer.csv(path)
+    part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
+    shutil.move(part, path)
+    shutil.rmtree(tmp)
 
 
 def read_invoice_csv(spark: SparkSession, path: str) -> DataFrame:

@@ -3,15 +3,24 @@ generate → verify → heatmap, all through ``cli.main``."""
 
 from __future__ import annotations
 
+import csv
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from shopify_db_spark.cli import main
+from shopify_db_spark.plans.commerce import (
+    FROM_DATE,
+    START_ID,
+    TO_DATE,
+    commerce_tables_from_benchmark,
+)
 from shopify_db_spark.plans.invoice import build_invoices
 from shopify_db_spark.schemas import INVOICE_CSV_COLUMNS
 from shopify_db_spark.sources.csv_io import read_invoice_csv, write_invoice_csv
 from tests.commerce_fixtures import build_tables
+from tests.conftest import SF_SMOKE
 from tests.test_ingest import fixtures_to_raw_json
 
 
@@ -35,6 +44,27 @@ def test_csv_roundtrip(spark, tmp_path):
         for r in back.collect()
     }
     assert orig == loaded
+
+    # The sink owns the file order, so the bytes depend only on the
+    # rows: the same store in a different parquet layout writes the
+    # same file, in the reference's (INVOICE NO, CUSTOMER NAME) order.
+    tables = commerce_tables_from_benchmark(spark, SF_SMOKE)
+    shuffled = {name: df.repartition(7, F.rand(3)) for name, df in tables.items()}
+    paths = []
+    try:
+        for i, t in enumerate((tables, shuffled)):
+            paths.append(str(tmp_path / f"bench{i}.csv"))
+            write_invoice_csv(build_invoices(t, FROM_DATE, TO_DATE, START_ID), paths[-1])
+    finally:
+        for df in tables.values():
+            df.unpersist()
+    with open(paths[0], "rb") as a, open(paths[1], "rb") as b:
+        assert a.read() == b.read()
+    with open(paths[0], newline="") as fh:
+        rows = list(csv.DictReader(fh, delimiter=";"))
+    assert len(rows) > 1
+    keys = [(int(r["INVOICE NO"]), r["CUSTOMER NAME"]) for r in rows]
+    assert keys == sorted(keys)
 
 
 @pytest.fixture(scope="module")

@@ -217,54 +217,6 @@ def test_session_artifact_sweeps_stale_and_memoizes(spark):
     A._MEMOS.pop(name, None)
 
 
-def test_evict_session_retires_a_live_sessions_dirs(spark):
-    """Round-12 lifecycle API: a long-lived server session cycling
-    many sf_dirs retires a dir's artifacts with evict_session —
-    scoped to that dir, then to the whole session — without touching
-    entries owned by OTHER sessions."""
-    from shopify_db_spark.plans import artifacts as A
-
-    names = ("test_evict_a", "test_evict_b")
-    for n in names:
-        A._MEMOS.pop(n, None)
-        for d in ("/sf/one", "/sf/two"):
-            A.session_artifact(n, spark, d, lambda: spark.range(2).toDF("id"))
-
-    # another owner's entry must survive this session's evictions
-    other = object()
-    A._MEMOS[names[0]][(id(other), "/sf/one")] = (other, None)
-
-    assert A.evict_session(spark, "/sf/one") == 2  # one dir, both names
-    assert (id(spark), "/sf/one") not in A._MEMOS[names[0]]
-    assert (id(spark), "/sf/two") in A._MEMOS[names[1]]
-    assert (id(other), "/sf/one") in A._MEMOS[names[0]]
-    A._MEMOS[names[0]].pop((id(other), "/sf/one"))  # before sweep runs
-
-    calls = {"n": 0}
-
-    def rebuild():
-        calls["n"] += 1
-        return spark.range(4).toDF("id")
-
-    again = A.session_artifact(names[0], spark, "/sf/one", rebuild)
-    assert calls["n"] == 1 and again.count() == 4  # cold rebuild after dir retire
-
-    # whole-session retire: other tests in the suite may have left
-    # REAL artifacts owned by this shared session, so count what the
-    # session owns rather than assuming only this test's entries
-    owned = sum(
-        1
-        for memo in A._MEMOS.values()
-        for (_key, (owner, _df)) in memo.items()
-        if owner is spark
-    )
-    assert owned >= 3  # /sf/two pair + the rebuild at minimum
-    assert A.evict_session(spark) == owned
-    assert A.evict_session(spark) == 0
-    for n in names:
-        A._MEMOS.pop(n, None)
-
-
 def test_q162_doc_novelty_invariants(spark):
     """q162 structural invariants on the smoke corpus: one row per
     doc with >= 1 shingle; n_unique <= n_shingles; Σ n_unique equals

@@ -38,16 +38,8 @@ def test_no_single_partition_exchange_over_data(spark):
     assert "rangepartitioning" in plan.lower()
 
 
-def test_invoice_two_phase_flag_equivalence(spark):
-    tables = build_tables(spark)
-    base = build_invoices(tables, FROM_DATE, TO_DATE, START_ID, two_phase=False).collect()
-    two = build_invoices(tables, FROM_DATE, TO_DATE, START_ID, two_phase=True).collect()
-    key = lambda r: tuple((c, str(v)) for c, v in sorted(r.asDict().items()))  # noqa: E731
-    assert sorted(map(key, base)) == sorted(map(key, two))
-
-
 def test_invoice_auto_two_phase_threshold(spark, monkeypatch):
-    """The default (two_phase=None) flips to two-phase numbering once
+    """build_invoices flips to two-phase numbering once
     the plan-time size estimate of the group-key sources (orders +
     refunds) crosses the byte threshold, and the resulting plan
     routes the group numbering through the range-partitioned path
@@ -83,8 +75,8 @@ def test_invoice_auto_two_phase_threshold(spark, monkeypatch):
     for i in hits:
         tail = "\n".join(lines[i : i + 6])
         assert "count(1)" in tail or "__cnt" in tail, tail
-    # And the auto pick produces the exact same rows as both explicit
-    # paths.
+    # And the two-phase pick produces the exact same rows as the
+    # windowed one.
     key = lambda r: tuple((c, str(v)) for c, v in sorted(r.asDict().items()))  # noqa: E731
     assert sorted(map(key, auto.collect())) == sorted(map(key, small.collect()))
 

@@ -189,17 +189,31 @@ def test_invoice_artifact_build_mapping_layer_is_cached(spark):
     0.75 s slower at sf0.1 and strictly worse at scale). Guard that
     the mapped tables stay persisted in the build plan (q20 itself
     now reads the materialized invoice artifact, so the lint targets
-    the derivation where the mapping frames actually appear)."""
+    the derivation where the mapping frames actually appear).
+
+    The same plan has no range exchange while below the two-phase
+    bounds: the CSV sink owns the reference's file order, so the
+    build never sorts globally."""
     from shopify_db_spark.plans.commerce import (
         FROM_DATE,
         START_ID,
         TO_DATE,
         commerce_tables_from_benchmark,
     )
-    from shopify_db_spark.plans.invoice import build_invoices
+    from shopify_db_spark.plans.invoice import (
+        TWO_PHASE_GROUP_ROWS,
+        TWO_PHASE_SOURCE_BYTES,
+        build_invoices,
+        needs_two_phase,
+    )
 
     tables = commerce_tables_from_benchmark(spark, SF_SMOKE)
     try:
+        assert not needs_two_phase(
+            [tables["orders"], tables["refunds"]],
+            byte_bound=TWO_PHASE_SOURCE_BYTES,
+            row_bound=TWO_PHASE_GROUP_ROWS,
+        )
         plan = (
             build_invoices(tables, FROM_DATE, TO_DATE, START_ID)
             ._jdf.queryExecution()
@@ -213,6 +227,7 @@ def test_invoice_artifact_build_mapping_layer_is_cached(spark):
         "the invoice build no longer reads the mapping layer from "
         "cache — commerce_tables_from_benchmark(cache=...) regressed"
     )
+    assert "rangepartitioning" not in plan.lower(), plan
 
 
 def test_q20_and_q61_read_the_invoice_artifact(spark):
