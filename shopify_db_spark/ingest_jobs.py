@@ -11,18 +11,27 @@ Two entry modes share all transform/sink code:
 * **offline mode** — raw JSON-lines files stand in for the API
   (``ingest_from_json_dir``); this is also the test path.
 
-The derived-fan-out structure of the reference is preserved: one
-orders payload feeds three tables (orders, line_item_products,
-shipping), a refunds payload feeds two (refunds,
-line_item_product_refunds), a products payload feeds two
-(products, product_variants).
+:data:`FAN_OUT` keeps the reference's derived tables: one orders
+payload feeds three tables (orders, line_item_products, shipping), a
+refunds payload two (refunds, line_item_product_refunds), a products
+payload two (products, product_variants). :func:`upsert_entities`
+writes every table of one call in one concurrent wave, a thread per
+table: each ``CommerceStore.upsert`` reads and swaps only its own
+table, so the tables never wait on each other. A failed upsert does
+not cancel the others; once every upsert has ended, the first
+failure in :data:`FAN_OUT` order is raised. Each table's swap is
+atomic and a re-run sync is idempotent, so re-running the batch
+repairs a partial sync.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,22 +46,51 @@ def _raw_df(spark: SparkSession, records: list[dict], schema) -> DataFrame:
     return ji.parse_raw(spark, lines, schema)
 
 
-def ingest_orders_payload(store: CommerceStore, raw_orders: DataFrame) -> None:
-    store.upsert("orders", ji.normalize_orders(raw_orders))
-    store.upsert("line_item_products", ji.normalize_line_items(raw_orders))
-    store.upsert("shipping", ji.normalize_shipping(raw_orders))
+#: raw entity → the tables it feeds, each with its normalizer
+FAN_OUT: dict[str, tuple[tuple[str, Callable[[DataFrame], DataFrame]], ...]] = {
+    "customers": (("customers", ji.normalize_customers),),
+    "products": (
+        ("products", ji.normalize_products),
+        ("product_variants", ji.normalize_product_variants),
+    ),
+    "orders": (
+        ("orders", ji.normalize_orders),
+        ("line_item_products", ji.normalize_line_items),
+        ("shipping", ji.normalize_shipping),
+    ),
+    "transactions": (("transactions", ji.normalize_transactions),),
+    "refunds": (
+        ("refunds", ji.normalize_refunds),
+        ("line_item_product_refunds", ji.normalize_refund_line_items),
+    ),
+}
 
 
-def ingest_refunds_payload(store: CommerceStore, raw_refunds: DataFrame) -> None:
-    store.upsert("refunds", ji.normalize_refunds(raw_refunds))
-    store.upsert(
-        "line_item_product_refunds", ji.normalize_refund_line_items(raw_refunds)
-    )
+def upsert_entities(store: CommerceStore, raw: dict[str, DataFrame]) -> None:
+    """Upsert every table that ``{entity: raw DataFrame}`` feeds, all at
+    once, and return when every upsert has ended. Normalizing inside
+    the worker overlaps the driver-side plan builds too;
+    ``inheritable_thread_target`` gives each worker its own copy of
+    the caller's job group and local properties."""
+    work = [
+        (table, normalize, raw[entity])
+        for entity, targets in FAN_OUT.items()
+        if entity in raw
+        for table, normalize in targets
+    ]
+    if not work:
+        return
 
+    def run(table: str, normalize, df: DataFrame) -> None:
+        store.upsert(table, normalize(df))
 
-def ingest_products_payload(store: CommerceStore, raw_products: DataFrame) -> None:
-    store.upsert("products", ji.normalize_products(raw_products))
-    store.upsert("product_variants", ji.normalize_product_variants(raw_products))
+    with ThreadPoolExecutor(max_workers=len(work)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(store.spark)(run), *job)
+            for job in work
+        ]
+    for future in futures:
+        future.result()
 
 
 def refund_order_ids(store: CommerceStore) -> DataFrame:
@@ -77,49 +115,31 @@ def shopify_update(
     sub_fetch_partitions: int | None = None,
 ) -> None:
     """Full API sync (reference ``shopifydb.py:56-94``): customers,
-    products+variants, orders (3 tables), then per-order transactions
-    and per-refund-order refunds. The per-order fetches fan out on
-    executors (``sources.spark_datasource.fetch_sub_resource``);
+    products+variants, orders (3 tables) and per-order transactions
+    upsert in one concurrent wave; the per-refund-order refunds follow
+    in a second, because :func:`refund_order_ids` reads the committed
+    orders table. The per-order fetches fan out on executors
+    (``sources.spark_datasource.fetch_sub_resource``);
     ``sub_fetch_partitions`` caps the concurrent task count against
     the store's API rate limit (None = inherit the id frame's
     partitioning)."""
-    customers = [
-        r
-        for page in api.fetch_all(
-            http_get, base_url, "customers", api.CUSTOMER_FIELDS,
-            created_at_min=created_at_min, created_at_max=created_at_max,
-        )
-        for r in page
-    ]
-    if customers:
-        store.upsert(
-            "customers",
-            ji.normalize_customers(_raw_df(spark, customers, ji.RAW_CUSTOMER)),
-        )
-
-    products = [
-        r
-        for page in api.fetch_all(
-            http_get, base_url, "products", api.PRODUCT_FIELDS,
-            filter_on_status=False,
-            created_at_min=created_at_min, created_at_max=created_at_max,
-        )
-        for r in page
-    ]
-    if products:
-        ingest_products_payload(store, _raw_df(spark, products, ji.RAW_PRODUCT))
-
-    orders = [
-        r
-        for page in api.fetch_all(
-            http_get, base_url, "orders", api.ORDER_FIELDS,
-            created_at_min=created_at_min, created_at_max=created_at_max,
-        )
-        for r in page
-    ]
-    raw_orders = _raw_df(spark, orders, ji.RAW_ORDER) if orders else None
-    if raw_orders is not None:
-        ingest_orders_payload(store, raw_orders)
+    raw: dict[str, DataFrame] = {}
+    for entity, fields, schema, filter_on_status in (
+        ("customers", api.CUSTOMER_FIELDS, ji.RAW_CUSTOMER, True),
+        ("products", api.PRODUCT_FIELDS, ji.RAW_PRODUCT, False),
+        ("orders", api.ORDER_FIELDS, ji.RAW_ORDER, True),
+    ):
+        records = [
+            r
+            for page in api.fetch_all(
+                http_get, base_url, entity, fields,
+                filter_on_status=filter_on_status,
+                created_at_min=created_at_min, created_at_max=created_at_max,
+            )
+            for r in page
+        ]
+        if records:
+            raw[entity] = _raw_df(spark, records, schema)
 
     # Per-order N+1 sub-fetches run as executor tasks over id
     # partitions (mapInPandas) — the order-id sets are never
@@ -128,27 +148,26 @@ def shopify_update(
     client_factory = lambda: (http_get, base_url)  # noqa: E731
 
     def _sub_fetch(ids: DataFrame, endpoint: str, fields: list[str]) -> DataFrame:
-        raw = dsrc.fetch_sub_resource(
+        fetched = dsrc.fetch_sub_resource(
             ids, endpoint, fields, client_factory, num_partitions=sub_fetch_partitions
         ).select("value")
-        # One materialization: the HTTP fetch must run exactly once
-        # even though upsert's merge reads the update side twice.
-        return raw.persist()
+        # One materialization: the HTTP fetch must run exactly once,
+        # though the ``isEmpty()`` probe and each table it feeds read
+        # the frame (``upsert`` reads its update side once).
+        return fetched.persist()
 
-    if raw_orders is not None:
-        txns = _sub_fetch(
-            raw_orders.select("id"), "transactions", api.TRANSACTION_FIELDS
-        )
+    txns = None
+    if "orders" in raw:
+        txns = _sub_fetch(raw["orders"].select("id"), "transactions", api.TRANSACTION_FIELDS)
         if not txns.isEmpty():
-            store.upsert(
-                "transactions",
-                ji.normalize_transactions(ji.parse_raw(spark, txns, ji.RAW_TRANSACTION)),
-            )
+            raw["transactions"] = ji.parse_raw(spark, txns, ji.RAW_TRANSACTION)
+    upsert_entities(store, raw)
+    if txns is not None:
         txns.unpersist()
 
     refunds = _sub_fetch(refund_order_ids(store), "refunds", api.REFUND_FIELDS)
     if not refunds.isEmpty():
-        ingest_refunds_payload(store, ji.parse_raw(spark, refunds, ji.RAW_REFUND))
+        upsert_entities(store, {"refunds": ji.parse_raw(spark, refunds, ji.RAW_REFUND)})
     refunds.unpersist()
 
 
@@ -156,27 +175,18 @@ def ingest_from_json_dir(spark: SparkSession, store: CommerceStore, json_dir: st
     """Offline ingest: ``<entity>.jsonl`` files of raw Shopify records
     (orders.jsonl, customers.jsonl, products.jsonl,
     transactions.jsonl, refunds.jsonl). Reads are schema'd — no
-    inference — and flow through the same normalize/upsert path as
+    inference — and every table flows through one
+    :func:`upsert_entities` wave, the same normalize/upsert path as
     the API."""
-
-    def read(entity: str, schema) -> DataFrame | None:
+    raw = {}
+    for entity, schema in (
+        ("customers", ji.RAW_CUSTOMER),
+        ("products", ji.RAW_PRODUCT),
+        ("orders", ji.RAW_ORDER),
+        ("transactions", ji.RAW_TRANSACTION),
+        ("refunds", ji.RAW_REFUND),
+    ):
         path = os.path.join(json_dir, f"{entity}.jsonl")
-        if not os.path.exists(path):
-            return None
-        return spark.read.schema(schema).json(path)
-
-    raw = read("customers", ji.RAW_CUSTOMER)
-    if raw is not None:
-        store.upsert("customers", ji.normalize_customers(raw))
-    raw = read("products", ji.RAW_PRODUCT)
-    if raw is not None:
-        ingest_products_payload(store, raw)
-    raw = read("orders", ji.RAW_ORDER)
-    if raw is not None:
-        ingest_orders_payload(store, raw)
-    raw = read("transactions", ji.RAW_TRANSACTION)
-    if raw is not None:
-        store.upsert("transactions", ji.normalize_transactions(raw))
-    raw = read("refunds", ji.RAW_REFUND)
-    if raw is not None:
-        ingest_refunds_payload(store, raw)
+        if os.path.exists(path):
+            raw[entity] = spark.read.schema(schema).json(path)
+    upsert_entities(store, raw)

@@ -8,9 +8,12 @@ per-table conflict keys and frozen SET-list columns from
 (idempotence by construction — the reference's key property,
 SURVEY §5.2).
 
-Writes are atomic at directory granularity: Spark cannot overwrite a
-parquet directory it is still reading, so the merge result lands in
-``<table>.parquet.tmp`` and is swapped in with two renames. A
+Writes are atomic per table, at directory granularity: Spark cannot
+overwrite a parquet directory it is still reading, so the merge
+result lands in ``<table>.parquet.tmp`` and is swapped in with two
+renames. An upsert reads and swaps only its own table, so the
+ingest path (``ingest_jobs.upsert_entities``) writes the tables of
+one sync concurrently; a sync is atomic per table, not as a whole. A
 process that dies between the renames leaves the pre-batch table in
 ``<table>.parquet.old``; the store adopts it on the next access, so
 re-running the lost batch restores the merge. At cluster scale this

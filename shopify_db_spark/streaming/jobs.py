@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from shopify_db_spark.ingest_jobs import upsert_entities
 from shopify_db_spark.sources import json_ingest as ji
 from shopify_db_spark.sources.store import CommerceStore
 from shopify_db_spark.sources.tables import table_path
@@ -174,8 +175,9 @@ def incremental_order_ingest(
     """Exactly-once incremental ingest: watch a directory for raw
     Shopify order JSON-lines drops, normalize each micro-batch with
     the batch transforms, and MERGE all three derived tables inside
-    ``foreachBatch`` (per-batch atomicity + checkpointed offsets =
-    the streaming upgrade of the reference's page loop)."""
+    ``foreachBatch`` in one concurrent wave (per-table atomic swaps +
+    checkpointed offsets = the streaming upgrade of the reference's
+    page loop)."""
     raw = spark.readStream.schema(ji.RAW_ORDER).json(json_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -183,9 +185,7 @@ def incremental_order_ingest(
             return
         batch_df.persist()
         try:
-            store.upsert("orders", ji.normalize_orders(batch_df))
-            store.upsert("line_item_products", ji.normalize_line_items(batch_df))
-            store.upsert("shipping", ji.normalize_shipping(batch_df))
+            upsert_entities(store, {"orders": batch_df})
         finally:
             batch_df.unpersist()
 

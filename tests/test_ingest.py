@@ -6,9 +6,12 @@ invoice output as the directly-constructed tables."""
 from __future__ import annotations
 
 import json
+import os
+import threading
 
 import pytest
 
+from shopify_db_spark import schemas
 from shopify_db_spark.ingest_jobs import ingest_from_json_dir
 from shopify_db_spark.plans.invoice import build_invoices
 from shopify_db_spark.sources.store import CommerceStore
@@ -132,23 +135,35 @@ def fixtures_to_raw_json(json_dir) -> None:
             }) + "\n")
 
 
+#: the tables the fixture JSON feeds, with their row counts
+EXPECTED_ROWS = {
+    "customers": len(fx.CUSTOMERS),
+    "orders": len(fx.ORDERS),
+    "line_item_products": len(fx.LINE_ITEMS),
+    "transactions": len(fx.TRANSACTIONS),
+    "shipping": len(fx.SHIPPING),
+    "refunds": len(fx.REFUNDS),
+    "line_item_product_refunds": len(fx.REFUND_ITEMS),
+}
+
+
 @pytest.fixture(scope="module")
-def ingested_store(spark, tmp_path_factory):
+def raw_json_dir(tmp_path_factory):
     json_dir = tmp_path_factory.mktemp("rawjson")
     fixtures_to_raw_json(json_dir)
+    return str(json_dir)
+
+
+@pytest.fixture(scope="module")
+def ingested_store(spark, raw_json_dir, tmp_path_factory):
     store = CommerceStore(spark, str(tmp_path_factory.mktemp("ingested")))
-    ingest_from_json_dir(spark, store, str(json_dir))
+    ingest_from_json_dir(spark, store, raw_json_dir)
     return store
 
 
 def test_ingest_tables_populated(ingested_store):
-    assert ingested_store.read("customers").count() == len(fx.CUSTOMERS)
-    assert ingested_store.read("orders").count() == len(fx.ORDERS)
-    assert ingested_store.read("line_item_products").count() == len(fx.LINE_ITEMS)
-    assert ingested_store.read("transactions").count() == len(fx.TRANSACTIONS)
-    assert ingested_store.read("shipping").count() == len(fx.SHIPPING)
-    assert ingested_store.read("refunds").count() == len(fx.REFUNDS)
-    assert ingested_store.read("line_item_product_refunds").count() == len(fx.REFUND_ITEMS)
+    for table, rows in EXPECTED_ROWS.items():
+        assert ingested_store.read(table).count() == rows, table
 
 
 def test_ingested_invoices_match_direct_tables(spark, ingested_store):
@@ -166,3 +181,75 @@ def test_ingest_idempotent(spark, ingested_store, tmp_path_factory):
     before = ingested_store.read("orders").count()
     ingest_from_json_dir(spark, ingested_store, str(json_dir))
     assert ingested_store.read("orders").count() == before
+
+
+def test_sync_upserts_run_concurrently(spark, raw_json_dir, tmp_path, monkeypatch):
+    """All seven upserts of one sync are in flight together: each
+    waits at a barrier that only opens when every one has arrived."""
+    real_upsert = CommerceStore.upsert
+    barrier = threading.Barrier(len(EXPECTED_ROWS), timeout=60)
+
+    def upsert_after_barrier(self, table, updates):
+        barrier.wait()
+        real_upsert(self, table, updates)
+
+    monkeypatch.setattr(CommerceStore, "upsert", upsert_after_barrier)
+    store = CommerceStore(spark, str(tmp_path / "store"))
+    ingest_from_json_dir(spark, store, raw_json_dir)
+    for table, rows in EXPECTED_ROWS.items():
+        assert store.read(table).count() == rows, table
+
+
+def test_failed_upsert_lets_the_wave_finish_and_rerun_repairs(
+    spark, raw_json_dir, ingested_store, tmp_path, monkeypatch
+):
+    """One table's failure is raised only after every other upsert of
+    the sync has ended; re-running the sync repairs the store."""
+    real_upsert = CommerceStore.upsert
+    lock = threading.Lock()
+    running, finished = [0], []
+
+    def failing_upsert(self, table, updates):
+        if table == "shipping":
+            raise RuntimeError("shipping write failed")
+        with lock:
+            running[0] += 1
+        try:
+            real_upsert(self, table, updates)
+        finally:
+            with lock:
+                running[0] -= 1
+                finished.append(table)
+
+    monkeypatch.setattr(CommerceStore, "upsert", failing_upsert)
+    store = CommerceStore(spark, str(tmp_path / "store"))
+    with pytest.raises(RuntimeError, match="shipping write failed"):
+        ingest_from_json_dir(spark, store, raw_json_dir)
+    assert running[0] == 0
+    others = {t: n for t, n in EXPECTED_ROWS.items() if t != "shipping"}
+    assert sorted(finished) == sorted(others)
+    for table, rows in others.items():
+        assert store.read(table).count() == rows, table
+    assert not os.path.exists(store.path("shipping"))
+
+    monkeypatch.undo()
+    ingest_from_json_dir(spark, store, raw_json_dir)
+    for table in schemas.COMMERCE_TABLES:
+        problems = compare_frames(
+            store.read(table).toPandas(), ingested_store.read(table).toPandas()
+        )
+        assert not problems, f"{table}: " + "; ".join(problems)
+
+
+def test_sync_jobs_carry_the_callers_job_group(spark, raw_json_dir, tmp_path):
+    """The worker threads inherit the caller's job group, so every
+    table's write job is tagged with it."""
+    sc = spark.sparkContext
+    sc.setJobGroup("sync-under-test", "ingest_from_json_dir")
+    try:
+        store = CommerceStore(spark, str(tmp_path / "store"))
+        ingest_from_json_dir(spark, store, raw_json_dir)
+        jobs = sc.statusTracker().getJobIdsForGroup("sync-under-test")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(jobs) >= len(EXPECTED_ROWS)
