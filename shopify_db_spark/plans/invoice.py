@@ -492,83 +492,19 @@ def tripletex_invoice(tables: dict[str, DataFrame]) -> DataFrame:
     )
 
 
-def invoice_groups(
-    tables: dict[str, DataFrame],
-    from_date: datetime.date | str,
-    to_date: datetime.date | str,
-) -> DataFrame:
-    """Distinct in-window (ORDER NO, payment_tag) invoice groups,
-    derived WITHOUT the six-join invoice view.
-
-    The numbering step needs only the set of group keys whose lines
-    fall in the date window; recomputing the whole view for that
-    (filter pushdown makes the two view references non-identical, so
-    Catalyst cannot reuse the exchange) doubles the pipeline cost.
-    The cheap derivation follows from the view's structure:
-
-    * every payment-tag group comes from an order with a rank-1
-      successful payment (product lines exist for all of them —
-      the line-item join is LEFT), with INVOICE DATE =
-      ``DATE(o.created_at)``; gift-card lines require the same
-      rank-1 payment and carry the same key and date, so they
-      never add a group;
-    * every refund group comes from a successful refund transaction
-      joined to its ``refunds`` row, key ``CONCAT(o.name, '-1')``,
-      INVOICE DATE = ``DATE(r.created_at)``;
-    * shipping lines inner-join product lines (subset keys/dates),
-      and UNION DISTINCT / rank-filtering can collapse rows but
-      never eliminate a whole group.
-
-    Equivalence with the view-derived group set is asserted in
-    tests/test_invoice.py.
-    """
-    stp1 = success_transaction_payments(tables["transactions"]).filter(
-        "transaction_rank = 1"
-    )
-    o = tables["orders"].alias("o")
-    pay = (
-        stp1.alias("t")
-        .join(o, F.expr("o.id = t.order_id"), "left")
-        .selectExpr(
-            "o.name AS `ORDER NO`",
-            "'payment' AS payment_tag",
-            "to_date(o.created_at) AS d",
-        )
-    )
-    ref = (
-        tables["transactions"]
-        .filter("status = 'success' AND kind = 'refund'")
-        .alias("t")
-        .join(
-            tables["refunds"].alias("r"),
-            F.expr("r.transaction_id = t.id"),
-            "inner",
-        )
-        .join(o, F.expr("o.id = t.order_id"), "left")
-        .selectExpr(
-            "concat(o.name, '-1') AS `ORDER NO`",
-            "'refund' AS payment_tag",
-            "to_date(r.created_at) AS d",
-        )
-    )
-    return (
-        pay.unionByName(ref)
-        .filter(F.col("d").between(F.lit(from_date), F.lit(to_date)))
-        .select("ORDER NO", "payment_tag")
-        .distinct()
-    )
-
-
 def assign_invoice_numbers(
     invoice_view: DataFrame,
-    groups: DataFrame,
+    from_date: datetime.date | str,
+    to_date: datetime.date | str,
     invoice_start_id: int,
     two_phase: bool,
 ) -> DataFrame:
-    """Attach one consecutive invoice number per in-window
-    (ORDER NO, payment_tag) group of ``groups`` (see
-    :func:`invoice_groups`) to the invoice lines, starting at
-    ``invoice_start_id`` (reference ``db.py:409-483``).
+    """Attach one consecutive invoice number per (ORDER NO,
+    payment_tag) group with a line in the ``INVOICE DATE`` window to
+    the invoice lines, starting at ``invoice_start_id`` (reference
+    ``db.py:409-483``). As in the reference, the groups are the
+    distinct keys of the date-filtered view lines themselves, so
+    ``invoice_view`` should be materialized: it is read twice.
 
     The reference's ``ROW_NUMBER() OVER ()`` numbers groups in
     arbitrary hash-agg order; we order by (ORDER NO, payment_tag) —
@@ -610,6 +546,13 @@ def assign_invoice_numbers(
     *means* the group set outgrew a single task, so it has also
     outgrown a broadcast — the join falls back to AQE's choice.
     """
+    groups = (
+        invoice_view.filter(
+            F.col("INVOICE DATE").between(F.lit(from_date), F.lit(to_date))
+        )
+        .select("ORDER NO", "payment_tag")
+        .distinct()
+    )
     if two_phase:
         from shopify_db_spark.operators.numbering import global_row_numbers
 
@@ -651,8 +594,8 @@ def assign_invoice_numbers(
     ]
     # Explicit broadcast: the group side is one row per invoice —
     # orders of magnitude below the line side at any scale — but its
-    # stats sit behind a window over a union of joins, so neither
-    # static planning nor AQE infers that; without the hint the full
+    # size estimate is that of a distinct over the whole line set, so
+    # static planning does not infer that; without the hint the full
     # line side shuffles on the group key (observed SortMergeJoin at
     # sf0.1). The hint is dropped on the two-phase path: source bytes /
     # group rows above TWO_PHASE_SOURCE_BYTES / TWO_PHASE_GROUP_ROWS
@@ -694,19 +637,23 @@ def build_invoices(
 ) -> DataFrame:
     """End-to-end: view + numbering (the reference's
     ``tripletex-generate`` path, SURVEY §3.2), lines unsorted. The
-    group keys come from :func:`invoice_groups` so the six-join view
-    executes once, not twice.
+    view is materialized once with an eager ``localCheckpoint`` (the
+    lineage-free idiom of ``plans.artifacts``): the numbering reads
+    it twice — for the in-window groups and for the lines — and
+    without the checkpoint each read would re-run the six-join
+    pipeline. The view's jobs therefore run here, not when the
+    result is first used.
 
     The numbering path is picked at plan time: group cardinality is
     upper-bounded by the orders + refunds inputs (every payment group
-    maps to one rank-1-paid order, every refund group to one refunds
-    row — see :func:`invoice_groups`), sized via Catalyst's plan-time
-    ``sizeInBytes`` estimate — a driver-side statistic, no job runs
-    and nothing is scanned (counting the mapped frames would execute
-    their whole lineage: measured ~2 s per q20 run). Above
-    ``TWO_PHASE_SOURCE_BYTES`` the single-partition numbering window
-    would funnel the whole group set through one task, so the
-    two-phase numbering takes over; below it the window is cheaper
+    is one order's rank-1 payment, every refund group needs a refunds
+    row), sized via Catalyst's plan-time ``sizeInBytes`` estimate —
+    a driver-side statistic, no job runs and nothing is scanned
+    (counting the mapped frames would execute their whole lineage:
+    measured ~2 s per q20 run). Above ``TWO_PHASE_SOURCE_BYTES`` the
+    single-partition numbering window would funnel the whole group
+    set through one task, so the two-phase numbering takes over;
+    below it the window is cheaper
     (two fewer shuffles). Lineages whose stats Catalyst cannot
     estimate (Long.MaxValue sentinel, e.g. Python local relations)
     fall back to two count jobs against ``TWO_PHASE_GROUP_ROWS``."""
@@ -718,8 +665,9 @@ def build_invoices(
         row_bound=TWO_PHASE_GROUP_ROWS,
     )
     return assign_invoice_numbers(
-        tripletex_invoice(tables),
-        invoice_groups(tables, from_date, to_date),
+        tripletex_invoice(tables).localCheckpoint(),
+        from_date,
+        to_date,
         invoice_start_id,
         two_phase,
     )

@@ -28,7 +28,7 @@ def fixture_dir(spark, tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def oracle_invoices(fixture_dir):
+def oracle_con(fixture_dir):
     con = duckdb.connect()
     for t in [
         "customers", "orders", "line_item_products", "transactions",
@@ -37,13 +37,29 @@ def oracle_invoices(fixture_dir):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{fixture_dir}/{t}.parquet/*.parquet')"
         )
-    sql = render_invoice_oracle(FROM_DATE, TO_DATE, START_ID)
-    return con.execute(sql).df()
+    yield con
+    con.close()
 
 
-def test_invoice_pipeline_matches_oracle(spark, oracle_invoices):
+# The two narrower windows cut between #1004's refunds (01-09 and
+# 01-12): only the line side is unfiltered, so the #1004-1 group keeps
+# all three refund lines under one invoice number in every window.
+@pytest.mark.parametrize(
+    "window",
+    [
+        (FROM_DATE, TO_DATE),
+        ("2024-01-10", "2024-01-31"),
+        ("2024-01-01", "2024-01-10"),
+    ],
+    ids=["month", "after_first_refund", "before_second_refund"],
+)
+def test_invoice_pipeline_matches_oracle(spark, oracle_con, window):
+    from_date, to_date = window
+    oracle = oracle_con.execute(
+        render_invoice_oracle(from_date, to_date, START_ID)
+    ).df()
     tables = build_tables(spark)
-    result = build_invoices(tables, FROM_DATE, TO_DATE, START_ID)
+    result = build_invoices(tables, from_date, to_date, START_ID)
     # Cast money decimals to double for the comparison (DuckDB emits
     # doubles after its double-division paths).
     from pyspark.sql import functions as F
@@ -55,9 +71,11 @@ def test_invoice_pipeline_matches_oracle(spark, oracle_invoices):
             else F.col(c)
             for c in result.columns
         ]
-    )
-    problems = compare_frames(result.toPandas(), oracle_invoices)
+    ).toPandas()
+    problems = compare_frames(result, oracle)
     assert not problems, "; ".join(problems)
+    refund = result[result["ORDER NO"] == "#1004-1"]
+    assert len(refund) == 3 and refund["INVOICE NO"].nunique() == 1
 
 
 def test_invoice_semantic_spot_checks(spark):
@@ -122,31 +140,6 @@ def test_union_all_is_union_distinct(spark):
     tables = build_tables(spark)
     view = tripletex_invoice(tables)
     assert view.count() == view.distinct().count()
-
-
-def test_invoice_groups_equivalence(spark):
-    """invoice_groups (the cheap transactions/orders derivation) must
-    equal the group set derived from the six-join view itself."""
-    from pyspark.sql import functions as F
-
-    from shopify_db_spark.plans.invoice import invoice_groups
-
-    tables = build_tables(spark)
-    view = tripletex_invoice(tables)
-    from_view = set(
-        (r["ORDER NO"], r["payment_tag"])
-        for r in view.filter(
-            F.col("INVOICE DATE").between(F.lit(FROM_DATE), F.lit(TO_DATE))
-        )
-        .select("ORDER NO", "payment_tag")
-        .distinct()
-        .collect()
-    )
-    cheap = set(
-        (r["ORDER NO"], r["payment_tag"])
-        for r in invoice_groups(tables, FROM_DATE, TO_DATE).collect()
-    )
-    assert cheap == from_view and len(cheap) > 0
 
 
 def test_null_order_no_group_emits_padded_line(spark):

@@ -184,16 +184,19 @@ def test_no_complex_output_columns(spark, name):
 
 
 def test_invoice_artifact_build_mapping_layer_is_cached(spark):
-    """The invoice BUILD references the commerce mapping frames from
+    """The invoice view references the commerce mapping frames from
     every branch — ~28 re-derivations per run when lazy (measured
     0.75 s slower at sf0.1 and strictly worse at scale). Guard that
-    the mapped tables stay persisted in the build plan (q20 itself
+    the mapped tables stay persisted in the view's plan (q20 itself
     now reads the materialized invoice artifact, so the lint targets
     the derivation where the mapping frames actually appear).
 
-    The same plan has no range exchange while below the two-phase
-    bounds: the CSV sink owns the reference's file order, so the
-    build never sorts globally."""
+    The build checkpoints that view once and numbers the checkpointed
+    lines: its plan reads only the checkpoint — no cached table, no
+    parquet scan, so nothing is re-derived from the tables. The same
+    plan has no range exchange while below the two-phase bounds: the
+    CSV sink owns the reference's file order, so the build never
+    sorts globally."""
     from shopify_db_spark.plans.commerce import (
         FROM_DATE,
         START_ID,
@@ -205,7 +208,11 @@ def test_invoice_artifact_build_mapping_layer_is_cached(spark):
         TWO_PHASE_SOURCE_BYTES,
         build_invoices,
         needs_two_phase,
+        tripletex_invoice,
     )
+
+    def executed(df):
+        return df._jdf.queryExecution().executedPlan().toString()
 
     tables = commerce_tables_from_benchmark(spark, SF_SMOKE)
     try:
@@ -214,20 +221,21 @@ def test_invoice_artifact_build_mapping_layer_is_cached(spark):
             byte_bound=TWO_PHASE_SOURCE_BYTES,
             row_bound=TWO_PHASE_GROUP_ROWS,
         )
-        plan = (
-            build_invoices(tables, FROM_DATE, TO_DATE, START_ID)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
+        view_plan = executed(tripletex_invoice(tables))
+        plan = executed(build_invoices(tables, FROM_DATE, TO_DATE, START_ID))
     finally:
         for df in tables.values():
             df.unpersist()
-    assert "InMemory" in plan, (
-        "the invoice build no longer reads the mapping layer from "
+    assert "InMemory" in view_plan, (
+        "the invoice view no longer reads the mapping layer from "
         "cache — commerce_tables_from_benchmark(cache=...) regressed"
     )
     assert "rangepartitioning" not in plan.lower(), plan
+    assert (
+        "ExistingRDD" in plan
+        and "InMemoryTableScan" not in plan
+        and "Scan parquet" not in plan
+    ), "the invoice numbering re-derives lines or groups from the tables:\n" + plan
 
 
 def test_q20_and_q61_read_the_invoice_artifact(spark):
