@@ -219,15 +219,7 @@ def invoice_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         TO_DATE,
         START_ID,
         prelude_ctes=MAPPING_CTES.strip() + ",\n",
-        table_map={
-            "customers": "map_customers",
-            "orders": "map_orders",
-            "transactions": "map_transactions",
-            "line_item_products": "map_line_item_products",
-            "shipping": "map_shipping",
-            "refunds": "map_refunds",
-            "line_item_product_refunds": "map_line_item_product_refunds",
-        },
+        table_map=TABLE_MAP,
     ),
 )
 def q20_invoice_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:

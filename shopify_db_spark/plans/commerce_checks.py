@@ -41,6 +41,7 @@ from shopify_db_spark.plans.commerce import (
     FROM_DATE,
     MAPPING_CTES,
     START_ID,
+    TABLE_MAP,
     TO_DATE,
     commerce_tables_from_benchmark,
 )
@@ -67,16 +68,6 @@ _STRING_COLS = (
     "ORDER LINE - DESCRIPTION",
     "ORDER LINE - PROD NO",
 )
-
-_INVOICE_TABLE_MAP = {
-    "customers": "map_customers",
-    "orders": "map_orders",
-    "transactions": "map_transactions",
-    "line_item_products": "map_line_item_products",
-    "shipping": "map_shipping",
-    "refunds": "map_refunds",
-    "line_item_product_refunds": "map_line_item_product_refunds",
-}
 
 
 def _normalized_invoices(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -114,7 +105,7 @@ def _oracle_norm_prefix() -> str:
             TO_DATE,
             START_ID,
             prelude_ctes=MAPPING_CTES.strip() + ",\n",
-            table_map=_INVOICE_TABLE_MAP,
+            table_map=TABLE_MAP,
             cte_name="invoice_base",
         )
         + f""",
@@ -449,7 +440,7 @@ _Q63_ORACLE = (
         _CSV_TO,
         _CSV_START,
         prelude_ctes=MAPPING_CTES.strip() + ",\n",
-        table_map=_INVOICE_TABLE_MAP,
+        table_map=TABLE_MAP,
         cte_name="invoice_base",
     )
     + """

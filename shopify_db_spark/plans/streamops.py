@@ -1,25 +1,35 @@
-"""Streaming gate query: the ``foreachBatch`` incremental-MERGE
-pipeline driven end-to-end over bounded micro-batches.
+"""Bounded-stream gate queries: Structured Streaming replays of the
+catalog tables, one deterministic micro-batch per trigger.
 
 The reference's incremental story is the ``created_at_min`` request
 window re-fed through the same per-page upsert loop
 (``shopifydb.py:233-244``, ``db.py:115-407``). The Spark-native
-analogue is Structured Streaming: a checkpointed file/kafka source,
+analogue is Structured Streaming: a file/kafka source,
 ``foreachBatch``, and the key-merge operator (``operators.upsert``)
 applied per micro-batch. This module gates that surface — the
 other streaming shapes (watermark windows, ``session_window``,
 ``applyInPandasWithState``) are unit-tested in
 ``tests/test_multimodal_streaming.py``.
 
+One replay driver serves every query: ``_write_batch_files`` writes
+one parquet file per ``batch_no`` value, ``_batch_stream`` reads them
+back one file per trigger, and ``_replay`` drains that stream through
+``foreachBatch`` with ``availableNow``. Each stateful query is a
+``SinkFamily`` in ``STATEFUL_SINK_FAMILIES`` (source, initial state,
+merge, result) run by ``run_sink_family``; ``_redelivery_guard``
+wraps every merge so a redelivered or empty batch is skipped. The
+restart-recovery sweep in ``tests/test_streaming_realism.py`` runs
+the same registry entries.
+
 Oracle-ability: micro-batch boundaries are made DETERMINISTIC
 (one source file per batch via ``maxFilesPerTrigger=1``, file
 mtimes strictly increasing in batch order), so the post-stream
 state is a pure function of the raw table and ANSI-SQL can express
-it: per key, non-frozen columns come from the winning row of the
-LAST batch containing the key, frozen columns from the winning row
-of the FIRST batch (insert-time value — the reference's partial
-SET-list quirk); the within-batch winner is ``dedup_updates``'s
-deterministic highest-sort-order pick.
+it. For q49: per key, non-frozen columns come from the winning row
+of the LAST batch containing the key, frozen columns from the
+winning row of the FIRST batch (insert-time value — the reference's
+partial SET-list quirk); the within-batch winner is
+``dedup_updates``'s deterministic highest-sort-order pick.
 """
 
 from __future__ import annotations
@@ -27,6 +37,9 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+from contextlib import contextmanager
+from dataclasses import dataclass
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -99,52 +112,37 @@ def q49_streaming_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial SET-list semantics, db.py:129-140). The returned state
     must equal the batch-SQL fixpoint the oracle computes."""
     updates = _order_updates(load_table(spark, sf_dir, "orders"))
-    schema = updates.schema
+    state = {"df": spark.createDataFrame([], updates.schema)}
 
-    # one parquet file per micro-batch, mtimes strictly increasing so
-    # the file source's oldest-first order equals batch_no order
-    stream_dir = _write_batch_files(updates, "batch_no", N_BATCHES)
-    workdir = os.path.dirname(stream_dir)
-    ckpt_dir = os.path.join(workdir, "ckpt")
-    try:
-        state = {"df": spark.createDataFrame([], schema)}
+    # No redelivery guard here: foreachBatch redelivers only the batch
+    # it last ran (same batch_id, after a failure), and upserting the
+    # same rows again leaves the state unchanged. The guard's isEmpty()
+    # would add one job to every trigger of this query.
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        # localCheckpoint: materialize per batch so state lineage
+        # stays flat (the parquet-write analogue of a real sink)
+        state["df"] = upsert(
+            state["df"],
+            batch_df,
+            keys=["entity_id"],
+            frozen_cols=["first_status"],
+        ).localCheckpoint()
 
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            # localCheckpoint: materialize per batch so state lineage
-            # stays flat (the parquet-write analogue of a real sink)
-            state["df"] = upsert(
-                state["df"],
-                batch_df,
-                keys=["entity_id"],
-                frozen_cols=["first_status"],
-            ).localCheckpoint()
-
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(stream_dir)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return state["df"]
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+    _replay(updates, N_BATCHES, sink)
+    return state["df"]
 
 
-def _write_batch_files(df: DataFrame, batch_col: str, n_batches: int) -> str:
-    """Materialize ``df`` as one parquet file per ``batch_col`` value
+def _write_batch_files(df: DataFrame, n_batches: int) -> str:
+    """Materialize ``df`` as one parquet file per ``batch_no`` value
     with strictly increasing mtimes, so the file stream source
     (``maxFilesPerTrigger=1``, oldest first) replays exactly one
-    batch per trigger in batch order — the determinism q49 pioneered,
-    shared by every bounded-stream gate query. Returns the stream
-    input directory (caller removes the parent workdir).
+    batch per trigger in batch order — the determinism every
+    bounded-stream gate query relies on. Returns the stream input
+    directory; ``_batch_stream`` removes its parent workdir when the
+    replay ends.
 
     ONE write job for all batches: a duplicate of the batch column
-    becomes the ``partitionBy`` key (so ``batch_col`` itself stays in
+    becomes the ``partitionBy`` key (so ``batch_no`` itself stays in
     the files) and the pre-write hash repartition on it puts each
     value in exactly one task → exactly one file per directory. The
     per-batch filter+coalesce(1) loop this replaces ran ``n_batches``
@@ -154,7 +152,7 @@ def _write_batch_files(df: DataFrame, batch_col: str, n_batches: int) -> str:
     os.makedirs(stream_dir)
     split_dir = os.path.join(workdir, "split")
     (
-        df.withColumn("__split", F.col(batch_col))
+        df.withColumn("__split", F.col("batch_no"))
         .repartition(n_batches, F.col("__split"))
         .write.partitionBy("__split")
         .parquet(split_dir)
@@ -183,6 +181,86 @@ def _write_batch_files(df: DataFrame, batch_col: str, n_batches: int) -> str:
             shutil.copy(empty_src, dst)
         os.utime(dst, (base + 100 * b, base + 100 * b))
     return stream_dir
+
+
+@contextmanager
+def _batch_stream(df: DataFrame, n_batches: int) -> Iterator[DataFrame]:
+    """``df`` (with a ``batch_no`` column in 0..n_batches-1) as a
+    bounded stream that delivers one batch per trigger, in batch
+    order. The batch files are removed when the block exits."""
+    stream_dir = _write_batch_files(df, n_batches)
+    try:
+        yield (
+            df.sparkSession.readStream.schema(df.schema)
+            .option("maxFilesPerTrigger", 1)
+            .option("latestFirst", "false")
+            .parquet(stream_dir)
+        )
+    finally:
+        shutil.rmtree(os.path.dirname(stream_dir), ignore_errors=True)
+
+
+def _replay(df: DataFrame, n_batches: int, sink) -> None:
+    """Replay ``df`` as ``n_batches`` micro-batches and drain them,
+    in batch order, through ``foreachBatch(sink)``."""
+    with _batch_stream(df, n_batches) as stream:
+        (
+            stream.writeStream.foreachBatch(sink)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+
+
+@dataclass(frozen=True)
+class SinkFamily:
+    """One stateful streaming query: its batched source (a
+    ``batch_no`` column in 0..2), its initial state, the merge that
+    folds one micro-batch into the state, and the result read from
+    the final state."""
+
+    source: Callable[[SparkSession, str], DataFrame]
+    init: Callable[[SparkSession, str], dict]
+    merge: Callable[[SparkSession, dict, DataFrame, int], None]
+    result: Callable[[SparkSession, dict], DataFrame]
+
+
+#: every stateful family replays its source as three micro-batches
+_FAMILY_BATCHES = 3
+
+
+def _redelivery_guard(spark: SparkSession, state: dict, merge):
+    """``merge`` as a ``foreachBatch`` sink that runs at most once per
+    batch id and never on an empty batch. ``foreachBatch`` is
+    at-least-once: after a failure, or a restart from a checkpoint,
+    a batch id can arrive again, and ADD-merged state (counts, sketch
+    cells, an index) would count that batch twice. Batch ids continue
+    across restarts, so the ``seen`` set in ``state`` is enough."""
+    state.setdefault("seen", set())
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id in state["seen"]:
+            return
+        state["seen"].add(batch_id)
+        if batch_df.isEmpty():
+            return
+        merge(spark, state, batch_df, batch_id)
+
+    return sink
+
+
+def run_sink_family(
+    spark: SparkSession, sf_dir: str, family: SinkFamily
+) -> DataFrame:
+    """Run one stateful query: replay its source through the guarded
+    merge and return its result."""
+    state = family.init(spark, sf_dir)
+    _replay(
+        family.source(spark, sf_dir),
+        _FAMILY_BATCHES,
+        _redelivery_guard(spark, state, family.merge),
+    )
+    return family.result(spark, state)
 
 
 @query(
@@ -222,17 +300,8 @@ def q59_streaming_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         (F.col("event_id") % 4).alias("batch_no"),
     )
-    stream_dir = _write_batch_files(batched, "batch_no", 4)
-    try:
-        stream = (
-            spark.readStream.schema(batched.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(stream_dir)
-        )
+    with _batch_stream(batched, 4) as stream:
         return run_bounded(windowed_event_counts(stream), mode="complete")
-    finally:
-        shutil.rmtree(os.path.dirname(stream_dir), ignore_errors=True)
 
 
 @query(
@@ -280,8 +349,6 @@ def q60_stateful_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cast is instant-preserving under the pinned UTC session.
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
     )
-    stream_dir = _write_batch_files(events, "batch_no", 2)
-
     out_schema = T.StructType([
         T.StructField("user_id", T.LongType()),
         T.StructField("batch_no", T.LongType()),
@@ -317,13 +384,7 @@ def q60_stateful_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    try:
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(stream_dir)
-        )
+    with _batch_stream(events, 2) as stream:
         tracked = stream.groupBy("user_id").applyInPandasWithState(
             track,
             outputStructType=out_schema,
@@ -332,8 +393,6 @@ def q60_stateful_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
         return run_bounded(tracked, mode="append")
-    finally:
-        shutil.rmtree(os.path.dirname(stream_dir), ignore_errors=True)
 
 
 _Q73_ORACLE = """
@@ -524,8 +583,6 @@ def incremental_minhash_dedup(
     smaller than the index). ``max_bucket=None`` disables the cap
     and yields the exact full-recall spec (the q73 oracle
     contract)."""
-    stream_dir = _write_batch_files(docs, "batch_no", n_batches)
-
     empty_index = spark.createDataFrame(
         [],
         "doc_id long, minhashes array<string>, band int, band_key string,"
@@ -550,7 +607,6 @@ def incremental_minhash_dedup(
         "index": empty_index,  # kept for _state_out inspection
         "out": None,
         "counts": empty_counts,
-        "seen": set(),
     }
 
     def _index_df() -> DataFrame:
@@ -559,15 +615,12 @@ def incremental_minhash_dedup(
             out = out.unionByName(p)
         return out
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # at-least-once guard (q114's pattern): a redelivered batch
-        # would re-union its signatures into the index and re-add its
-        # bucket counts — ADD-merge state is not idempotent
-        if batch_id in state["seen"]:
-            return
-        state["seen"].add(batch_id)
-        if batch_df.isEmpty():
-            return
+    # run under _redelivery_guard: a redelivered batch would re-union
+    # its signatures into the index and re-add its bucket counts —
+    # ADD-merge state is not idempotent
+    def merge(
+        spark: SparkSession, state: dict, batch_df: DataFrame, batch_id: int
+    ) -> None:
         # Single-partition micro-batch → spread before the per-doc
         # signature pass runs pre-shuffle (same root cause and fix
         # as the q114 sink — SCALE.md).
@@ -659,31 +712,19 @@ def incremental_minhash_dedup(
                 .localCheckpoint()
             )
 
-    try:
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(stream_dir)
-            .writeStream.foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
+    _replay(docs, n_batches, _redelivery_guard(spark, state, merge))
+    state["index"] = _index_df()
+    out = state["out"]
+    for part in state["out_parts"]:
+        out = part if out is None else out.unionByName(part)
+    state["out"] = out
+    if _state_out is not None:  # test hook: inspect final index/counts
+        _state_out.update(state)
+    if out is None:
+        return spark.createDataFrame(
+            [], "doc_id long, batch_no long, is_dup boolean, dup_of long"
         )
-        q.awaitTermination()
-        state["index"] = _index_df()
-        out = state["out"]
-        for part in state["out_parts"]:
-            out = part if out is None else out.unionByName(part)
-        state["out"] = out
-        if _state_out is not None:  # test hook: inspect final index/counts
-            _state_out.update(state)
-        if out is None:
-            return spark.createDataFrame(
-                [], "doc_id long, batch_no long, is_dup boolean, dup_of long"
-            )
-        return out
-    finally:
-        shutil.rmtree(os.path.dirname(stream_dir), ignore_errors=True)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -735,37 +776,7 @@ def q90_incremental_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the sketch tier). The oracle builds the sketch over the whole
     corpus in one shot; merge-by-addition makes the two identical —
     the mergeability contract, gate-checked."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", (F.col("doc_id") % 3).alias("batch_no")
-    )
-    stream_dir = _write_batch_files(docs, "batch_no", 3)
-    empty = spark.createDataFrame([], "j int, bucket long, n long")
-    state = {"cells": empty, "seen": set()}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # at-least-once guard (q114's pattern): count-min cells merge
-        # by ADDITION — a redelivered batch would double-count
-        if batch_id in state["seen"]:
-            return
-        state["seen"].add(batch_id)
-        if batch_df.isEmpty():
-            return
-        _cms_merge(spark, state, batch_df, batch_id)
-
-    try:
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(stream_dir)
-            .writeStream.foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return state["cells"]
-    finally:
-        shutil.rmtree(os.path.dirname(stream_dir), ignore_errors=True)
+    return run_sink_family(spark, sf_dir, STATEFUL_SINK_FAMILIES["cms_q90"])
 
 
 # ---------------------------------------------------------------------------
@@ -774,73 +785,12 @@ def q90_incremental_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (``operators.similarity.ann_index_probe`` / ``ann_index_admit``,
 # literally shared code) driven by a real streaming query:
 # deterministic one-file-per-trigger micro-batches, the capped
-# per-cell index carried across batches inside ``foreachBatch``.
+# per-cell index carried across batches inside ``foreachBatch``
+# (the ``ann_q114`` family, merge step ``_ann_merge``).
 # Because the steps are shared and the batch boundaries identical,
 # the stream's accumulated probe output must hash-match q113's
 # declarative oracle — the driver certifies the STREAMING
 # maintenance path, not just the batch loop.
-def streaming_ann_maintenance(
-    spark: SparkSession,
-    vectors: DataFrame,
-    n_batches: int,
-    centroids: DataFrame,
-    k: int = 3,
-    cell_cap: int = 8,
-    admit: str = "distance",
-) -> DataFrame:
-    """Run incremental ANN index maintenance as a bounded
-    Structured Streaming job: ``vectors`` (vec_id, embedding,
-    batch) replays one batch per trigger; each micro-batch probes
-    the accumulated per-cell index for its exact-cosine top-k, then
-    is admitted under ``admit`` (see
-    ``similarity.incremental_ivf_topk`` for the two policies). At
-    scale the file source becomes kafka/kinesis and the carried
-    index lives in a table instead of a localCheckpoint chain — the
-    per-batch work (probe join ≤ cap × batch-cell rows, admission
-    re-rank ≤ cap + batch-cell rows per cell) is unchanged.
-    Returns (query_id, neighbor_id, cosine, rank) over all batches."""
-    stream_dir = _write_batch_files(vectors, "batch", n_batches)
-    state: dict = {
-        "index": None,
-        "counts": None,
-        "out": [],
-        "seen": set(),
-        "centroids": centroids,
-        "k": k,
-        "cell_cap": cell_cap,
-        "admit": admit,
-    }
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch is at-least-once: a transient failure can
-        # re-invoke the sink with the SAME batch_id.
-        # Arrival order is therefore derived from batch_id itself
-        # (== the file index under maxFilesPerTrigger=1 + oldest-
-        # first + availableNow), and replayed ids are skipped so a
-        # redelivery can't probe/admit the same batch twice.
-        if batch_id in state["seen"]:
-            return
-        state["seen"].add(batch_id)
-        if batch_df.isEmpty():
-            return
-        _ann_merge(spark, state, batch_df, batch_id)
-
-    try:
-        q = (
-            spark.readStream.schema(vectors.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(stream_dir)
-            .writeStream.foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return _ann_result(spark, state)
-    finally:
-        shutil.rmtree(os.path.dirname(stream_dir), ignore_errors=True)
-
-
 def _q114_oracle() -> str:
     from shopify_db_spark.plans.vectorops import _Q113_ORACLE
 
@@ -850,7 +800,7 @@ def _q114_oracle() -> str:
 @query("q114_streaming_ann", oracle=_q114_oracle())
 def q114_streaming_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q113's distance-admission incremental ANN as a REAL
-    Structured Streaming job (:func:`streaming_ann_maintenance`):
+    Structured Streaming job (the ``ann_q114`` sink family):
     the embeddings replay as three deterministic micro-batches
     (``vec_id % 3``, one file per trigger), ``foreachBatch`` probes
     then admits/evicts via the SAME step operators as the batch
@@ -859,27 +809,7 @@ def q114_streaming_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     certified equivalent by the driver itself.
 
     Returns (query_id, neighbor_id, cosine, rank)."""
-    from shopify_db_spark.plans.vectorops import (
-        _Q113_CAP,
-        _Q113_K,
-        _Q113_NBATCH,
-        CENTROID_MOD,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") % CENTROID_MOD == 0)
-    vecs = emb.withColumn(
-        "batch", (F.col("vec_id") % _Q113_NBATCH).cast("long")
-    )
-    return streaming_ann_maintenance(
-        spark,
-        vecs,
-        _Q113_NBATCH,
-        centroids,
-        k=_Q113_K,
-        cell_cap=_Q113_CAP,
-        admit="distance",
-    )
+    return run_sink_family(spark, sf_dir, STATEFUL_SINK_FAMILIES["ann_q114"])
 
 
 # ---------------------------------------------------------------------------
@@ -923,39 +853,7 @@ def q133_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     registers MAX-merged into the accumulated state inside
     ``foreachBatch``. Returns the final (source, idx, rho) register
     table — bit-identical to the one-shot batch sketch."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "source", (F.col("doc_id") % 3).alias("batch_no")
-    )
-    stream_dir = _write_batch_files(docs, "batch_no", 3)
-    empty = spark.createDataFrame([], "source string, idx long, rho int")
-    state = {"regs": empty, "seen": set()}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # at-least-once guard (q114's pattern) — the register
-        # MAX-merge is idempotent so a redelivery would be harmless
-        # here, but every stateful sink carries the guard uniformly
-        # (tests/test_streaming_realism.py asserts the discipline)
-        if batch_id in state["seen"]:
-            return
-        state["seen"].add(batch_id)
-        if batch_df.isEmpty():
-            return
-        _hll_merge(spark, state, batch_df, batch_id)
-
-    try:
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(stream_dir)
-            .writeStream.foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return state["regs"]
-    finally:
-        shutil.rmtree(os.path.dirname(stream_dir), ignore_errors=True)
+    return run_sink_family(spark, sf_dir, STATEFUL_SINK_FAMILIES["hll_q133"])
 
 
 # ---------------------------------------------------------------------------
@@ -992,37 +890,7 @@ def q144_streaming_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch histograms SUM-merged into the accumulated state
     inside ``foreachBatch``. Returns the final (source, bucket, cnt)
     register table — bit-identical to the one-shot batch sketch."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "source", (F.col("doc_id") % 3).alias("batch_no")
-    )
-    stream_dir = _write_batch_files(docs, "batch_no", 3)
-    empty = spark.createDataFrame([], "source string, bucket long, cnt long")
-    state = {"hist": empty, "seen": set()}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # at-least-once guard (q114's pattern): histogram registers
-        # merge by ADDITION — a redelivered batch would double-count
-        if batch_id in state["seen"]:
-            return
-        state["seen"].add(batch_id)
-        if batch_df.isEmpty():
-            return
-        _hist_merge(spark, state, batch_df, batch_id)
-
-    try:
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(stream_dir)
-            .writeStream.foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return state["hist"]
-    finally:
-        shutil.rmtree(os.path.dirname(stream_dir), ignore_errors=True)
+    return run_sink_family(spark, sf_dir, STATEFUL_SINK_FAMILIES["histogram_q144"])
 
 
 # ---------------------------------------------------------------------------
@@ -1100,58 +968,7 @@ def q155_streaming_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id % 3), per-batch shingle registers MAX-merged into 64
     rows of state, per-batch distinct estimate + growth. Returns
     (batch_no, register_sum, est_total, est_new)."""
-    from shopify_db_spark.plans.textops import hll_estimate
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", (F.col("doc_id") % 3).alias("batch_no")
-    )
-    stream_dir = _write_batch_files(docs, "batch_no", 3)
-    empty = spark.createDataFrame([], "idx long, rho int")
-    state = {"regs": empty, "out": [], "seen": set()}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # at-least-once guard (q114's pattern): the register MAX-merge
-        # is idempotent, but the per-batch OUTPUT row appended below
-        # is not — a redelivery would emit a duplicate curve point
-        if batch_id in state["seen"]:
-            return
-        state["seen"].add(batch_id)
-        if batch_df.isEmpty():
-            return
-        _novelty_merge(spark, state, batch_df, batch_id)
-
-    try:
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(stream_dir)
-            .writeStream.foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = spark.createDataFrame(
-            state["out"], "batch_no long, register_sum long"
-        )
-        prev = out.select(
-            (F.col("batch_no") + 1).alias("batch_no"),
-            F.col("register_sum").alias("__prev_sum"),
-        )
-        est = hll_estimate
-        return out.join(prev, "batch_no", "left").select(
-            "batch_no",
-            "register_sum",
-            est(F.col("register_sum")).alias("est_total"),
-            (
-                est(F.col("register_sum"))
-                - F.coalesce(
-                    est(F.col("__prev_sum")), F.lit(0.0)
-                )
-            ).alias("est_new"),
-        )
-    finally:
-        shutil.rmtree(os.path.dirname(stream_dir), ignore_errors=True)
+    return run_sink_family(spark, sf_dir, STATEFUL_SINK_FAMILIES["novelty_q155"])
 
 
 # ---------------------------------------------------------------------------
@@ -1195,66 +1012,25 @@ def q160_streaming_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact shift weights applied at finalize from the tracked max
     date. Returns (user_id, n_events, decayed_ppm,
     days_since_last) — q158's exact output."""
-    # event_id only derives the batch key; project it away before the
-    # batch-file write (guide §2.3)
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        F.col("ts").cast("date").alias("d"),
-        (F.col("event_id") % 3).alias("batch_no"),
-    )
-    stream_dir = _write_batch_files(ev, "batch_no", 3)
-    empty = spark.createDataFrame([], "user_id long, d date, cnt long")
-    state = {"hist": empty, "max_d": None, "seen": set()}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # at-least-once guard (q114's pattern): per-(user, day)
-        # counts merge by ADDITION — a redelivery would double-count
-        if batch_id in state["seen"]:
-            return
-        state["seen"].add(batch_id)
-        if batch_df.isEmpty():
-            return
-        _engagement_merge(spark, state, batch_df, batch_id)
-
-    try:
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(stream_dir)
-            .writeStream.foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # exact shift weights from the tracked max date — clamp at
-        # 20 (10⁶ < 2²⁰ ⇒ weight exactly 0) and BIGINT base; Spark
-        # wraps the shift amount mod the base width, so an int base
-        # wraps at 32 (q158 section comment)
-        return _engagement_result(spark, state)
-    finally:
-        shutil.rmtree(os.path.dirname(stream_dir), ignore_errors=True)
+    return run_sink_family(spark, sf_dir, STATEFUL_SINK_FAMILIES["engagement_q160"])
 
 
 # ---------------------------------------------------------------------------
-# Stateful-sink family registry.
+# Stateful-sink families: the merge, initial state and result of each
+# stateful query above, and the registry that names them.
 #
-# Every foreachBatch sink above follows one shape: seen-batch_id
-# guard → isEmpty skip → family-specific MERGE of the micro-batch
-# into a small durable state (register table / histogram / sketch
-# cells / per-cell ANN index). The merge steps are module-level
-# functions shared VERBATIM between the production queries and the
-# restart-recovery sweep in tests/test_streaming_realism.py: the
-# sweep kills each family's stream between batches and resumes a
-# NEW query from the SAME checkpoint (durable state + continued
-# batch-id sequence — the production story, where state lives in a
-# table and the source is kafka/kinesis), asserting the recovered
-# final state equals the uninterrupted run's. Oracles are untouched:
-# the production queries call the same merge functions they always
-# inlined.
-
-from dataclasses import dataclass as _dataclass
-from typing import Callable as _Callable
+# Every stateful query is ``run_sink_family`` over its
+# ``STATEFUL_SINK_FAMILIES`` entry: ``_redelivery_guard`` (seen
+# batch_id → skip, empty batch → skip) wraps the family's MERGE of
+# the micro-batch into a small durable state (register table /
+# histogram / sketch cells / per-cell ANN index), and the result is
+# read from the final state. The restart-recovery sweep in
+# tests/test_streaming_realism.py runs the same entries: it kills
+# each family's stream between batches and resumes a NEW query from
+# the SAME checkpoint (durable state + continued batch-id sequence —
+# the production story, where state lives in a table and the source
+# is kafka/kinesis), asserting the recovered result equals the
+# uninterrupted run's.
 
 
 def _hll_merge(
@@ -1396,6 +1172,29 @@ def _novelty_merge(
     state["out"].append((int(bno), int(row["register_sum"])))
 
 
+def _novelty_result(spark: SparkSession, state: dict) -> DataFrame:
+    """q155's finalize: each batch's distinct-shingle estimate and its
+    growth over the previous batch's estimate."""
+    from shopify_db_spark.plans.textops import hll_estimate as est
+
+    out = spark.createDataFrame(
+        state["out"], "batch_no long, register_sum long"
+    )
+    prev = out.select(
+        (F.col("batch_no") + 1).alias("batch_no"),
+        F.col("register_sum").alias("__prev_sum"),
+    )
+    return out.join(prev, "batch_no", "left").select(
+        "batch_no",
+        "register_sum",
+        est(F.col("register_sum")).alias("est_total"),
+        (
+            est(F.col("register_sum"))
+            - F.coalesce(est(F.col("__prev_sum")), F.lit(0.0))
+        ).alias("est_new"),
+    )
+
+
 def _engagement_merge(
     spark: SparkSession, state: dict, batch_df: DataFrame, batch_id: int
 ) -> None:
@@ -1429,12 +1228,11 @@ def _engagement_merge(
 def _engagement_result(spark: SparkSession, state: dict) -> DataFrame:
     """q160's finalize: exact shift weights from the max date, which
     is derived here from the merged histogram in one 1-row aggregate
-    (see _engagement_merge; a pre-derived ``max_d`` — the recovery
-    test's inline sink still tracks one — takes precedence)."""
-    max_d = state.get("max_d")
-    if max_d is None:
-        max_d = state["hist"].agg(F.max("d")).collect()[0][0]
-    now_d = F.lit(max_d)
+    (see _engagement_merge). The shift clamps at 20 (10⁶ < 2²⁰ ⇒
+    weight exactly 0) on a BIGINT base; Spark wraps the shift amount
+    mod the base width, so an int base would wrap at 32 (q158
+    section comment)."""
+    now_d = F.lit(state["hist"].agg(F.max("d")).collect()[0][0])
     aged = state["hist"].select(
         "user_id",
         "cnt",
@@ -1457,9 +1255,17 @@ def _engagement_result(spark: SparkSession, state: dict) -> DataFrame:
 def _ann_merge(
     spark: SparkSession, state: dict, batch_df: DataFrame, batch_id: int
 ) -> None:
-    """streaming_ann_maintenance's probe-then-admit step (shared
-    with q113's batch loop via operators.similarity; see the q114
-    section comment for the repartition rationale)."""
+    """q114's probe-then-admit step (shared with q113's batch loop
+    via operators.similarity): the micro-batch probes the
+    accumulated per-cell index for its exact-cosine top-k, then is
+    admitted under ``state["admit"]`` (see
+    ``similarity.incremental_ivf_topk`` for the two policies).
+    Arrival order is the batch id, which equals the file index under
+    one file per trigger, oldest first. At scale the file source
+    becomes kafka/kinesis and the carried index lives in a table
+    instead of a localCheckpoint chain — the per-batch work (probe
+    join ≤ cap × batch-cell rows, admission re-rank ≤ cap +
+    batch-cell rows per cell) is unchanged."""
     from shopify_db_spark.operators.similarity import (
         ann_index_admit,
         ann_index_probe,
@@ -1494,19 +1300,6 @@ def _ann_merge(
     )
 
 
-@_dataclass(frozen=True)
-class SinkFamily:
-    """One stateful-sink family: how to build its deterministic
-    batched source, initial state, the shared merge step, and the
-    final comparable state frame."""
-
-    source: "_Callable[[SparkSession, str], DataFrame]"  # has batch col
-    batch_col: str
-    init: "_Callable[[SparkSession, str], dict]"
-    merge: "_Callable[[SparkSession, dict, DataFrame, int], None]"
-    result: "_Callable[[SparkSession, dict], DataFrame]"
-
-
 def _docs_source(cols: list[str]):
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         return load_table(spark, sf_dir, "documents").select(
@@ -1517,8 +1310,9 @@ def _docs_source(cols: list[str]):
 
 
 def _events_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # event_id only derives the batch key; it is projected away before
+    # the batch-file write (guide §2.3)
     return load_table(spark, sf_dir, "events").select(
-        "event_id",
         "user_id",
         F.col("ts").cast("date").alias("d"),
         (F.col("event_id") % 3).alias("batch_no"),
@@ -1545,7 +1339,6 @@ def _ann_init(spark: SparkSession, sf_dir: str) -> dict:
         "index": None,
         "counts": None,
         "out": [],
-        "seen": set(),
         "centroids": emb.filter(F.col("vec_id") % CENTROID_MOD == 0),
         "k": _Q113_K,
         "cell_cap": _Q113_CAP,
@@ -1554,6 +1347,7 @@ def _ann_init(spark: SparkSession, sf_dir: str) -> dict:
 
 
 def _ann_result(spark: SparkSession, state: dict) -> DataFrame:
+    """q114's output: every batch's probe part, unioned."""
     out = None
     for part in state["out"]:
         out = part if out is None else out.unionByName(part)
@@ -1817,40 +1611,7 @@ def q163_streaming_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batches partition documents); finalize is q40's top-100
     window. Oracle: q40's, verbatim — the stream must reproduce the
     one-shot batch statistics bit-for-bit."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", (F.col("doc_id") % 3).alias("batch_no")
-    )
-    stream_dir = _write_batch_files(docs, "batch_no", 3)
-    empty = spark.createDataFrame([], "term string, tf long, df long")
-    # cap=None: exact vocabulary (the gated default — oracle is q40's
-    # verbatim). Set an int to bound state at 100 TB; see
-    # _term_stats_prune for the count-min-certified top-K semantics.
-    state = {"stats": empty, "seen": set(), "cap": None}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # at-least-once guard (q114's pattern): tf/df merge by
-        # ADDITION — a redelivered batch would double-count
-        if batch_id in state["seen"]:
-            return
-        state["seen"].add(batch_id)
-        if batch_df.isEmpty():
-            return
-        _term_stats_merge(spark, state, batch_df, batch_id)
-
-    try:
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(stream_dir)
-            .writeStream.foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return _term_stats_result(spark, state)
-    finally:
-        shutil.rmtree(os.path.dirname(stream_dir), ignore_errors=True)
+    return run_sink_family(spark, sf_dir, STATEFUL_SINK_FAMILIES["term_stats_q163"])
 
 
 def _reservoir_topk(df: DataFrame) -> DataFrame:
@@ -1904,7 +1665,6 @@ def _reservoir_init(spark: SparkSession, sf_dir: str) -> dict:
         "res": spark.createDataFrame(
             [], "source string, doc_id long, weight long, es_key double"
         ),
-        "seen": set(),
     }
 
 
@@ -1948,122 +1708,79 @@ def q165_streaming_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by construction, the streaming-sampler shape a 100 TB
     ingest would run. Cites reference scope: the reference has no
     sampler; this extends the curation tier (SURVEY §2-extension)."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars",
-        (F.col("doc_id") % 3).alias("batch_no"),
-    )
-    stream_dir = _write_batch_files(docs, "batch_no", 3)
-    state = _reservoir_init(spark, sf_dir)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # at-least-once guard (the registry-enforced pattern); the
-        # top-K merge is idempotent anyway — belt and braces
-        if batch_id in state["seen"]:
-            return
-        state["seen"].add(batch_id)
-        if batch_df.isEmpty():
-            return
-        _reservoir_merge(spark, state, batch_df, batch_id)
-
-    try:
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(stream_dir)
-            .writeStream.foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return _reservoir_result(spark, state)
-    finally:
-        shutil.rmtree(os.path.dirname(stream_dir), ignore_errors=True)
+    return run_sink_family(spark, sf_dir, STATEFUL_SINK_FAMILIES["reservoir_q165"])
 
 
 STATEFUL_SINK_FAMILIES: dict[str, SinkFamily] = {
     "hll_q133": SinkFamily(
         source=_docs_source(["doc_id", "text", "source"]),
-        batch_col="batch_no",
         init=lambda spark, sf: {
             "regs": spark.createDataFrame(
                 [], "source string, idx long, rho int"
             ),
-            "seen": set(),
         },
         merge=_hll_merge,
         result=lambda spark, state: state["regs"],
     ),
     "histogram_q144": SinkFamily(
         source=_docs_source(["doc_id", "text", "source"]),
-        batch_col="batch_no",
         init=lambda spark, sf: {
             "hist": spark.createDataFrame(
                 [], "source string, bucket long, cnt long"
             ),
-            "seen": set(),
         },
         merge=_hist_merge,
         result=lambda spark, state: state["hist"],
     ),
     "cms_q90": SinkFamily(
         source=_docs_source(["doc_id", "text"]),
-        batch_col="batch_no",
         init=lambda spark, sf: {
             "cells": spark.createDataFrame([], "j int, bucket long, n long"),
-            "seen": set(),
         },
         merge=_cms_merge,
         result=lambda spark, state: state["cells"],
     ),
     "novelty_q155": SinkFamily(
         source=_docs_source(["doc_id", "text"]),
-        batch_col="batch_no",
         init=lambda spark, sf: {
             "regs": spark.createDataFrame([], "idx long, rho int"),
             "out": [],
-            "seen": set(),
         },
         merge=_novelty_merge,
-        result=lambda spark, state: spark.createDataFrame(
-            state["out"] or [(-1, -1)], "batch_no long, register_sum long"
-        ),
+        result=_novelty_result,
     ),
     "engagement_q160": SinkFamily(
         source=_events_source,
-        batch_col="batch_no",
         init=lambda spark, sf: {
             "hist": spark.createDataFrame(
                 [], "user_id long, d date, cnt long"
             ),
-            "max_d": None,
-            "seen": set(),
         },
         merge=_engagement_merge,
         result=_engagement_result,
     ),
     "ann_q114": SinkFamily(
         source=_emb_source,
-        batch_col="batch_no",
         init=_ann_init,
         merge=_ann_merge,
         result=_ann_result,
     ),
     "reservoir_q165": SinkFamily(
         source=_docs_source(["doc_id", "source", "n_chars"]),
-        batch_col="batch_no",
         init=_reservoir_init,
         merge=_reservoir_merge,
         result=_reservoir_result,
     ),
     "term_stats_q163": SinkFamily(
         source=_docs_source(["doc_id", "text"]),
-        batch_col="batch_no",
+        # cap=None: exact vocabulary (the gated default — oracle is
+        # q40's verbatim). Set an int to bound state at 100 TB; see
+        # _term_stats_prune for the count-min-certified top-K
+        # semantics.
         init=lambda spark, sf: {
             "stats": spark.createDataFrame(
                 [], "term string, tf long, df long"
             ),
-            "seen": set(),
             "cap": None,
         },
         merge=_term_stats_merge,

@@ -13,8 +13,8 @@ synchronously over the static benchmark parquet:
   ``foreachBatch`` into the CommerceStore (micro-batch MERGE: the
   streaming twin of the reference's per-page upsert loop).
 * :func:`windowed_event_counts` / :func:`sessionized_events` —
-  event-time tumbling windows and native ``session_window``
-  aggregation with watermarks for late data.
+  event-time tumbling or hopping windows and native
+  ``session_window`` aggregation with watermarks for late data.
 """
 
 from __future__ import annotations
@@ -69,42 +69,18 @@ def _as_event_time(events: DataFrame, col: str = "ts") -> tuple[DataFrame, bool]
 
 
 def windowed_event_counts(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Tumbling event-time windows with a late-data watermark: the
-    streaming twin of catalog q15."""
-    events, was_ntz = _as_event_time(events)
-    start = F.col("window.start")
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(12,4)")).alias("total_value_d"),
-        )
-        .select(
-            (start.cast("timestamp_ntz") if was_ntz else start).alias(
-                "window_start"
-            ),
-            F.col("event_type"),
-            F.col("n_events"),
-            F.round(F.col("total_value_d"), 2).cast("double").alias("total_value"),
-        )
-    )
-
-
-def hopping_event_counts(
     events: DataFrame,
     window: str = "1 hour",
-    slide: str = "30 minutes",
+    slide: str | None = None,
     watermark: str = "2 hours",
 ) -> DataFrame:
-    """Hopping (sliding) event-time windows with a late-data
-    watermark: the streaming twin of catalog q83, exactly as
-    :func:`windowed_event_counts` is q15's. Each event lands in
-    window/slide overlapping windows (one Expand in the micro-batch
-    plan — no self-join); state size grows by the same factor, which
-    is the documented cost of overlap in Structured Streaming."""
+    """Event-time windows with a late-data watermark. Tumbling when
+    ``slide`` is None (the streaming twin of catalog q15); with a
+    ``slide`` shorter than ``window`` they hop (the twin of q83): each
+    event lands in window/slide overlapping windows (one Expand in the
+    micro-batch plan, no self-join), and state grows by the same
+    factor, which is the documented cost of overlap in Structured
+    Streaming."""
     events, was_ntz = _as_event_time(events)
     start = F.col("window.start")
     return (

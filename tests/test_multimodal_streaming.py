@@ -258,7 +258,7 @@ def test_write_batch_files_tolerates_empty_batch(spark):
     from shopify_db_spark.plans.streamops import _write_batch_files
 
     df = spark.createDataFrame([(0, "a"), (2, "b")], "batch_no int, v string")
-    stream_dir = _write_batch_files(df, "batch_no", 3)
+    stream_dir = _write_batch_files(df, 3)
     try:
         assert sorted(os.listdir(stream_dir)) == [
             "batch-0.parquet",
@@ -326,7 +326,9 @@ def test_hopping_counts_match_batch(spark):
     assignments of the tumbling twin (each event in exactly two
     windows at this window:slide ratio)."""
     streamed = SJ.run_bounded(
-        SJ.hopping_event_counts(SJ.stream_events(spark, SF_SMOKE))
+        SJ.windowed_event_counts(
+            SJ.stream_events(spark, SF_SMOKE), slide="30 minutes"
+        )
     )
     batch_events = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
     batch = (
