@@ -6,7 +6,12 @@
 
 ``value`` is the total wall time of all queries (each executed to
 completion with a cheap count-style action — results are not
-collected to the driver, matching how the engine would run at scale).
+collected to the driver, matching how the engine would run at scale)
+plus the cold builds of the session artifacts (:data:`ARTIFACTS`).
+Each line item is the best of ``$SPARK_GRAFT_BENCH_RUNS`` (default 2)
+runs. The full payload goes to ``$SPARK_GRAFT_BENCH_OUT`` (default
+``BENCH_local.json`` beside this file); stdout carries the compact
+line of :func:`compact_line`.
 
 ``SPARK_GRAFT_LAYOUT=partitioned`` first materializes the fact
 tables (events / orders / lineitem) as date-partitioned directories
@@ -23,8 +28,14 @@ import json
 import os
 import sys
 import time
+from typing import Callable, NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from shopify_db_spark.plans.artifacts import evict  # noqa: E402
+from shopify_db_spark.plans.commerce import invoice_table  # noqa: E402
+from shopify_db_spark.plans.curation import simhash_clusters  # noqa: E402
+from shopify_db_spark.plans.textops import bpe_encoded_table  # noqa: E402
 
 # fact table -> (partitioning ts/date column, granularity). The
 # 7-year TPC-H facts partition by month (84 healthy directories);
@@ -73,200 +84,122 @@ def materialize_partitioned(spark, sf_dir: str) -> str:
     return out
 
 
-#: compact aliases for the artifact line items — the full names
-#: in the compact line pushed it past the driver's ~2000-char
-#: stdout tail window (the full 4-dp payload with full names is
-#: always in BENCH_local.json, committed)
-_ARTIFACT_SHORT = {
-    "artifact_materialization": "art_clu",
-    "artifact_invoice_table": "art_inv",
-    "artifact_bpe_encoded": "art_bpe",
-}
+class Artifact(NamedTuple):
+    label: str  # full payload key
+    short: str  # compact-line key, also scale_curve's --artifacts name
+    memo: str  # plans/artifacts.py memo name, evicted before each build
+    build: Callable
+
+    def cold_build(self, spark, sf_dir: str) -> None:
+        """Build and execute the artifact with its memo entry evicted
+        first, so the build is cold even when warm-up already made
+        it."""
+        evict(self.memo, spark, sf_dir)
+        noop_write(self.build(spark, sf_dir))
+
+
+#: Session-memoized artifacts (plans/artifacts.py): the near-dup
+#: cluster map (q50/q125/q137/q146), the invoice table (q20/q61) and
+#: the BPE-encoded corpus (q115/q145). Under best-of-N timing a cold
+#: build would land in some consumer's discarded first run and appear
+#: in no reported number, so each cold build is timed as its own line
+#: item and consumers measure artifact read + their own work.
+ARTIFACTS = (
+    Artifact("artifact_materialization", "art_clu", "simhash_clusters", simhash_clusters),
+    Artifact("artifact_invoice_table", "art_inv", "invoice_table", invoice_table),
+    Artifact("artifact_bpe_encoded", "art_bpe", "bpe_encoded", bpe_encoded_table),
+)
+
+#: the driver keeps only the last ~2000 chars of stdout; a longer
+#: line loses its opening brace and becomes unparseable
+COMPACT_MAX_CHARS = 1900
 
 
 def _short(name: str) -> str:
-    if name in _ARTIFACT_SHORT:
-        return _ARTIFACT_SHORT[name]
+    for art in ARTIFACTS:
+        if art.label == name:
+            return art.short
     head = name.split("_", 1)[0]
-    return head if head not in (name,) and head.startswith("q") else name
+    return head if head != name and head.startswith("q") else name
 
 
-#: self-adjudication thresholds (VERDICT r12 item 3): flag only
-#: queries whose machine-factor-NORMALIZED time regresses beyond the
-#: factor, and only when the committed reference time clears the
-#: floor (sub-second entries are scheduler noise — the r9 hygiene
-#: sweep). The machine factor is the MEDIAN per-query raw ratio vs
-#: the committed clean window, not the canary ratio: the canary is a
-#: ~0.1 s fixed job dominated by scheduling latency, and its swing is
-#: NOT proportional to workload throughput (first live run: canary
-#: ratio 0.67 while the 107-query median raw ratio was 0.94 — pure
-#: canary normalization branded a FASTER run with 31 fake
-#: regressions). The workload itself, summarized robustly, is the
-#: best estimate of the common machine factor; the canary readings
-#: stay in the payload as window evidence.
-NORM_REGRESSION_FLAG = 1.5
-NORM_FLOOR_SEC = 0.5
-NORM_MIN_COMMON = 5
-
-#: rep-median auto-adjudication (VERDICT r13 item 3): a sub-2 s
-#: query's single best-of-two is scheduler-dominated — r13 flagged
-#: q46 (1.54×) and q56 (1.58×) with ZERO code changes behind them.
-#: When the normalized rule flags a query whose committed reference
-#: time is below this bound, re-run it REP_MEDIAN_RUNS more times and
-#: adjudicate on the MEDIAN (the r8 q63 protocol, SCALE.md): the flag
-#: is either CONFIRMED (median still regresses normalized) or CLEARED
-#: in the artifact itself, with the rep evidence recorded either way.
-REP_MEDIAN_REF_SEC = 2.0
-REP_MEDIAN_RUNS = 3
+def noop_write(df) -> None:
+    """Execute every operator of ``df`` without shipping rows to the
+    driver."""
+    df.write.format("noop").mode("overwrite").save()
 
 
-def _rep_verdict(rep_median: float, ref_t: float, factor: float) -> tuple[float, str]:
-    normed = (rep_median / ref_t) / factor
-    return round(normed, 2), (
-        "cleared" if normed <= NORM_REGRESSION_FLAG else "confirmed"
-    )
+def best_of(spark, run: Callable[[], None], runs: int) -> tuple[float | None, str | None]:
+    """(best wall seconds, first error) over ``runs`` calls of ``run``.
 
-NORMALIZATION_RULE = (
-    f"machine factor = MEDIAN per-query raw ratio vs the committed "
-    f"clean window (git show HEAD:BENCH_local.json); flag only queries "
-    f"whose ratio/machine-factor exceeds {NORM_REGRESSION_FLAG}, "
-    f"reference raw time >= {NORM_FLOOR_SEC}s; a run-wide slowdown "
-    f"moves the median, not the flags - machine noise self-adjudicates "
-    f"to zero"
-)
-
-
-def _normalize_against_ref(
-    timings: dict[str, float],
-    ref_payload: dict | None,
-    sf: str,
-    layout: str,
-) -> tuple[dict[str, float], list[str], float | None]:
-    """Per-query ratio of this run's time to the committed
-    clean-window reference's, divided by the run-wide MEDIAN ratio
-    (the robust common machine factor), plus the flagged list and the
-    factor itself. Empty when the reference is missing, from a
-    different sf/layout, or shares < NORM_MIN_COMMON rateable
-    queries. Tolerates a compact-format reference (short keys)."""
-    if (
-        not ref_payload
-        or str(ref_payload.get("sf")) != str(sf)
-        or ref_payload.get("layout", "flat") != layout
-    ):
-        return {}, [], None
-    ref_q = ref_payload.get("queries", {})
-    raw_ratio: dict[str, float] = {}
-    for n, t in timings.items():
-        ref_t = ref_q.get(n, ref_q.get(_short(n)))
-        if not ref_t or ref_t < NORM_FLOOR_SEC:
-            continue
-        raw_ratio[n] = t / ref_t
-    if len(raw_ratio) < NORM_MIN_COMMON:
-        return {}, [], None
-    import statistics
-
-    factor = statistics.median(raw_ratio.values())
-    if factor <= 0:
-        return {}, [], None
-    vs_committed = {n: round(r / factor, 2) for n, r in raw_ratio.items()}
-    regressions = [
-        n for n, r in vs_committed.items() if r > NORM_REGRESSION_FLAG
-    ]
-    return vs_committed, regressions, round(factor, 3)
-
-
-def _canary(spark) -> float | None:
-    """Fixed-cost environment canary (VERDICT r8 #3): a constant-size
-    scan+aggregate over the sf0.001 lineitem file (same input no
-    matter what SF the bench runs at), timed best-of-two. Run once
-    right after warmup and once after the last query, its two
-    readings separate host/window elevation (both readings high, or
-    last ≫ first) from genuine per-query regressions (canary flat,
-    query slow) — arithmetically, instead of inferring from sibling
-    runs."""
-    from pyspark.sql import functions as F
-
-    path = "/root/testdata/sf0.001/lineitem.parquet"
-    if not os.path.exists(path):
-        return None
+    The minimum is the steady-state estimator for a repeatedly
+    executed plan: single runs swing ±50 % with GC timing, the
+    ContextCleaner backlog and OS cache state. Every rep ends with
+    ``clearCache`` + ``gc`` so caches and checkpoint RDDs an operator
+    leaves behind belong to one execution only. The first exception
+    stops the loop; its text comes back with the best time of the
+    reps before it (None if there were none)."""
     best = None
-    for _ in range(2):
-        t0 = time.perf_counter()
-        (
-            spark.read.parquet(path)
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(
-                F.sum("l_quantity").alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-        elapsed = time.perf_counter() - t0
+    for _ in range(runs):
+        try:
+            t0 = time.perf_counter()
+            run()
+            elapsed = time.perf_counter() - t0
+        except Exception as exc:  # noqa: BLE001 - isolate per line item
+            return best, f"{type(exc).__name__}: {exc}"
+        finally:
+            spark.catalog.clearCache()
+            gc.collect()
         best = elapsed if best is None else min(best, elapsed)
-    return round(best, 4)
+    return best, None
 
 
-def renormalize(path: str) -> None:
-    """Recompute the DERIVED self-adjudication tiers of an existing
-    full-format bench payload in place (raw timings untouched): the
-    vs_committed ratios against the committed reference, the flagged
-    list, and the machine factor. Lets a rule change re-adjudicate a
-    20-minute run without re-measuring — ``python bench.py
-    --renormalize [BENCH_local.json]``."""
-    import subprocess
+def _rounded(seconds: float, ndigits: int | None) -> float | int:
+    """``seconds`` rounded, printed without a trailing ``.0``."""
+    r = round(seconds, ndigits)
+    return int(r) if r == int(r) else r
 
-    with open(path) as fh:
-        payload = json.load(fh)
-    try:
-        ref_payload = json.loads(
-            subprocess.run(
-                ["git", "show", "HEAD:BENCH_local.json"],
-                cwd=os.path.dirname(os.path.abspath(__file__)),
-                capture_output=True, text=True, check=True,
-            ).stdout
-        )
-    except Exception:  # noqa: BLE001
-        ref_payload = None
-    vs, regr, factor = _normalize_against_ref(
-        payload.get("queries", {}),
-        ref_payload,
-        str(payload.get("sf")),
-        payload.get("layout", "flat"),
+
+def compact_line(
+    timings: dict[str, float],
+    errors: dict[str, str],
+    sf: float | str,
+    full_name: str,
+    layout: str = "flat",
+) -> str:
+    """The one stdout JSON line, at most :data:`COMPACT_MAX_CHARS`
+    long: short ``qNN``/``art_*`` keys (full names if two short keys
+    collide) and per-item seconds at 2 dp, coarsened to 1 dp and then
+    to whole seconds while the line is too long. The full payload
+    keeps 4 dp."""
+    shorts = [_short(n) for n in timings]
+    keys = (
+        {_short(n): n for n in timings}
+        if len(set(shorts)) == len(shorts)
+        else {n: n for n in timings}
     )
-    # re-apply stored rep-median evidence (measured in the original
-    # window) under the recomputed factor: a rep-cleared flag stays
-    # cleared without re-measuring
-    if regr and factor:
-        ref_q = (ref_payload or {}).get("queries", {})
-        kept = []
-        for n in regr:
-            rep = payload.get("rep_adjudication", {}).get(n)
-            ref_t = ref_q.get(n, ref_q.get(_short(n)))
-            if rep and ref_t:
-                normed, verdict = _rep_verdict(rep["rep_median"], ref_t, factor)
-                rep["vs_committed"], rep["verdict"] = normed, verdict
-                if verdict == "cleared":
-                    continue
-            kept.append(n)
-        regr = kept
-    for k in ("machine_factor_vs_committed", "vs_committed_clean_window",
-              "normalized_regressions", "normalization_rule"):
-        payload.pop(k, None)
-    if vs:
-        payload["machine_factor_vs_committed"] = factor
-        payload["vs_committed_clean_window"] = vs
-        payload["normalized_regressions"] = sorted(regr)
-        payload["normalization_rule"] = NORMALIZATION_RULE
-    with open(path, "w") as fh:
-        json.dump(payload, fh, indent=1, sort_keys=True)
-        fh.write("\n")
-    print(json.dumps({
-        "machine_factor": factor,
-        "n_rated": len(vs),
-        "normalized_regressions": sorted(regr),
-    }))
+    compact: dict = {
+        "metric": "catalog_total_wall",
+        "value": round(sum(timings.values()), 2),
+        "unit": "sec",
+        "queries": {},
+        "sf": sf,
+        "n_queries": len(timings),
+        "n_errors": len(errors),
+        "full": full_name,
+    }
+    if errors:
+        compact["error_queries"] = sorted(_short(n) for n in errors)[:20]
+    if layout != "flat":
+        compact["layout"] = layout
+    for ndigits in (2, 1, None):
+        compact["queries"] = {
+            k: _rounded(timings[v], ndigits) for k, v in sorted(keys.items())
+        }
+        line = json.dumps(compact, separators=(",", ":"))
+        if len(line) <= COMPACT_MAX_CHARS:
+            break
+    return line
 
 
 def main() -> None:
@@ -282,188 +215,36 @@ def main() -> None:
     specs = load_all()
 
     # Steady-state measurement: execute every plan once at the
-    # smallest SF first, so the timed sf0.1 numbers measure
-    # execution, not whole-stage-codegen JIT (the big invoice plan
-    # pays ~13 s of one-time Janino compilation, cached across SF
-    # dirs — measured). This matches production reality: plans run
-    # repeatedly against a warm codegen cache.
+    # smallest SF first, so the timed numbers measure execution, not
+    # whole-stage-codegen JIT (the big invoice plan pays ~13 s of
+    # one-time Janino compilation, cached across SF dirs). Plans in
+    # production run repeatedly against a warm codegen cache.
     warm_sf = "/root/testdata/sf0.001"
     if os.path.isdir(warm_sf):
         for spec in specs.values():
             try:
-                spec.fn(spark, warm_sf).write.format("noop").mode(
-                    "overwrite"
-                ).save()
+                noop_write(spec.fn(spark, warm_sf))
             except Exception:  # noqa: BLE001 - warmup must never fail the bench
                 pass
-
-    # Queries are timed as independent runs: caches an operator
-    # persists internally (edge lists, numbering frames) belong to
-    # ONE query execution and are dropped between queries — without
-    # this, 54 queries of leaked cache + checkpoint RDDs degrade the
-    # tail of the catalog by several ×(measured).
     spark.catalog.clearCache()
 
-    canary_first = _canary(spark)
-
-    # Each query is timed as the best of two back-to-back runs:
-    # single-run numbers swing ±50 % with GC timing, ContextCleaner
-    # backlog from earlier queries, and OS cache state (measured:
-    # q01 2.0-5.0 s across identical runs), and the minimum is the
-    # standard steady-state estimator for a repeatedly-executed plan.
-    # A query that throws must never zero out the whole round's
-    # numbers (BENCH_r02/r03 died at one AnalysisException): each
-    # query is isolated — failures are recorded and the run continues.
+    # A line item that throws never zeroes the run: its error is
+    # recorded and the bench goes on.
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
 
-    # Session-memoized materialized artifacts (plans/artifacts.py):
-    # the near-dup cluster table (q50/q125/q137/q146) and the invoice
-    # table (q20/q61) — the materialized-artifact shapes a 100 TB
-    # corpus/store sync would use (the reference itself writes
-    # invoices to a Postgres table its verify suite reads). Under
-    # best-of-two timing a cold build would land in some consumer's
-    # FIRST (discarded) run and appear in NO reported number
-    # (round-10 verdict). Time each cold build explicitly and report
-    # it as its own line item so ``catalog_total_wall`` honestly
-    # includes the derivation; consumers then measure their true
-    # artifact-read + own-work cost.
-    from shopify_db_spark.plans.artifacts import evict
-    from shopify_db_spark.plans.commerce import invoice_table
-    from shopify_db_spark.plans.curation import simhash_clusters
-    from shopify_db_spark.plans.textops import bpe_encoded_table
-
-    for label, artifact_name, builder in (
-        ("artifact_materialization", "simhash_clusters", simhash_clusters),
-        ("artifact_invoice_table", "invoice_table", invoice_table),
-        ("artifact_bpe_encoded", "bpe_encoded", bpe_encoded_table),
-    ):
-        try:
-            # evict any memo hit (the warm-up loop builds artifacts
-            # when warm_sf == sf_dir) so the timed build is COLD —
-            # and, like every query, take the best of ``runs`` cold
-            # builds (evict between reps keeps each rep cold). The
-            # former single-shot timing was the only unreplicated
-            # number in the file and caught a 10x GC/JIT outlier in
-            # round 14 (art_bpe 35.7 s vs 4.7 s on an immediate
-            # isolated re-run); measurement fix declared in
-            # OPTIMIZATION_r14.md, old numbers kept in BENCH_r13.
-            best = None
-            for _ in range(runs):
-                evict(artifact_name, spark, sf_dir)
-                t0 = time.perf_counter()
-                builder(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                elapsed = time.perf_counter() - t0
-                best = elapsed if best is None else min(best, elapsed)
-            timings[label] = round(best, 4)
-        except Exception as exc:  # noqa: BLE001 - isolate like any query
-            errors[label] = f"{type(exc).__name__}: {exc}"[:500]
-
-    for name, spec in sorted(specs.items()):
-        best = None
-        for _ in range(runs):
-            df = None
-            try:
-                t0 = time.perf_counter()
-                df = spec.fn(spark, sf_dir)
-                # Force full execution of every operator without
-                # shipping rows to the driver.
-                df.write.format("noop").mode("overwrite").save()
-                elapsed = time.perf_counter() - t0
-            except Exception as exc:  # noqa: BLE001 - isolate per query
-                errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-                break
-            finally:
-                spark.catalog.clearCache()
-                # Drop py4j refs so ContextCleaner can reap
-                # checkpoint RDDs.
-                del df
-                gc.collect()
-            best = elapsed if best is None else min(best, elapsed)
+    def record(name: str, run: Callable[[], None]) -> None:
+        best, err = best_of(spark, run, runs)
         if best is not None:
             timings[name] = round(best, 4)
+        if err is not None:
+            errors[name] = err[:500]
 
-    canary_last = _canary(spark)
-
-    total = round(sum(timings.values()), 4)
-
-    # ---- normalized self-adjudication (VERDICT r12 item 3). Raw
-    # seconds swing with host load (r12's driver run read 274.9 s vs
-    # the same tree's clean-window 229.6 s). The payload carries times
-    # in canary units (window evidence), and a vs_committed tier
-    # normalized by the MEDIAN per-query ratio against the committed
-    # clean window — see _normalize_against_ref for why the median,
-    # not the canary, is the machine factor.
-    canary_mean = None
-    if canary_first and canary_last:
-        canary_mean = round((canary_first + canary_last) / 2, 4)
-    normalized = (
-        {n: round(t / canary_mean, 2) for n, t in timings.items()}
-        if canary_mean
-        else {}
-    )
-    ref_payload = None
-    try:
-        import subprocess
-
-        ref_raw = subprocess.run(
-            ["git", "show", "HEAD:BENCH_local.json"],
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-            capture_output=True, text=True, check=True,
-        ).stdout
-        ref_payload = json.loads(ref_raw)
-    except Exception:  # noqa: BLE001 - no git/first run: skip the ratio tier
-        ref_payload = None
-    vs_committed, regressions, machine_factor = _normalize_against_ref(
-        timings, ref_payload, sf, layout
-    )
-
-    # rep-median auto-adjudication of sub-2 s flags (VERDICT r13
-    # item 3): re-measure each flagged fast query REP_MEDIAN_RUNS
-    # more times in the SAME window and adjudicate on the median —
-    # a flag leaves the artifact either confirmed or cleared, never
-    # live-but-unexplained.
-    rep_adjudication: dict[str, dict] = {}
-    if regressions and machine_factor:
-        import statistics
-
-        ref_q = (ref_payload or {}).get("queries", {})
-        still_flagged: list[str] = []
-        for n in sorted(regressions):
-            ref_t = ref_q.get(n, ref_q.get(_short(n)))
-            if n not in specs or not ref_t or ref_t >= REP_MEDIAN_REF_SEC:
-                still_flagged.append(n)  # slow query: a real re-run is a
-                continue                 # scale_curve job, not a bench rep
-            reps: list[float] = []
-            for _ in range(REP_MEDIAN_RUNS):
-                try:
-                    t0 = time.perf_counter()
-                    specs[n].fn(spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    reps.append(time.perf_counter() - t0)
-                except Exception:  # noqa: BLE001 - keep the original flag
-                    break
-                finally:
-                    spark.catalog.clearCache()
-                    gc.collect()
-            if len(reps) < REP_MEDIAN_RUNS:
-                still_flagged.append(n)
-                continue
-            med = statistics.median(reps)
-            normed, verdict = _rep_verdict(med, ref_t, machine_factor)
-            rep_adjudication[n] = {
-                "reps": [round(r, 4) for r in reps],
-                "rep_median": round(med, 4),
-                "vs_committed": normed,
-                "verdict": verdict,
-            }
-            if verdict == "confirmed":
-                still_flagged.append(n)
-        regressions = still_flagged
+    for art in ARTIFACTS:
+        record(art.label, lambda art=art: art.cold_build(spark, sf_dir))
+    for name, spec in sorted(specs.items()):
+        record(name, lambda fn=spec.fn: noop_write(fn(spark, sf_dir)))
 
     try:
         sf_val: float | str = float(sf)
@@ -471,35 +252,16 @@ def main() -> None:
         sf_val = sf
     payload = {
         "metric": "catalog_total_wall",
-        "value": total,
+        "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "queries": timings,
         "sf": sf_val,
     }
-    if canary_first is not None:
-        payload["canary"] = {"first": canary_first, "last": canary_last}
-    if canary_mean:
-        payload["canary_mean"] = canary_mean
-        payload["value_canary_units"] = round(total / canary_mean, 2)
-        payload["queries_canary_units"] = normalized
-    if vs_committed:
-        payload["machine_factor_vs_committed"] = machine_factor
-        payload["vs_committed_clean_window"] = vs_committed
-        payload["normalized_regressions"] = sorted(regressions)
-        payload["normalization_rule"] = NORMALIZATION_RULE
-    if rep_adjudication:
-        payload["rep_adjudication"] = rep_adjudication
     if errors:
         payload["errors"] = errors
     if layout != "flat":
         payload["layout"] = layout
 
-    # The driver captures only the last ~2000 chars of stdout; with a
-    # 100-query catalog the full-name per-query map is ~2800 chars and
-    # has made the driver artifact unparseable since r2. Persist the
-    # full payload to a committed file and print ONE compact JSON line
-    # LAST: short "qNN" keys + 2-dp values (~1500 chars — fits the
-    # tail window with headroom).
     full_out = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT",
         os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_local.json"),
@@ -511,59 +273,9 @@ def main() -> None:
     except OSError:
         pass  # read-only checkout must not kill the bench line
 
-    shorts = [_short(n) for n in timings]
-    compact_keys = (
-        {_short(n): n for n in timings}
-        if len(set(shorts)) == len(shorts)
-        else {n: n for n in timings}  # collision: keep full names
-    )
-    compact = {
-        "metric": "catalog_total_wall",
-        "value": round(total, 2),
-        "unit": "sec",
-        "queries": {k: round(timings[v], 2) for k, v in sorted(compact_keys.items())},
-        "sf": sf_val,
-        "n_queries": len(timings),
-        "n_errors": len(errors),
-        "full": os.path.basename(full_out),
-    }
-    if canary_first is not None:
-        compact["canary"] = [round(canary_first, 2), round(canary_last, 2)]
-    if vs_committed:
-        # self-adjudication verdict for the driver's tail window:
-        # count + names only when the normalized rule actually flags
-        compact["norm_regr"] = sorted(_short(n) for n in regressions)[:15]
-    cleared = [
-        n for n, r in rep_adjudication.items() if r["verdict"] == "cleared"
-    ]
-    if cleared:
-        compact["rep_clear"] = sorted(_short(n) for n in cleared)[:10]
-    if errors:
-        compact["error_queries"] = sorted(_short(n) for n in errors)[:20]
-    if layout != "flat":
-        compact["layout"] = layout
-    line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > 1900:
-        # hard ceiling: the driver keeps only the LAST ~2000 stdout
-        # chars, and a line longer than that loses its opening brace
-        # and becomes unparseable (the r2–r3 artifact bug). Coarsen
-        # per-query values to 1 dp — BENCH_local.json keeps 4 dp.
-        compact["queries"] = {
-            k: round(v, 1) for k, v in compact["queries"].items()
-        }
-        line = json.dumps(compact, separators=(",", ":"))
-    print(line)
+    print(compact_line(timings, errors, sf_val, os.path.basename(full_out), layout))
     spark.stop()
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--renormalize":
-        renormalize(
-            sys.argv[2]
-            if len(sys.argv) > 2
-            else os.path.join(
-                os.path.dirname(os.path.abspath(__file__)), "BENCH_local.json"
-            )
-        )
-    else:
-        main()
+    main()

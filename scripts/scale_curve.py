@@ -39,17 +39,18 @@ perfectly linear scaling, <1 sublinear (fixed overhead amortizing),
 from __future__ import annotations
 
 import argparse
-import gc
 import json
 import math
 import os
 import sys
-import time
+from typing import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+
+from bench import ARTIFACTS, best_of, noop_write  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
 OUT_ROOT = "/tmp/spark_graft_scale"
@@ -222,15 +223,6 @@ def materialize(spark: SparkSession, factor: int) -> str:
     return out
 
 
-#: artifact label -> (memo name, builder import path) — timed as
-#: COLD builds (evict first), mirroring bench.py's line items
-ARTIFACTS = {
-    "art_clu": ("simhash_clusters", "shopify_db_spark.plans.curation", "simhash_clusters"),
-    "art_inv": ("invoice_table", "shopify_db_spark.plans.commerce", "invoice_table"),
-    "art_bpe": ("bpe_encoded", "shopify_db_spark.plans.textops", "bpe_encoded_table"),
-}
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--factors", default="1,3,10")
@@ -265,52 +257,27 @@ def main() -> None:
     # warm codegen/JIT once at the smallest factor
     for q in qnames:
         try:
-            specs[q].fn(spark, dirs[factors[0]]).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            noop_write(specs[q].fn(spark, dirs[factors[0]]))
         except Exception as exc:  # noqa: BLE001
             print(f"warmup {q}: {exc}", file=sys.stderr)
     spark.catalog.clearCache()
 
-    import importlib
-
-    from shopify_db_spark.plans.artifacts import evict
-
-    art_labels = [a.strip() for a in args.artifacts.split(",") if a.strip()]
-    runners: list[tuple[str, object]] = []
-    for label in art_labels:
-        memo_name, mod, attr = ARTIFACTS[label]
-        builder = getattr(importlib.import_module(mod), attr)
-
-        def run_artifact(sf_dir, memo_name=memo_name, builder=builder):
-            # cold build: evict the memo hit first (bench.py parity)
-            evict(memo_name, spark, sf_dir)
-            builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-        runners.append((label, run_artifact))
-    for q in qnames:
-        def run_query(sf_dir, fn=specs[q].fn):
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-        runners.append((q, run_query))
+    artifacts = {a.short: a for a in ARTIFACTS}
+    runners: list[tuple[str, Callable[[str], None]]] = [
+        (label, lambda d, art=artifacts[label]: art.cold_build(spark, d))
+        for label in (a.strip() for a in args.artifacts.split(",") if a.strip())
+    ]
+    runners += [
+        (q, lambda d, fn=specs[q].fn: noop_write(fn(spark, d))) for q in qnames
+    ]
 
     results: dict[str, dict] = {}
     for q, run in runners:
         row: dict[str, float] = {}
         for f in factors:
-            best = None
-            for _ in range(args.runs):
-                try:
-                    t0 = time.perf_counter()
-                    run(dirs[f])
-                    elapsed = time.perf_counter() - t0
-                except Exception as exc:  # noqa: BLE001
-                    row[f"x{f}_error"] = str(exc)[:200]
-                    break
-                finally:
-                    spark.catalog.clearCache()
-                    gc.collect()
-                best = elapsed if best is None else min(best, elapsed)
+            best, err = best_of(spark, lambda: run(dirs[f]), args.runs)
+            if err is not None:
+                row[f"x{f}_error"] = err[:200]
             if best is not None:
                 row[f"x{f}"] = round(best, 2)
             print(f"{q} x{f}: {row.get(f'x{f}')}", file=sys.stderr, flush=True)

@@ -72,17 +72,6 @@ def shingles_of_tokens(toks: Column, n: int = 3) -> Column:
     ).otherwise(F.array(F.concat_ws(" ", toks)))
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Array of n-word shingles (the dedup unit for MinHash /
-    Jaccard). Documents shorter than ``n`` words yield their full
-    token string as the single shingle.
-
-    NOTE: inline form — fine for small inputs and tests; hot paths
-    should project ``tokens(col)`` first and use
-    :func:`shingles_of_tokens` (see its HOF re-evaluation caveat)."""
-    return shingles_of_tokens(tokens(col), n)
-
-
 def ngrams_of_norm(norm: Column, n: int = 8) -> Column:
     """Character n-grams from an ALREADY-MATERIALIZED normalized
     string (same HOF caveat as :func:`shingles_of_tokens`)."""

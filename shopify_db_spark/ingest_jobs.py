@@ -66,6 +66,16 @@ FAN_OUT: dict[str, tuple[tuple[str, Callable[[DataFrame], DataFrame]], ...]] = {
 }
 
 
+#: raw entity → the JSON schema its records parse with
+RAW_SCHEMAS = {
+    "customers": ji.RAW_CUSTOMER,
+    "products": ji.RAW_PRODUCT,
+    "orders": ji.RAW_ORDER,
+    "transactions": ji.RAW_TRANSACTION,
+    "refunds": ji.RAW_REFUND,
+}
+
+
 def upsert_entities(store: CommerceStore, raw: dict[str, DataFrame]) -> None:
     """Upsert every table that ``{entity: raw DataFrame}`` feeds, all at
     once, and return when every upsert has ended. Normalizing inside
@@ -124,11 +134,7 @@ def shopify_update(
     the store's API rate limit (None = inherit the id frame's
     partitioning)."""
     raw: dict[str, DataFrame] = {}
-    for entity, fields, schema, filter_on_status in (
-        ("customers", api.CUSTOMER_FIELDS, ji.RAW_CUSTOMER, True),
-        ("products", api.PRODUCT_FIELDS, ji.RAW_PRODUCT, False),
-        ("orders", api.ORDER_FIELDS, ji.RAW_ORDER, True),
-    ):
+    for entity, (fields, filter_on_status) in api.ENTITIES.items():
         records = [
             r
             for page in api.fetch_all(
@@ -139,7 +145,7 @@ def shopify_update(
             for r in page
         ]
         if records:
-            raw[entity] = _raw_df(spark, records, schema)
+            raw[entity] = _raw_df(spark, records, RAW_SCHEMAS[entity])
 
     # Per-order N+1 sub-fetches run as executor tasks over id
     # partitions (mapInPandas) — the order-id sets are never
@@ -179,13 +185,7 @@ def ingest_from_json_dir(spark: SparkSession, store: CommerceStore, json_dir: st
     :func:`upsert_entities` wave, the same normalize/upsert path as
     the API."""
     raw = {}
-    for entity, schema in (
-        ("customers", ji.RAW_CUSTOMER),
-        ("products", ji.RAW_PRODUCT),
-        ("orders", ji.RAW_ORDER),
-        ("transactions", ji.RAW_TRANSACTION),
-        ("refunds", ji.RAW_REFUND),
-    ):
+    for entity, schema in RAW_SCHEMAS.items():
         path = os.path.join(json_dir, f"{entity}.jsonl")
         if os.path.exists(path):
             raw[entity] = spark.read.schema(schema).json(path)

@@ -39,7 +39,6 @@ from shopify_db_spark.functions.text import (
     fingerprint,
     shingles_of_tokens,
     tokens,
-    word_shingles,
 )
 
 DEFAULT_SEEDS = 8

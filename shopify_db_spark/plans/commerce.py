@@ -24,7 +24,6 @@ instead).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from shopify_db_spark.plans.catalog import query
 from shopify_db_spark.plans.invoice import build_invoices

@@ -153,6 +153,17 @@ REFUND_FIELDS = [
 ]
 
 
+#: the page-looped entities: entity -> (field allowlist, whether the
+#: request sends ``status=any``). Without it the orders endpoint
+#: returns open orders only; a product's ``status`` is its own
+#: active/archived/draft state, so products send no status filter.
+ENTITIES: dict[str, tuple[list[str], bool]] = {
+    "customers": (CUSTOMER_FIELDS, True),
+    "products": (PRODUCT_FIELDS, False),
+    "orders": (ORDER_FIELDS, True),
+}
+
+
 def make_client(store: str, api_key: str, api_password: str) -> tuple[HttpGet, str]:
     """(http_get, base_url) for a store's Admin API."""
     base_url = f"https://{store}.myshopify.com/admin/api/2021-01/"

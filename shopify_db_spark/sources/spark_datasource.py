@@ -45,11 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-_FIELD_LISTS = {
-    "orders": "ORDER_FIELDS",
-    "customers": "CUSTOMER_FIELDS",
-    "products": "PRODUCT_FIELDS",
-}
+from shopify_db_spark.sources import shopify_api as api
 
 
 @dataclass
@@ -77,7 +73,7 @@ def _date_slices(lo: str, hi: str, n: int) -> list[DateSlice]:
 class ShopifyReader(DataSourceReader):
     def __init__(self, options: dict):
         self.entity = options.get("entity", "orders")
-        if self.entity not in _FIELD_LISTS:
+        if self.entity not in api.ENTITIES:
             raise ValueError(f"unsupported entity: {self.entity}")
         self.options = dict(options)
 
@@ -88,9 +84,6 @@ class ShopifyReader(DataSourceReader):
         return _date_slices(lo, hi, n)
 
     def read(self, partition: DateSlice):
-        from shopify_db_spark.sources import shopify_api as api
-
-        fields = getattr(api, _FIELD_LISTS[self.entity])
         fixture_dir = self.options.get("fixture_dir")
         if fixture_dir:
             yield from self._read_fixture(fixture_dir, partition)
@@ -100,11 +93,13 @@ class ShopifyReader(DataSourceReader):
             self.options["api_key"],
             self.options["api_password"],
         )
+        fields, filter_on_status = api.ENTITIES[self.entity]
         for page in api.fetch_all(
             http_get,
             base_url,
             self.entity,
             fields,
+            filter_on_status=filter_on_status,
             created_at_min=partition.start,
             created_at_max=partition.end,
         ):

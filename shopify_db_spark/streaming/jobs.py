@@ -28,7 +28,6 @@ from pyspark.sql import types as T
 from shopify_db_spark.ingest_jobs import upsert_entities
 from shopify_db_spark.sources import json_ingest as ji
 from shopify_db_spark.sources.store import CommerceStore
-from shopify_db_spark.sources.tables import table_path
 
 #: physical schema of events.parquet (ts = timestamp[us], no tz →
 #: Spark reads TIMESTAMP_NTZ)
@@ -129,7 +128,9 @@ def sessionized_events(
 def run_bounded(stream_df: DataFrame, mode: str = "complete") -> DataFrame:
     """Drive a streaming DataFrame over its (bounded) source to
     completion through a memory sink and return the materialized
-    result — the synchronous harness for tests/bench."""
+    result — the synchronous harness for tests/bench. The result is
+    checkpointed out of the sink before its temp view is dropped, so
+    the sink's rows live only as long as the returned frame."""
     name = f"stream_out_{uuid.uuid4().hex[:12]}"
     q = (
         stream_df.writeStream.outputMode(mode)
@@ -139,7 +140,11 @@ def run_bounded(stream_df: DataFrame, mode: str = "complete") -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return stream_df.sparkSession.table(name)
+    spark = stream_df.sparkSession
+    try:
+        return spark.table(name).localCheckpoint()
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def incremental_order_ingest(

@@ -6,8 +6,10 @@ beyond the documented envelope, or a hashing bug)."""
 
 from __future__ import annotations
 
+import duckdb
+
 from shopify_db_spark.plans import load_all
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_CORRECTNESS, SF_SMOKE
 
 
 def test_bloom_matches_exact_contamination(spark):
@@ -255,3 +257,121 @@ def test_q162_doc_novelty_invariants(spark):
         .count()
     )
     assert int(out.n_unique.sum()) == n_df1
+
+
+def test_kcenter_coverage_radius_shrinks(spark):
+    """Farthest-first invariant: each pick is the point farthest from
+    the current centers, so the picked max-similarity is weakly
+    INCREASING over rounds (the space fills up; coverage radius
+    1 − max_sim is weakly decreasing)."""
+    rows = load_all()["q141_kcenter_coreset"].fn(spark, SF_SMOKE).collect()
+    sims = [r["max_sim"] for r in sorted(rows, key=lambda r: r["k_rank"])]
+    assert sims[0] == -1.0  # seed sentinel
+    for a, b in zip(sims[1:], sims[2:]):
+        assert b >= a - 1e-12
+
+
+def test_bucketed_batching_beats_shuffled_padding(spark):
+    """q150's reason to exist: the length-sorted schedule must waste
+    no more padding than the hash-shuffled baseline, corpus-wide."""
+    rows = load_all()["q150_batch_padding"].fn(spark, SF_SMOKE).collect()
+    waste = {"length_sorted": 0, "hash_shuffled": 0}
+    for r in rows:
+        waste[r["scheme"]] += r["n_docs"] * r["max_tok"] - r["sum_tok"]
+    assert waste["length_sorted"] <= waste["hash_shuffled"]
+
+
+def test_novelty_curve_decays(spark):
+    """Saturation: the first ingestion decile must be more novel than
+    the last (every first-decile shingle with a unique min-doc is
+    novel by construction; late deciles re-see earlier shingles)."""
+    rows = {
+        r["decile"]: r
+        for r in load_all()["q154_novelty_curve"].fn(spark, SF_SMOKE).collect()
+    }
+    assert rows[1]["novelty_frac"] > rows[max(rows)]["novelty_frac"]
+
+
+def test_budget_mixture_respects_budget_exactly(spark):
+    """Σ allocated == budget when the corpus exceeds the budget, and
+    allocation is a prefix of the quality order (no source receives
+    tokens while a cleaner one is truncated)."""
+    rows = load_all()["q156_budget_mixture"].fn(spark, SF_SMOKE).collect()
+    total = sum(r["n_tokens"] for r in rows)
+    budget = total * 2 // 5
+    allocated = sum(r["allocated_tokens"] for r in rows)
+    assert allocated == budget
+    ordered = sorted(rows, key=lambda r: (-r["quality"], r["source"]))
+    seen_partial = False
+    for r in ordered:
+        if seen_partial:
+            assert r["allocated_tokens"] == 0
+        if 0 < r["allocated_tokens"] < r["n_tokens"]:
+            seen_partial = True
+
+
+def test_q124_drift_summand_is_exact_integer(spark):
+    """q124's chi² summand is now a pure-integer floor division
+    (−4·SCALE·ca·cb DIV (ca·nb + cb·na)); spot-check the engine
+    output against an independent Python big-int recomputation so
+    the algebraic reduction (not just engine parity) is pinned."""
+    import collections
+    import re
+
+    drift = (
+        load_all()["q124_source_drift"].fn(spark, SF_SMOKE).collect()
+    )
+    assert drift
+    con = duckdb.connect()
+    docs = con.execute(
+        "SELECT source, text FROM "
+        f"read_parquet('{SF_SMOKE}/documents.parquet')"
+    ).fetchall()
+    counts: dict[str, collections.Counter] = collections.defaultdict(
+        collections.Counter
+    )
+    for source, text in docs:
+        # the catalog tokenizer: collapse whitespace, trim, lower,
+        # split on single spaces (functions/text.py `tokens`)
+        counts[source].update(
+            re.sub(r"\s+", " ", text).strip().lower().split(" ")
+        )
+    totals = {s: sum(c.values()) for s, c in counts.items()}
+    scale = 10**15
+    for row in drift:
+        a, b = row["source_a"], row["source_b"]
+        ca, cb, na, nb = counts[a], counts[b], totals[a], totals[b]
+        shared = set(ca) & set(cb)
+        assert len(shared) == row["n_shared_terms"]
+        total = 2 * scale
+        for t in shared:
+            num = 4 * scale * ca[t] * cb[t]
+            den = ca[t] * nb + cb[t] * na
+            total += -((num + den - 1) // den)
+        assert total == row["chi2_scaled"], (a, b)
+
+
+def test_cluster_memo_keyed_per_sf_dir(spark):
+    """simhash_clusters memoizes per (session, sf_dir): repeated
+    calls return the identical pinned frame (no recompute), different
+    sf_dirs get independent entries, and the memoized result equals a
+    fresh derivation row for row."""
+    from shopify_db_spark.operators import dedup as DD
+    from shopify_db_spark.operators.graph import dup_clusters
+    from shopify_db_spark.plans.curation import simhash_clusters
+    from shopify_db_spark.sources.tables import load_table
+
+    a1 = simhash_clusters(spark, SF_SMOKE)
+    a2 = simhash_clusters(spark, SF_SMOKE)
+    assert a1 is a2, "same (session, sf_dir) must hit the memo"
+
+    b = simhash_clusters(spark, SF_CORRECTNESS)
+    assert b is not a1, "different sf_dir must not share an entry"
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    fresh = dup_clusters(
+        DD.simhash_pairs(docs, max_hamming=4, hash_family="md5")
+    )
+    assert sorted(map(tuple, a1.collect())) == sorted(
+        map(tuple, fresh.collect())
+    )

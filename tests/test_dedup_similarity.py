@@ -15,6 +15,7 @@ from shopify_db_spark.operators.dedup import (
     simhash_pairs,
 )
 from shopify_db_spark.operators.similarity import cosine_topk, lsh_bucket_ann
+from shopify_db_spark.plans import load_all
 from tests.conftest import SF_SMOKE
 
 BASE = (
@@ -1341,3 +1342,83 @@ def test_matmul_assign_matches_brute(spark):
             sorted(brute - fast)[:5],
             sorted(fast - brute)[:5],
         )
+
+
+def test_domain_coherence_matches_bruteforce(spark):
+    """The Gram identity must agree with the literal pairwise mean
+    (computed on the quantized vectors it defines itself over)."""
+    from shopify_db_spark.operators.similarity import as_double, norm
+
+    out = {
+        r["source"]: r
+        for r in load_all()["q153_domain_coherence"].fn(spark, SF_SMOKE).collect()
+    }
+    from shopify_db_spark.plans.vectorops import _Q153_S1
+    from shopify_db_spark.sources.tables import load_table
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    docs = load_table(spark, SF_SMOKE, "documents")
+    one = sorted(out)[0]
+    xs = (
+        emb.join(
+            docs.select(F.col("doc_id").alias("vec_id"), "source"), "vec_id"
+        )
+        .filter(F.col("source") == one)
+        .select(as_double(F.col("embedding")).alias("ev"))
+        .withColumn("nrm", norm(F.col("ev")))
+        .select(
+            F.transform(
+                F.col("ev"),
+                lambda x: F.floor(x / F.col("nrm") * _Q153_S1).cast("long"),
+            ).alias("xq")
+        )
+        .collect()
+    )
+    vecs = [r["xq"] for r in xs]
+    n = len(vecs)
+    s = 0
+    for i in range(n):
+        for j in range(n):
+            if i != j:
+                s += sum(a * b for a, b in zip(vecs[i], vecs[j]))
+    brute = s / (n * (n - 1) * _Q153_S1 * _Q153_S1)
+    assert abs(brute - out[one]["mean_pairwise_cos"]) < 1e-9
+    assert n == out[one]["n"]
+
+
+def test_knn_recall_gate_is_consistent(spark):
+    """q159's counts must be internally consistent and the recall
+    meaningfully above zero on the smoke corpus (nprobe=2 cells
+    genuinely contain most true neighbors there)."""
+    row = load_all()["q159_knn_recall_gate"].fn(spark, SF_SMOKE).collect()[0]
+    assert row["n_hits"] <= row["n_expected"]
+    assert abs(row["recall"] - row["n_hits"] / row["n_expected"]) < 1e-12
+    assert row["recall"] > 0.3
+
+
+def test_semantic_pairs_sub_split_bounds_blocks(spark):
+    """The sub_planes escape on semantic_dedup_pairs: sub-splitting
+    shrinks within-cell blocks (candidate volume) while every
+    surviving pair is a subset of the unsplit pair set that still
+    shares a (cell, sub-bucket) — the same recall trade
+    semantic_dedup documents."""
+    from pyspark.sql import functions as F
+
+    from shopify_db_spark.operators.similarity import semantic_dedup_pairs
+    from shopify_db_spark.sources.tables import load_table
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    centroids = emb.filter(F.col("vec_id") % 25 == 0)
+    full = {
+        (r["id_a"], r["id_b"])
+        for r in semantic_dedup_pairs(emb, centroids, threshold=0.3).collect()
+    }
+    split = {
+        (r["id_a"], r["id_b"])
+        for r in semantic_dedup_pairs(
+            emb, centroids, threshold=0.3, sub_planes=2
+        ).collect()
+    }
+    assert full, "unsplit run found no pairs on the smoke fixture"
+    assert split <= full, "sub-splitting must only REMOVE candidates"
+    assert len(split) < len(full) or split == full

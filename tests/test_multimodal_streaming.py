@@ -123,6 +123,10 @@ def test_windowed_counts_match_batch(spark):
     streamed = SJ.run_bounded(
         SJ.windowed_event_counts(SJ.stream_events(spark, SF_SMOKE))
     )
+    # the memory sink's temp view is dropped once the result is out
+    assert not [
+        t.name for t in spark.catalog.listTables() if t.name.startswith("stream_out_")
+    ]
     # ts reads as TIMESTAMP_NTZ (micros parquet, no tz); batch
     # F.window accepts NTZ directly — no watermark in the batch twin
     batch_events = spark.read.parquet(f"{SF_SMOKE}/events.parquet")

@@ -4,10 +4,14 @@ driver's correctness gate applies at sf0.01."""
 
 from __future__ import annotations
 
+import datetime
+
+import duckdb
+import pandas as pd
 import pytest
 
 from shopify_db_spark.plans import load_all
-from shopify_db_spark.testing import run_differential
+from shopify_db_spark.testing import compare_frames, run_differential
 from tests.conftest import SF_SMOKE
 
 ALL = load_all()
@@ -95,3 +99,62 @@ def test_compare_frames_is_dtype_family_strict():
     s5 = pd.DataFrame({"b": np.array([True, False])})
     o5 = pd.DataFrame({"b": np.array([1, 0], dtype="int64")})
     assert compare_frames(s5, o5)
+
+
+def _synthetic_events(tmp_path, ages_days):
+    """Write a single-file events.parquet whose per-user event ages
+    (relative to the newest event) are exactly ``ages_days``."""
+    now = datetime.datetime(2024, 6, 1, 12, 0, 0)
+    rows = [
+        {
+            "event_id": i,
+            "ts": now - datetime.timedelta(days=a),
+            "user_id": 1000 + i,
+            "event_type": "view",
+            "value": 1.0,
+            "props": "{}",
+        }
+        for i, a in enumerate(ages_days)
+    ]
+    pdf = pd.DataFrame(rows)
+    pdf["ts"] = pd.to_datetime(pdf["ts"]).astype("datetime64[us]")
+    path = tmp_path / "events.parquet"
+    pdf.to_parquet(path, index=False)
+    return str(tmp_path)
+
+
+def test_decay_weight_no_shift_wrap(spark, tmp_path):
+    """Regression for the round-9 advice finding: Spark wraps the
+    shiftright amount mod the BASE WIDTH, so an int-typed 10⁶ base
+    made events 224–279 days old (shift 32–39) wrap back to weights
+    10⁶..15625 while DuckDB yields 0. The fixed clamp (≥ 20
+    half-lives → exactly 0, since 10⁶ < 2²⁰) plus a BIGINT base must
+    agree with the oracle on synthetic ages spanning the former wrap
+    range — testdata spans only 30 days, so this is the only gate
+    that exercises it."""
+    ages = [0, 6, 7, 100, 139, 140, 223, 224, 250, 279, 447, 448, 600]
+    sf_dir = _synthetic_events(tmp_path, ages)
+    spec = load_all()["q158_decayed_engagement"]
+    spark_pdf = spec.fn(spark, sf_dir).toPandas()
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/events.parquet')"
+    )
+    oracle_pdf = con.execute(spec.oracle).df()
+    assert compare_frames(spark_pdf, oracle_pdf) == []
+
+    by_age = {
+        int(r["days_since_last"]): int(r["decayed_ppm"])
+        for _, r in spark_pdf.iterrows()
+    }
+    assert by_age[0] == 1_000_000
+    assert by_age[7] == 500_000
+    # the former wrap range (shift 32-39) and everything past the
+    # 140-day horizon must be exactly 0, never 10⁶ again
+    for a in (140, 223, 224, 250, 279, 447, 448, 600):
+        assert by_age[a] == 0, f"age {a} leaked weight {by_age[a]}"
+    # inside the horizon the weight is the exact shift value
+    assert by_age[139] == 1_000_000 >> 19
+    assert by_age[100] == 1_000_000 >> 14

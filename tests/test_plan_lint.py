@@ -6,6 +6,7 @@ centroid-scoring pass) or a bounded global stage."""
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 
 from shopify_db_spark.plans import load_all
@@ -472,3 +473,67 @@ def test_floor_scale_sites_are_version_proof():
                         "allowlisted with an exactness argument"
                     )
     assert not problems, "\n".join(problems)
+
+
+def test_no_unused_top_level_imports():
+    """Every top-level import of a ``shopify_db_spark`` module is used
+    in that module: by name, or through ``__all__``. A deliberate
+    re-export carries ``# noqa: F401`` on its import statement.
+    Hermetic: reads the sources' ASTs, no Spark session."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "shopify_db_spark"
+    problems = []
+    for path in sorted(pkg.rglob("*.py")):
+        source = path.read_text()
+        lines = source.splitlines()
+        tree = ast.parse(source)
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in tree.body:
+            if isinstance(node, ast.Assign) and any(
+                isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+            ):
+                used |= {e.value for e in node.value.elts}
+        for node in tree.body:
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            if any(
+                "noqa: F401" in line
+                for line in lines[node.lineno - 1 : node.end_lineno]
+            ):
+                continue
+            for alias in node.names:
+                bound = alias.asname or alias.name.split(".")[0]
+                if bound not in used:
+                    problems.append(
+                        f"{path.relative_to(pkg.parent)}:{node.lineno}: "
+                        f"unused import {bound}"
+                    )
+    assert not problems, "\n".join(problems)
+
+
+def test_power_of_two_quantization_is_float32_exact(spark):
+    """The q121/q122/q142 quantization scales are powers of two, so
+    floor(x·S) is identical whether the multiply happens at float32
+    or float64 precision — the property that makes the quantization
+    version-proof. Verify it holds over every embedding component in
+    the smoke fixture (a 10^k scale FAILS this on the same data)."""
+    import numpy as np
+
+    con = duckdb.connect()
+    vecs = con.execute(
+        "SELECT embedding FROM "
+        f"read_parquet('{SF_SMOKE}/embeddings.parquet')"
+    ).fetchall()
+    comps = np.array(
+        [x for (v,) in vecs for x in v], dtype=np.float32
+    )
+    for scale in (1 << 20, 1 << 10):
+        f32 = np.floor(comps * np.float32(scale)).astype(np.int64)
+        f64 = np.floor(
+            comps.astype(np.float64) * np.float64(scale)
+        ).astype(np.int64)
+        assert (f32 == f64).all(), f"power-of-two scale {scale} not exact"

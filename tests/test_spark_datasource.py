@@ -6,9 +6,11 @@ from __future__ import annotations
 
 import pytest
 
+from shopify_db_spark.sources import shopify_api as api
 from shopify_db_spark.sources.spark_datasource import (
     DateSlice,
     ShopifyDataSource,
+    ShopifyReader,
     _date_slices,
 )
 
@@ -23,6 +25,30 @@ def test_date_slices_cover_and_partition():
     # more partitions than days clamps to day count
     assert len(_date_slices("2024-01-01", "2024-01-03", 16)) == 2
     assert len(_date_slices("2024-01-01", "2024-01-01", 4)) == 1
+
+
+@pytest.mark.parametrize(
+    "entity, status", [("orders", "any"), ("customers", "any"), ("products", None)]
+)
+def test_reader_sends_the_entity_status_filter(monkeypatch, entity, status):
+    """A ``format("shopify")`` read sends the same status filter as
+    ``shopify_update``: ``status=any`` for orders and customers, none
+    for products. In-process: the reader's client is faked, no Spark."""
+    sent: list[dict] = []
+
+    def fake_get(url, params):
+        sent.append(dict(params))
+        return 200, {}, {entity: []}
+
+    monkeypatch.setattr(api, "make_client", lambda *_: (fake_get, "https://x/"))
+    reader = ShopifyReader(
+        {"entity": entity, "store": "s", "api_key": "k", "api_password": "p"}
+    )
+    assert list(reader.read(DateSlice("2024-01-01", "2024-02-01"))) == []
+    assert len(sent) == 1
+    assert sent[0].get("status") == status
+    assert sent[0]["created_at_min"] == "2024-01-01"
+    assert sent[0]["fields"] == ",".join(api.ENTITIES[entity][0])
 
 
 @pytest.fixture(scope="module")

@@ -13,6 +13,7 @@ from pathlib import Path
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from shopify_db_spark.plans import load_all
 from shopify_db_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 
@@ -658,3 +659,32 @@ def test_q163_certificate_refuses_readded_evicted_term(spark):
     }
     assert est["x"] >= 50, est  # point estimate sees the stranded mass
     assert est["h1"] == 0 and est["h2"] == 0 and est["h3"] == 0, est
+
+
+def test_decayed_engagement_bounds(spark):
+    """Every user's decayed score is bounded by n_events · 10⁶ and
+    positive for any user active within the clamp horizon (20
+    half-lives — 10⁶ < 2²⁰ so the weight is exactly 0 beyond)."""
+    rows = load_all()["q158_decayed_engagement"].fn(spark, SF_SMOKE).collect()
+    assert rows
+    for r in rows:
+        assert 0 <= r["decayed_ppm"] <= r["n_events"] * 1_000_000
+        if r["days_since_last"] < 7 * 20:
+            assert r["decayed_ppm"] > 0
+
+
+def test_streaming_engagement_equals_batch(spark):
+    """The q158→q160 twin contract, asserted directly: the streaming
+    maintenance must reproduce the batch scores row for row (both
+    are also oracle-checked against the same SQL; this pins the
+    equivalence inside the test suite too)."""
+    qs = load_all()
+    batch = {
+        r["user_id"]: (r["n_events"], r["decayed_ppm"], r["days_since_last"])
+        for r in qs["q158_decayed_engagement"].fn(spark, SF_SMOKE).collect()
+    }
+    stream = {
+        r["user_id"]: (r["n_events"], r["decayed_ppm"], r["days_since_last"])
+        for r in qs["q160_streaming_engagement"].fn(spark, SF_SMOKE).collect()
+    }
+    assert batch == stream
