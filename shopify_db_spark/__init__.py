@@ -11,7 +11,7 @@ pandas Shopify ETL tool), built Spark-first:
   (``plans.invoice``) optimized by Catalyst,
 * the 8-check pandas validation suite (reference
   ``tripletex.py:204-242``) becomes distributed Spark checks
-  (``plans.verify``),
+  (``plans.verify_invoices``),
 * the per-table ``ON CONFLICT DO UPDATE`` upserts (reference
   ``db.py:115-407``) become key-based merge operators
   (``operators.upsert``),

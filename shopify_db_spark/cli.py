@@ -34,6 +34,14 @@ from shopify_db_spark.sources.csv_io import read_invoice_csv, write_invoice_csv
 from shopify_db_spark.sources.store import CommerceStore
 
 
+def _gateway_rename(value: str) -> tuple[str, str]:
+    """One ``--rename-gateway`` value, ``OLD=NEW``."""
+    old, sep, new = value.partition("=")
+    if not sep:
+        raise argparse.ArgumentTypeError(f"expected OLD=NEW, got {value!r}")
+    return old, new
+
+
 def _parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="shopify-db-spark")
     p.add_argument("--data-dir", required=True, help="parquet store directory")
@@ -56,7 +64,8 @@ def _parser() -> argparse.ArgumentParser:
     gen.add_argument("--gateway", nargs="*", default=None,
                      help="allow-listed payment gateways")
     gen.add_argument("--rename-gateway", nargs="*", default=[],
-                     metavar="OLD=NEW", help="gateway rename map")
+                     type=_gateway_rename, metavar="OLD=NEW",
+                     help="gateway rename map")
 
     ver = sub.add_parser("tripletex-verify", help="verify an invoice CSV")
     ver.add_argument("--file", required=True)
@@ -94,7 +103,7 @@ def main(argv: list[str] | None = None) -> int:
         invoices = build_invoices(
             store.read_all(), args.from_date, args.to_date, args.invoice_start_id
         )
-        renames = dict(kv.split("=", 1) for kv in args.rename_gateway)
+        renames = dict(args.rename_gateway)
         if renames:
             invoices = replace_invoice_gateway(invoices, renames)
         invoices = invoices.cache()

@@ -40,6 +40,7 @@ from shopify_db_spark.functions.text import (
     shingles_of_tokens,
     tokens,
 )
+from shopify_db_spark.operators.planutil import fits_broadcast
 
 DEFAULT_SEEDS = 8
 DEFAULT_BAND_SIZE = 2
@@ -633,7 +634,6 @@ def prefix_filter_jaccard_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.5,
-    broadcast_df: bool | None = None,
 ) -> DataFrame:
     """Global set-similarity self-join via PREFIX FILTERING (the
     AllPairs/PPJoin scheme — Bayardo et al. WWW'07, Xiao et al.
@@ -666,25 +666,16 @@ def prefix_filter_jaccard_pairs(
     (``PREFIX_DF_BROADCAST_SOURCE_BYTES``; at corpus scale a
     broadcast of df would exceed executor memory, and shingle is
     already the join key so the big path is a plain shuffle join).
-    ``broadcast_df`` overrides the automatic decision; lineages
-    Catalyst cannot size (Long.MaxValue sentinel) take the safe
-    shuffle path. Both paths are oracle-identical
-    (tests/test_dedup_similarity.py), within noise of each other at
-    sf0.1 (3.2 vs 3.6 s), and the shuffle path is scale-measured
-    (SCALE.md)."""
-    if broadcast_df is None:
-        # plan_size_bytes documents the Spark Connect / private-API
-        # caveat: unsizeable lineages return the sentinel and take
-        # the safe shuffle path.
-        from shopify_db_spark.operators.planutil import plan_size_bytes
-
-        broadcast_df = (
-            plan_size_bytes(docs) < PREFIX_DF_BROADCAST_SOURCE_BYTES
-        )
+    Lineages Catalyst cannot size take the safe shuffle path. Both
+    paths are oracle-identical (tests/test_dedup_similarity.py),
+    within noise of each other at sf0.1 (3.2 vs 3.6 s), and the
+    shuffle path is scale-measured (SCALE.md)."""
     sh = doc_shingles(docs, id_col, text_col, n)
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+    if fits_broadcast(docs, PREFIX_DF_BROADCAST_SOURCE_BYTES):
+        dfreq = F.broadcast(dfreq)
     ordered = (
-        sh.join(F.broadcast(dfreq) if broadcast_df else dfreq, "shingle")
+        sh.join(dfreq, "shingle")
         .groupBy("doc_id")
         .agg(
             F.sort_array(

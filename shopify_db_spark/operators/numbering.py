@@ -41,6 +41,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from shopify_db_spark.operators.planutil import STATS_UNKNOWN, plan_size_bytes
+
 __all__ = [
     "global_row_numbers",
     "global_running_sum",
@@ -66,8 +68,6 @@ TWO_PHASE_SOURCE_BYTES = 256 << 20
 #: Same ceiling rationale as the byte form.
 TWO_PHASE_GROUP_ROWS = 2_000_000
 
-_STATS_UNKNOWN = (1 << 63) - 1
-
 
 def needs_two_phase(
     sources: list[DataFrame],
@@ -77,23 +77,20 @@ def needs_two_phase(
     """Plan-time decision: should a numbering over a group set that
     is upper-bounded by ``sources`` use the two-phase formulation?
 
-    Uses Catalyst's free ``sizeInBytes`` estimate (driver-side, no
-    job); lineages Catalyst cannot size (Long.MaxValue sentinel)
-    fall back to count jobs against ``row_bound``. Shared by
-    ``plans.invoice.build_invoices`` and the standalone numbering
-    demo ``plans.tpch.q08`` so every numbering site auto-escapes the
-    single-partition window the same way."""
+    Uses Catalyst's free ``sizeInBytes`` estimate
+    (``planutil.plan_size_bytes``: driver-side, no job); lineages it
+    cannot size (``STATS_UNKNOWN``) fall back to count jobs against
+    ``row_bound``. Shared by ``plans.invoice.build_invoices`` and the
+    standalone numbering demo ``plans.tpch.q08`` so every numbering
+    site auto-escapes the single-partition window the same way."""
     # bounds resolved at CALL time (module globals, not def-time
     # defaults) so tests/operators can tune them via the module
     if byte_bound is None:
         byte_bound = TWO_PHASE_SOURCE_BYTES
     if row_bound is None:
         row_bound = TWO_PHASE_GROUP_ROWS
-    sizes = [
-        int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        for df in sources
-    ]
-    if any(s >= _STATS_UNKNOWN for s in sizes):
+    sizes = [plan_size_bytes(df) for df in sources]
+    if STATS_UNKNOWN in sizes:
         return sum(df.count() for df in sources) > row_bound
     return sum(sizes) > byte_bound
 

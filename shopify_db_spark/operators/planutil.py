@@ -5,7 +5,8 @@ path but must NOT take it unconditionally: a frame that is small at
 test scale (a 2%-of-corpus query set, a document-frequency table)
 is data-sized, and an unconditional ``F.broadcast`` hint overrides
 Spark's own size reasoning — at 100 TB that ships terabytes to every
-executor and OOMs. The rule used everywhere in this package:
+executor and OOMs. The rule used everywhere in this package is
+:func:`fits_broadcast`, written once here:
 
 * broadcast ONLY when Catalyst's plan-time estimate of the frame is
   under an operator-specific bound,
@@ -14,6 +15,15 @@ executor and OOMs. The rule used everywhere in this package:
   blocked pair grid where no equi key exists) — Spark's own
   ``autoBroadcastJoinThreshold`` may still broadcast genuinely
   small frames, which is exactly the size reasoning we want.
+
+Each bound is a module constant next to its operator
+(``similarity.ANN_QUERY_BROADCAST_SOURCE_BYTES``,
+``similarity.IVF_MATMUL_ASSIGN_SOURCE_BYTES``,
+``dedup.PREFIX_DF_BROADCAST_SOURCE_BYTES``,
+``numbering.TWO_PHASE_SOURCE_BYTES``) read at call time, so a test
+picks a path by patching the bound, not through a parameter.
+:func:`plan_size_bytes` is the package's only stats probe
+(tests/test_plan_lint.py checks it).
 
 Catalyst's estimate without CBO is conservative in the right
 direction: a Filter reports its CHILD's size, so "2% of the corpus"
@@ -50,17 +60,11 @@ def plan_size_bytes(df: DataFrame) -> int:
         return STATS_UNKNOWN
 
 
-def maybe_broadcast(
-    df: DataFrame, bound_bytes: int, force: bool | None = None
-) -> DataFrame:
-    """``F.broadcast(df)`` iff forced or plan-estimated under bound.
-
-    ``force=None`` (the default) applies the plan-time gate;
-    ``True``/``False`` override it for tests and for callers that
-    know their frame (e.g. an external 10-row probe set)."""
-    if force is None:
-        force = plan_size_bytes(df) < bound_bytes
-    return F.broadcast(df) if force else df
+def fits_broadcast(df: DataFrame, bound_bytes: int) -> bool:
+    """The package's one broadcast gate: True iff Catalyst sizes
+    ``df``'s plan under ``bound_bytes``. An unsizable plan reads as
+    :data:`STATS_UNKNOWN` and never fits."""
+    return plan_size_bytes(df) < bound_bytes
 
 
 def blocked_pair_join(

@@ -34,6 +34,7 @@ from pyspark.sql.window import Window
 from shopify_db_spark.operators.planutil import (
     STATS_UNKNOWN,
     blocked_pair_join,
+    fits_broadcast,
     plan_size_bytes,
 )
 
@@ -143,6 +144,43 @@ def _respread_thin_candidates(c: DataFrame) -> DataFrame:
     return c
 
 
+def _query_side(q: DataFrame, sized: DataFrame) -> DataFrame:
+    """The query side of a bucket or cell equi-join, broadcast-hinted
+    iff ``sized`` (the caller's raw query input) fits
+    ``ANN_QUERY_BROADCAST_SOURCE_BYTES``. Unhinted, the bucket/cell
+    key makes the join a plain shuffle join."""
+    if fits_broadcast(sized, ANN_QUERY_BROADCAST_SOURCE_BYTES):
+        return F.broadcast(q)
+    return q
+
+
+def _all_pairs(
+    q: DataFrame,
+    c: DataFrame,
+    sized: DataFrame,
+    broadcast: bool | None = None,
+) -> DataFrame:
+    """Every (query_id, neighbor_id) pair of ``q`` × ``c`` except
+    self-pairs: the brute-force pairing of :func:`cosine_topk`,
+    :func:`contrastive_topk` and ``vectorops.quantized_topk``.
+
+    ``broadcast`` defaults to whether ``sized`` (the caller's raw
+    query input) fits ``ANN_QUERY_BROADCAST_SOURCE_BYTES``. The
+    broadcast path joins ``q`` against the respread candidates;
+    otherwise the pairing is the blocked grid
+    (``planutil.blocked_pair_join``), with per-task memory bounded
+    and bit-identical scores."""
+    if broadcast is None:
+        broadcast = fits_broadcast(sized, ANN_QUERY_BROADCAST_SOURCE_BYTES)
+    not_self = F.col("query_id") != F.col("neighbor_id")
+    if broadcast:
+        return F.broadcast(q).join(_respread_thin_candidates(c), not_self)
+    blocks = _grid_blocks(sized)
+    return blocked_pair_join(
+        q, c, blocks, blocks, "query_id", "neighbor_id"
+    ).filter(not_self)
+
+
 def cosine_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -165,28 +203,16 @@ def cosine_topk(
     the pairing runs as an explicit blocked pair grid
     (``planutil.blocked_pair_join``): per-task memory bounded, plain
     shuffle equi-join on the cell id, bit-identical scores. Both
-    paths oracle-identical (tests/test_approx_tier.py)."""
+    paths oracle-identical (tests/test_approx_tier.py).
+    ``broadcast_queries`` forces either path (q107 forces the
+    grid)."""
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
     ).withColumn("qn", norm(F.col("qv")))
     c = candidates.select(
         F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
     ).withColumn("cn", norm(F.col("cv")))
-    if broadcast_queries is None:
-        broadcast_queries = (
-            plan_size_bytes(queries) < ANN_QUERY_BROADCAST_SOURCE_BYTES
-        )
-    if broadcast_queries:
-        c = _respread_thin_candidates(c)
-        pairs = F.broadcast(q).join(
-            c, F.col("query_id") != F.col("neighbor_id")
-        )
-    else:
-        blocks = _grid_blocks(queries)
-        pairs = blocked_pair_join(
-            q, c, blocks, blocks, "query_id", "neighbor_id"
-        ).filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = pairs.select(
+    scored = _all_pairs(q, c, queries, broadcast_queries).select(
         "query_id",
         "neighbor_id",
         cosine_with_norms(
@@ -211,7 +237,6 @@ def contrastive_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    broadcast_queries: bool | None = None,
 ) -> DataFrame:
     """Contrastive pair mining for metric-learning training data:
     per anchor, the ``k_pos`` HARDEST POSITIVES (same label,
@@ -242,21 +267,7 @@ def contrastive_topk(
             F.col(label_col).alias("c_label"),
         )
     ).withColumn("cn", norm(F.col("cv")))
-    if broadcast_queries is None:
-        broadcast_queries = (
-            plan_size_bytes(queries) < ANN_QUERY_BROADCAST_SOURCE_BYTES
-        )
-    if broadcast_queries:
-        c = _respread_thin_candidates(c)
-        pairs = F.broadcast(q).join(
-            c, F.col("query_id") != F.col("neighbor_id")
-        )
-    else:
-        blocks = _grid_blocks(queries)
-        pairs = blocked_pair_join(
-            q, c, blocks, blocks, "query_id", "neighbor_id"
-        ).filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = pairs.select(
+    scored = _all_pairs(q, c, queries).select(
         "query_id",
         "neighbor_id",
         cosine_with_norms(
@@ -292,7 +303,6 @@ def contrastive_topk_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    broadcast_queries: bool | None = None,
 ) -> DataFrame:
     """The PRODUCTION tier of :func:`contrastive_topk`: bound the
     candidate set with the IVF coarse quantizer first (queries probe
@@ -303,8 +313,6 @@ def contrastive_topk_ivf(
     the n×K assignment, plan-time-gated query broadcast on the cell
     equi-join — so the mining pass scales exactly like the ANN tier
     it reuses. Returns (query_id, kind, neighbor_id, cosine, rank)."""
-    from shopify_db_spark.operators.planutil import maybe_broadcast
-
     qlab = queries.select(
         F.col(id_col).alias("vec_id"), F.col(label_col).alias("q_label")
     )
@@ -333,13 +341,7 @@ def contrastive_topk_ivf(
             "c_label",
         )
     )
-    if broadcast_queries is None:
-        broadcast_queries = (
-            plan_size_bytes(queries) < ANN_QUERY_BROADCAST_SOURCE_BYTES
-        )
-    pairs = maybe_broadcast(
-        q, ANN_QUERY_BROADCAST_SOURCE_BYTES, force=broadcast_queries
-    ).join(
+    pairs = _query_side(q, queries).join(
         c,
         (F.col("c_cell") == F.col("centroid_id"))
         & (F.col("neighbor_id") != F.col("query_id")),
@@ -412,7 +414,6 @@ def lsh_bucket_ann(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    broadcast_queries: bool | None = None,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH
     bucket, exact cosine re-rank inside. Same output shape as
@@ -433,13 +434,8 @@ def lsh_bucket_ann(
         as_double(F.col(vec_col)).alias("cv"),
         lsh_bucket(F.col(vec_col), n_planes, dim).alias("bucket"),
     ).withColumn("cn", norm(F.col("cv")))
-    if broadcast_queries is None:
-        broadcast_queries = (
-            plan_size_bytes(queries) < ANN_QUERY_BROADCAST_SOURCE_BYTES
-        )
-    qside = F.broadcast(q) if broadcast_queries else q
     scored = (
-        qside
+        _query_side(q, queries)
         .join(c, (F.col("query_id") != F.col("neighbor_id")) & (q["bucket"] == c["bucket"]))
         .select(
             "query_id",
@@ -711,7 +707,6 @@ def ivf_assign(
     vec_col: str = "embedding",
     n_best: int = 1,
     keep_score: bool = False,
-    matmul: bool | None = None,
     keep_rank: bool = False,
 ) -> DataFrame:
     """Coarse-quantizer assignment: each vector goes to its
@@ -746,20 +741,16 @@ def ivf_assign(
     gate the same pass runs as a numpy matmul in mapInPandas
     (:func:`_matmul_scored` — same codebook-broadcast memory
     contract, zero shuffle, BLAS speed); gate SFs keep the
-    bit-identical JVM plan, an unsizable plan (Spark Connect)
-    degrades to it, and ``matmul=`` overrides for tests."""
+    bit-identical JVM plan, and an unsizable plan (Spark Connect)
+    degrades to it."""
     v = vectors.select(
         F.col(id_col).alias("vec_id"), as_double(F.col(vec_col)).alias("v")
     ).withColumn("vn", norm(F.col("v")))
     cent = centroids.select(
         F.col(id_col).alias("centroid_id"), as_double(F.col(vec_col)).alias("cv")
     ).withColumn("cn", norm(F.col("cv")))
-    if matmul is None:
-        size = plan_size_bytes(centroids)
-        matmul = (
-            size != STATS_UNKNOWN and size >= IVF_MATMUL_ASSIGN_SOURCE_BYTES
-        )
-    if matmul:
+    size = plan_size_bytes(centroids)
+    if STATS_UNKNOWN > size >= IVF_MATMUL_ASSIGN_SOURCE_BYTES:
         scored = _matmul_scored(v, cent, n_best, keep_score)
     else:
         scored = v.join(F.broadcast(cent)).select(
@@ -824,7 +815,6 @@ def ivf_ann(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     nprobe: int = 1,
-    broadcast_queries: bool | None = None,
 ) -> DataFrame:
     """IVF-Flat approximate nearest neighbors: assign queries to
     their ``nprobe`` nearest centroids and candidates to their one
@@ -862,10 +852,6 @@ def ivf_ann(
     unpinned, the pass re-executes per consumer), and derive both
     sides from it. One corpus scan + one scoring pass instead of
     two of each; bit-identical output."""
-    if broadcast_queries is None:
-        broadcast_queries = (
-            plan_size_bytes(queries) < ANN_QUERY_BROADCAST_SOURCE_BYTES
-        )
     if queries is candidates:
         shared = ivf_assign(
             candidates, centroids, id_col, vec_col,
@@ -899,7 +885,7 @@ def ivf_ann(
             "centroid_id",
         )
     scored = (
-        (F.broadcast(qa) if broadcast_queries else qa)
+        _query_side(qa, queries)
         .join(
             ca,
             (F.col("query_id") != F.col("neighbor_id"))

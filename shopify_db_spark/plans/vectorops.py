@@ -603,7 +603,6 @@ def quantized_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    broadcast_queries: bool | None = None,
 ) -> DataFrame:
     """Brute-force top-k over int8 codes (q105's engine as a
     reusable operator): quantize both sides map-only, score every
@@ -612,25 +611,11 @@ def quantized_topk(
     The baseline/verifier tier — the production path is
     :func:`ann_int8`, which bounds candidates with an IVF cell join.
 
-    Query-side broadcast is plan-time gated
-    (``similarity.ANN_QUERY_BROADCAST_SOURCE_BYTES``); over the
-    bound the pairing runs as the blocked grid
-    (``planutil.blocked_pair_join`` — bounded per-task memory).
+    The pairing is ``similarity.cosine_topk``'s: plan-time-gated
+    query broadcast, the blocked grid over the bound.
     Returns (query_id, neighbor_id, qcos, rank)."""
-    from shopify_db_spark.operators.planutil import (
-        blocked_pair_join,
-        plan_size_bytes,
-    )
-    from shopify_db_spark.operators.similarity import (
-        ANN_QUERY_BROADCAST_SOURCE_BYTES,
-        _grid_blocks,
-        as_double,
-    )
+    from shopify_db_spark.operators.similarity import _all_pairs, as_double
 
-    if broadcast_queries is None:
-        broadcast_queries = (
-            plan_size_bytes(queries) < ANN_QUERY_BROADCAST_SOURCE_BYTES
-        )
     qry = (
         queries.select(
             F.col(id_col).alias("query_id"),
@@ -647,16 +632,7 @@ def quantized_topk(
         .filter(F.exists("qb", lambda v: v != 0))
         .withColumn("cn", int8_norm(F.col("qb")))
     )
-    if broadcast_queries:
-        pairs = F.broadcast(qry).join(
-            cand, F.col("neighbor_id") != F.col("query_id")
-        )
-    else:
-        b = _grid_blocks(queries)
-        pairs = blocked_pair_join(
-            qry, cand, b, b, "query_id", "neighbor_id"
-        ).filter(F.col("neighbor_id") != F.col("query_id"))
-    return _topk_int8(pairs, k)
+    return _topk_int8(_all_pairs(qry, cand, queries), k)
 
 
 def ann_int8(
@@ -669,7 +645,6 @@ def ann_int8(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: DataFrame | None = None,
-    broadcast_queries: bool | None = None,
     query_filter=None,
 ) -> DataFrame:
     """The production quantized-ANN entry point: KMeans coarse
@@ -698,12 +673,8 @@ def ann_int8(
     in tests/test_dedup_similarity.py on both the real sf0.001
     embeddings and a clustered fixture. Returns
     (query_id, neighbor_id, qcos, rank)."""
-    from shopify_db_spark.operators.planutil import (
-        maybe_broadcast,
-        plan_size_bytes,
-    )
     from shopify_db_spark.operators.similarity import (
-        ANN_QUERY_BROADCAST_SOURCE_BYTES,
+        _query_side,
         ivf_assign,
         kmeans_codebook,
     )
@@ -760,24 +731,17 @@ def ann_int8(
             .filter(F.exists("qa", lambda v: v != 0))
             .withColumn("qn", int8_norm(F.col("qa")))
         )
-    if broadcast_queries is None:
-        # gate on the INPUT frame, not the derived assignment plan:
-        # without CBO a Filter reports its child's size anyway, and
-        # sizing the raw scan skips re-optimizing the whole
-        # assign+code subtree just for the estimate.
-        broadcast_queries = (
-            plan_size_bytes(corpus if queries is None else queries)
-            < ANN_QUERY_BROADCAST_SOURCE_BYTES
-        )
     cand = coded.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("centroid_id").alias("c_cell"),
         F.col("code").alias("qb"),
         F.col("nrm").alias("cn"),
     )
-    pairs = maybe_broadcast(
-        qry, ANN_QUERY_BROADCAST_SOURCE_BYTES, force=broadcast_queries
-    ).join(
+    # gate on the INPUT frame, not the derived assignment plan:
+    # without CBO a Filter reports its child's size anyway, and
+    # sizing the raw scan skips re-optimizing the whole assign+code
+    # subtree just for the estimate.
+    pairs = _query_side(qry, corpus if queries is None else queries).join(
         cand,
         (F.col("c_cell") == F.col("centroid_id"))
         & (F.col("neighbor_id") != F.col("query_id")),

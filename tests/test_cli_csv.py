@@ -101,6 +101,22 @@ def test_cli_generate_and_verify(cli_data_dir, tmp_path, capsys):
     assert rc == 1  # verification fails on the engineered fixtures
 
 
+def test_cli_rejects_malformed_rename_gateway(tmp_path, capsys):
+    """A ``--rename-gateway`` value without ``=`` is a usage error:
+    argparse exits 2 before any Spark work runs."""
+    with pytest.raises(SystemExit) as exc:
+        main([
+            "--data-dir", str(tmp_path / "store"),
+            "tripletex-generate",
+            "--from-date", "2024-01-01", "--to-date", "2024-01-31",
+            "--invoice-start-id", "1",
+            "--out", str(tmp_path / "inv.csv"),
+            "--rename-gateway", "manual",
+        ])
+    assert exc.value.code == 2
+    assert "OLD=NEW" in capsys.readouterr().err
+
+
 def test_cli_heatmap(cli_data_dir, tmp_path):
     out = str(tmp_path / "map.html")
     rc = main(["--data-dir", cli_data_dir, "heatmap", "--out", out])

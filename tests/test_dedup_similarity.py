@@ -14,9 +14,17 @@ from shopify_db_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_pairs,
 )
+from shopify_db_spark.operators.planutil import STATS_UNKNOWN
 from shopify_db_spark.operators.similarity import cosine_topk, lsh_bucket_ann
 from shopify_db_spark.plans import load_all
 from tests.conftest import SF_SMOKE
+
+#: size bounds that force a plan-time gate when patched over an
+#: operator's module constant: every plan fits under ALWAYS_FITS
+#: (even an unsized one, which reads as STATS_UNKNOWN), none under
+#: NEVER_FITS.
+ALWAYS_FITS = STATS_UNKNOWN + 1
+NEVER_FITS = 0
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat sleeps "
@@ -510,23 +518,28 @@ def test_prefix_filter_jaccard_complete_vs_bruteforce(spark, corpus):
         assert abs(out[k] - expect[k]) < 1e-12
 
 
-def test_prefix_filter_broadcast_and_shuffle_paths_agree(spark, corpus):
+def test_prefix_filter_broadcast_and_shuffle_paths_agree(
+    spark, corpus, monkeypatch
+):
     """The df-table join has two physical paths — broadcast under the
     plan-time source-size bound, shuffle above it (the 100 TB path).
     Both must produce identical pairs; the shuffle path must not plan
     a broadcast of the df table."""
-    from shopify_db_spark.operators.dedup import prefix_filter_jaccard_pairs
+    from shopify_db_spark.operators import dedup
 
-    def pairs(flag):
+    default = dedup.PREFIX_DF_BROADCAST_SOURCE_BYTES
+
+    def pairs(bound):
+        monkeypatch.setattr(dedup, "PREFIX_DF_BROADCAST_SOURCE_BYTES", bound)
         return {
             (r["doc_a"], r["doc_b"], round(r["jaccard"], 12))
-            for r in prefix_filter_jaccard_pairs(
-                corpus, n=3, threshold=0.3, broadcast_df=flag
+            for r in dedup.prefix_filter_jaccard_pairs(
+                corpus, n=3, threshold=0.3
             ).collect()
         }
 
-    assert pairs(True) == pairs(False)
-    assert pairs(None) == pairs(True)  # auto decision changes nothing
+    assert pairs(ALWAYS_FITS) == pairs(NEVER_FITS)
+    assert pairs(default) == pairs(ALWAYS_FITS)  # auto decision changes nothing
 
 
 def test_semantic_dedup_with_trained_codebook(spark, vectors):
@@ -585,57 +598,52 @@ def test_blocked_pair_join_every_pair_exactly_once(spark):
         assert out.distinct().count() == 17 * 23
 
 
-def test_ann_broadcast_gate_paths_agree(spark, vectors):
+def test_ann_broadcast_gate_paths_agree(spark, vectors, monkeypatch):
     """The ANN query-side broadcast is plan-time gated (it is a
     corpus slice — at 100 TB the hint would ship ~2% of the corpus
     to every executor). The forced-off path — blocked grid for the
     brute-force scorer, plain equi-join on bucket/cell for LSH/IVF —
     must produce identical rows, and the auto decision must match
     the broadcast path on this under-bound fixture."""
-    from shopify_db_spark.operators.similarity import (
-        cosine_topk,
-        ivf_ann,
-        lsh_bucket_ann,
-    )
+    from shopify_db_spark.operators import similarity as S
 
     queries = vectors.filter(F.col("vec_id") % 7 == 0)
     centroids = vectors.filter(F.col("vec_id") % 5 == 0)
-
-    def rows(df):
-        return sorted(
-            (r["query_id"], r["neighbor_id"], round(r["cosine"], 12), r["rank"])
-            for r in df.collect()
-        )
+    default = S.ANN_QUERY_BROADCAST_SOURCE_BYTES
 
     makers = {
-        "cosine": lambda b: cosine_topk(
-            queries, vectors, k=3, broadcast_queries=b
+        "cosine": lambda: S.cosine_topk(queries, vectors, k=3),
+        "lsh": lambda: S.lsh_bucket_ann(
+            queries, vectors, k=3, n_planes=2, dim=8
         ),
-        "lsh": lambda b: lsh_bucket_ann(
-            queries, vectors, k=3, n_planes=2, dim=8, broadcast_queries=b
-        ),
-        "ivf": lambda b: ivf_ann(
-            queries, vectors, centroids, k=3, broadcast_queries=b
-        ),
+        "ivf": lambda: S.ivf_ann(queries, vectors, centroids, k=3),
     }
+
+    def rows(make, bound):
+        monkeypatch.setattr(S, "ANN_QUERY_BROADCAST_SOURCE_BYTES", bound)
+        return sorted(
+            (r["query_id"], r["neighbor_id"], round(r["cosine"], 12), r["rank"])
+            for r in make().collect()
+        )
+
     for name, make in makers.items():
-        on, off, auto = rows(make(True)), rows(make(False)), rows(make(None))
+        on = rows(make, ALWAYS_FITS)
+        off = rows(make, NEVER_FITS)
+        auto = rows(make, default)
         assert on == off, f"{name}: broadcast and shuffle paths differ"
         assert auto == on, f"{name}: auto gate diverges on small input"
 
 
-def test_ann_forced_shuffle_plans_no_query_broadcast(spark, vectors):
+def test_ann_forced_shuffle_plans_no_query_broadcast(
+    spark, vectors, monkeypatch
+):
     """Plan lint for the 100 TB path: with the query-side broadcast
     forced off and Spark's own auto-broadcast disabled (simulating
     corpus-sized stats), the scoring join must be a shuffle shape —
     no BroadcastNestedLoopJoin/CartesianProduct anywhere, and no
     BroadcastExchange except IVF's legitimately tiny centroid
     table."""
-    from shopify_db_spark.operators.similarity import (
-        cosine_topk,
-        ivf_ann,
-        lsh_bucket_ann,
-    )
+    from shopify_db_spark.operators import similarity as S
 
     queries = vectors.filter(F.col("vec_id") % 7 == 0)
     centroids = vectors.filter(F.col("vec_id") % 5 == 0)
@@ -643,18 +651,15 @@ def test_ann_forced_shuffle_plans_no_query_broadcast(spark, vectors):
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
+    monkeypatch.setattr(S, "ANN_QUERY_BROADCAST_SOURCE_BYTES", NEVER_FITS)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        p_cos = plan(cosine_topk(queries, vectors, k=3, broadcast_queries=False))
+        p_cos = plan(S.cosine_topk(queries, vectors, k=3))
         p_lsh = plan(
-            lsh_bucket_ann(
-                queries, vectors, k=3, n_planes=2, dim=8, broadcast_queries=False
-            )
+            S.lsh_bucket_ann(queries, vectors, k=3, n_planes=2, dim=8)
         )
-        p_ivf = plan(
-            ivf_ann(queries, vectors, centroids, k=3, broadcast_queries=False)
-        )
+        p_ivf = plan(S.ivf_ann(queries, vectors, centroids, k=3))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
@@ -1059,21 +1064,22 @@ def test_q145_fertility_consistent_with_q115_counts(spark):
     assert per_lang == rolled
 
 
-def test_contrastive_topk_semantics_and_grid_parity(spark, clustered_vecs):
+def test_contrastive_topk_semantics_and_grid_parity(
+    spark, clustered_vecs, monkeypatch
+):
     """q116's operator on the clustered fixture: hardest positives
     share the anchor's label, hard negatives never do, ranks are
     per-(query, kind) — and the forced blocked-grid path (the 100 TB
     fallback beyond the broadcast bound) is bit-identical to the
     broadcast path, the same parity contract as cosine_topk."""
-    from shopify_db_spark.operators.similarity import contrastive_topk
+    from shopify_db_spark.operators import similarity as S
 
     labeled = clustered_vecs.withColumn(
         "label", (F.col("vec_id") / 50).cast("int")
     )
     queries = labeled.filter(F.col("vec_id") % 25 == 0)
-    rows = contrastive_topk(
-        queries, labeled, k_pos=2, k_neg=2, broadcast_queries=True
-    ).collect()
+    monkeypatch.setattr(S, "ANN_QUERY_BROADCAST_SOURCE_BYTES", ALWAYS_FITS)
+    rows = S.contrastive_topk(queries, labeled, k_pos=2, k_neg=2).collect()
     assert rows
     lab = {r["vec_id"]: r["label"] for r in labeled.collect()}
     for r in rows:
@@ -1097,10 +1103,11 @@ def test_contrastive_topk_semantics_and_grid_parity(spark, clustered_vecs):
         (r["query_id"], r["kind"], r["neighbor_id"], r["cosine"], r["rank"])
         for r in rows
     }
+    monkeypatch.setattr(S, "ANN_QUERY_BROADCAST_SOURCE_BYTES", NEVER_FITS)
     got_g = {
         (r["query_id"], r["kind"], r["neighbor_id"], r["cosine"], r["rank"])
-        for r in contrastive_topk(
-            queries, labeled, k_pos=2, k_neg=2, broadcast_queries=False
+        for r in S.contrastive_topk(
+            queries, labeled, k_pos=2, k_neg=2
         ).collect()
     }
     assert got_b == got_g, "grid path diverges from broadcast path"
@@ -1296,7 +1303,7 @@ def test_respread_probe_degrades_gracefully(spark, vectors, monkeypatch):
     assert rows and all(r["query_id"] != r["neighbor_id"] for r in rows)
 
 
-def test_matmul_assign_matches_brute(spark):
+def test_matmul_assign_matches_brute(spark, tmp_path, monkeypatch):
     """Round-14 scale fix: above the plan-size gate, ivf_assign runs
     the N x K scoring pass as a numpy matmul in mapInPandas (same
     codebook-broadcast memory contract as the brute JVM path, zero
@@ -1304,7 +1311,7 @@ def test_matmul_assign_matches_brute(spark):
     jitter, so away from exact-tie cosines the two paths must agree
     completely -- assignment and n_best>1 multi-probe alike, plus
     the NaN (zero-norm) and null-embedding edge rows."""
-    from shopify_db_spark.operators.similarity import ivf_assign
+    from shopify_db_spark.operators import similarity as S
 
     dim = 8
     rows = []
@@ -1319,24 +1326,31 @@ def test_matmul_assign_matches_brute(spark):
             rows.append((c * 1000 + m, [float(x) for x in member]))
     rows.append((999_001, [0.0] * dim))  # zero-norm -> NaN cosines
     rows.append((999_002, None))         # null embedding
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    # through parquet so Catalyst can size the codebook: an unsized
+    # plan never takes the matmul path, whatever the bound
+    path = str(tmp_path / "emb")
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"
+    ).write.parquet(path)
+    emb = spark.read.parquet(path)
     cents = emb.filter(
         (F.col("vec_id") % 1000 == 0) & (F.col("vec_id") < 999_000)
     )
 
+    def assign(n_best, bound):
+        monkeypatch.setattr(S, "IVF_MATMUL_ASSIGN_SOURCE_BYTES", bound)
+        return S.ivf_assign(emb, cents, n_best=n_best)
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
     for n_best in (1, 3):
-        brute = {
-            (r["vec_id"], r["centroid_id"])
-            for r in ivf_assign(
-                emb, cents, n_best=n_best, matmul=False
-            ).collect()
-        }
-        fast = {
-            (r["vec_id"], r["centroid_id"])
-            for r in ivf_assign(
-                emb, cents, n_best=n_best, matmul=True
-            ).collect()
-        }
+        brute_df = assign(n_best, STATS_UNKNOWN)
+        fast_df = assign(n_best, NEVER_FITS)
+        assert "MapInPandas" not in plan(brute_df)
+        assert "MapInPandas" in plan(fast_df)
+        brute = {(r["vec_id"], r["centroid_id"]) for r in brute_df.collect()}
+        fast = {(r["vec_id"], r["centroid_id"]) for r in fast_df.collect()}
         assert brute == fast, (
             n_best,
             sorted(brute - fast)[:5],

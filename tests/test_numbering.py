@@ -6,7 +6,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from shopify_db_spark.operators.numbering import global_row_numbers
+from shopify_db_spark.operators.numbering import (
+    global_row_numbers,
+    needs_two_phase,
+)
 from shopify_db_spark.plans.invoice import build_invoices
 from tests.commerce_fixtures import build_tables
 
@@ -115,3 +118,21 @@ def test_q08_auto_two_phase_escape(spark, monkeypatch):
     assert "rangepartitioning" in auto_plan.lower()
     key = lambda r: tuple((c, str(v)) for c, v in sorted(r.asDict().items()))  # noqa: E731
     assert sorted(map(key, auto.collect())) == sorted(map(key, small.collect()))
+
+
+def test_needs_two_phase_unsized_source_takes_count_path():
+    """A source Catalyst cannot size (no py4j bridge under Spark
+    Connect, or any probe failure) takes the row-count fallback
+    instead of raising. Hermetic: a stub source, no Spark session."""
+
+    class _Unsized:
+        @property
+        def _jdf(self):
+            raise RuntimeError("no JVM bridge")
+
+        def count(self) -> int:
+            return 5
+
+    src = [_Unsized()]
+    assert needs_two_phase(src, byte_bound=1 << 40, row_bound=4) is True
+    assert needs_two_phase(src, byte_bound=0, row_bound=5) is False

@@ -515,6 +515,27 @@ def test_no_unused_top_level_imports():
     assert not problems, "\n".join(problems)
 
 
+def test_one_plan_stats_probe():
+    """Catalyst's plan statistics (``.stats()`` / ``sizeInBytes()``)
+    are read only in ``operators/planutil.py``: every other site sizes
+    a plan through ``planutil.plan_size_bytes``, which degrades to
+    ``STATS_UNKNOWN`` where the private bridge is missing. Hermetic:
+    reads the sources, no Spark session."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "shopify_db_spark"
+    probe = re.compile(r"\.stats\(\)|sizeInBytes\(\)")
+    offenders = [
+        f"{path.relative_to(pkg.parent)}:{i}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "operators" / "planutil.py"
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if probe.search(line)
+    ]
+    assert not offenders, offenders
+
+
 def test_power_of_two_quantization_is_float32_exact(spark):
     """The q121/q122/q142 quantization scales are powers of two, so
     floor(x·S) is identical whether the multiply happens at float32
