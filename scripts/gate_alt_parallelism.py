@@ -1,10 +1,15 @@
 """gate_sim variant: same DuckDB-oracle compare, DIFFERENT execution
 geometry (local[4], shuffle.partitions=7) — proves every catalog
 result is partitioning-insensitive (order-dependent float sums or
-partition-id-dependent logic would hash-mismatch here)."""
+partition-id-dependent logic would hash-mismatch here).
+
+Usage: python scripts/gate_alt_parallelism.py — gates the checkout
+the script lives in; exits 1 when any query mismatches or errors."""
 import json, os, sys, time
-sys.path.insert(0, "/root/repo")
-os.chdir("/root/repo")
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.chdir(ROOT)
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as entrymod
@@ -35,3 +40,4 @@ for name in sorted(queries):
     if p:
         bad.append(name)
 print(json.dumps({"bad": bad, "n": len(queries)}))
+sys.exit(1 if bad else 0)

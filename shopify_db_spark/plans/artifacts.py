@@ -2,8 +2,8 @@
 
 Several catalog queries consume the SAME derived table — the
 near-dup cluster map (q50/q125/q137/q146) and the invoice table
-(q20's pipeline output, which the verify suite q61 only reads; the
-reference itself materializes invoices as a Postgres table that
+(q20's pipeline output, which q61 hands to the verify count pass;
+the reference itself materializes invoices as a Postgres table that
 ``tripletex.py`` verify queries, it never rebuilds the view). At
 100 TB these are artifacts computed once per corpus/store sync and
 READ by every consumer; recomputing them per query is an artifact

@@ -188,11 +188,8 @@ def invoice_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     invoices — ``db.py:409-483`` writes numbered invoices into the
     ``tripletex`` Postgres table, and the verify suite
     (``tripletex.py:204-242``) queries THAT TABLE; it never rebuilds
-    the view. The per-query harness made q20 and q61 each rebuild
-    the six-join pipeline from scratch — at 100 TB the invoice
-    table is written once per store sync and read by numbering,
-    verify, and export. bench.py times the cold build explicitly as
-    the ``artifact_invoice_table`` line item."""
+    the view. q20 and q61 both read this one build. bench.py times
+    the cold build as the ``artifact_invoice_table`` line item."""
     from shopify_db_spark.plans.artifacts import session_artifact
 
     holder: dict[str, dict[str, DataFrame]] = {}

@@ -5,27 +5,22 @@ suite and the CSV round-trip — reference ``tripletex.py:204-242`` and
 The verify suite (SURVEY §2.10 V1-V8), the gateway replace map
 (F14), the empty-string normalization (F17) and the CSV source/sink
 (S6/S7) would otherwise have pytest-only evidence. These queries put
-them under the driver's oracle gate by re-expressing each check as a
-deterministic aggregate over the SAME mapped invoice result that
-q20 already hash-matches, so the oracle is the invoice SQL spec plus
-a per-check aggregation — the checks' semantics get cross-engine
-evidence, not just self-consistency.
+them under the driver's oracle gate over the SAME mapped invoice
+result that q20 already hash-matches. q61 runs the count pass that
+``plans.verify_invoices.verify_invoices`` ships (``check_groups`` then
+``offender_totals``), so its oracle, the invoice SQL spec plus one
+aggregate per check, is the spec of the production pass.
 
-Parity notes:
+How the q61 oracle states the checks:
 
-* every check's arithmetic is decimal-exact: money columns arrive as
-  exact-2dp doubles (``view_out`` rounds them), so ``CAST(x AS
-  DECIMAL(18,2))`` is unambiguous on both engines, and the reference's
-  1 % price tolerance ``|paid - sum(line)| > 0.01*|paid|`` is checked
-  in the ×100-scaled form ``|100*paid - sum(count*unit*(100-disc))| >
-  |paid|`` — no division, no doubles, no float-sum order sensitivity;
-* sequence-gap counts use the closed-form ``max - min + 1 -
-  count(distinct)`` (equals the interior-missing count since both
-  endpoints are observed) instead of materializing the missing set —
-  at 100 TB this is one aggregate, not an explode+anti-join;
-* the distributed offender-set variants (with bounded samples for
-  operators) live in ``plans.verify_invoices``; this module is the
-  scalar gate evidence for the same predicates.
+* every check's arithmetic is decimal-exact: money is cast to
+  ``DECIMAL(18,2)``, and the reference's 1 % price tolerance
+  ``|paid - sum(line)| > 0.01*|paid|`` is written in the ×100-scaled
+  form ``|100*paid - sum(count*unit*(100-disc))| > |paid|``, with no
+  division and no doubles;
+* sequence-gap counts use the closed form ``max - min + 1 -
+  count(distinct)`` (the interior-missing count, since both endpoints
+  are observed), as the production pass does.
 """
 
 from __future__ import annotations
@@ -44,10 +39,16 @@ from shopify_db_spark.plans.commerce import (
     TABLE_MAP,
     TO_DATE,
     commerce_tables_from_benchmark,
+    invoice_table,
 )
 from shopify_db_spark.plans.invoice import build_invoices
 from shopify_db_spark.plans.invoice_oracle import render_invoice_cte_prefix
-from shopify_db_spark.plans.verify_invoices import replace_invoice_gateway
+from shopify_db_spark.plans.verify_invoices import (
+    CHECKS,
+    check_groups,
+    offender_totals,
+    replace_invoice_gateway,
+)
 from shopify_db_spark.schemas import INVOICE_REQUIRED_FIELDS
 from shopify_db_spark.sources.csv_io import read_invoice_csv, write_invoice_csv
 
@@ -58,8 +59,9 @@ GATEWAY_MAP = {"vipps": "Vipps", "shopify_payments": "Shopify Payments"}
 #: the unknown-gateway check has a non-trivial offender set
 KNOWN_GATEWAYS = ["Vipps", "Shopify Payments", "stripe"]
 
-#: string output columns normalized empty→null before checking (F17;
-#: reference applies it frame-wide, tripletex.py:186-191)
+#: the string output columns the q61 oracle normalizes empty→null
+#: (F17; the reference and ``check_groups`` apply it frame-wide,
+#: tripletex.py:186-191)
 _STRING_COLS = (
     "CUSTOMER NAME",
     "ORDER NO",
@@ -68,29 +70,6 @@ _STRING_COLS = (
     "ORDER LINE - DESCRIPTION",
     "ORDER LINE - PROD NO",
 )
-
-
-def _normalized_invoices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The materialized invoice table with the reference's pre-check
-    normalization applied: empty strings → null on every string
-    column, gateways renamed via the replace map. Reads the
-    session-memoized artifact (``commerce.invoice_table``) exactly
-    like the reference's verify suite, which queries the
-    ``tripletex`` table ``db.py`` wrote (``tripletex.py:204-242``)
-    instead of rebuilding the view; the artifact is unsorted — the
-    checks only aggregate, so the cosmetic sort is irrelevant."""
-    from shopify_db_spark.plans.commerce import invoice_table
-
-    inv = invoice_table(spark, sf_dir)
-    norm = inv.select(
-        *[
-            F.nullif(F.col(c), F.lit("")).alias(c)
-            if c in _STRING_COLS
-            else F.col(c)
-            for c in inv.columns
-        ]
-    )
-    return replace_invoice_gateway(norm, GATEWAY_MAP)
 
 
 def _oracle_norm_prefix() -> str:
@@ -209,117 +188,17 @@ FROM norm
 @query("q61_invoice_verify", oracle=_Q61_ORACLE)
 def q61_invoice_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's 8-check invoice verification suite
-    (``tripletex.py:204-242``, V1-V8) as one gate row per check:
-    refund orders, gift-card orders, order/invoice sequence gaps,
-    required-field nulls, missing description+SKU, the 1 % paid-vs-
-    lines price reconciliation, and unknown payment gateways — each
-    over the empty-string-normalized (F17), gateway-renamed (F14)
-    mapped invoice result. The price tolerance is checked in the
-    ×100-scaled decimal form so no engine ever divides or sums
-    doubles; sequence gaps use the closed-form aggregate, not a
-    materialized missing set."""
-    keep = list(
-        dict.fromkeys(
-            INVOICE_REQUIRED_FIELDS
-            + ["ORDER LINE - PROD NO", "ORDER LINE - DISCOUNT",
-               "ORDER LINE - DESCRIPTION"]
-        )
-    )
-    norm = _normalized_invoices(spark, sf_dir).select(*keep).persist()
-    paid = F.col("PAID AMOUNT").cast("decimal(18,2)")
-    ono_n = F.substring(F.col("ORDER NO"), 2, 18).cast("int")
-    inv_n = F.col("INVOICE NO")
-    non_refund_n = F.when(paid >= 0, ono_n)
-
-    # TWO jobs total: one fused aggregate over the cached frame for
-    # the seven frame-level checks (countDistincts share one Expand),
-    # one grouped aggregate for the price reconciliation. The first
-    # job materializes the cache; a lazy union of per-check aggregate
-    # branches instead schedules all their stages concurrently
-    # against the still-cold cache and the per-partition cache locks
-    # serialize the invoice pipeline through contended tasks
-    # (measured 2x slower at sf0.1). Scalar rows to the driver are
-    # the verify suite's natural output — the reference returns a
-    # pass/fail report object, not data.
-    try:
-        flat = norm.agg(
-            F.countDistinct(F.when(paid <= 0, F.col("ORDER NO"))).alias("refunds"),
-            F.countDistinct(
-                F.when(
-                    F.col("ORDER LINE - PROD NO") == "GIFTCARD", F.col("ORDER NO")
-                )
-            ).alias("gift_cards"),
-            (
-                F.max(non_refund_n)
-                - F.min(non_refund_n)
-                + 1
-                - F.countDistinct(non_refund_n)
-            ).alias("order_no"),
-            (F.max(inv_n) - F.min(inv_n) + 1 - F.countDistinct(inv_n)).alias(
-                "invoice_no"
-            ),
-            sum(
-                F.count(F.when(F.col(c).isNull(), 1))
-                for c in INVOICE_REQUIRED_FIELDS
-            ).alias("none_values"),
-            F.countDistinct(
-                F.when(
-                    F.col("ORDER LINE - PROD NO").isNull()
-                    & F.col("ORDER LINE - DESCRIPTION").isNull(),
-                    F.col("ORDER NO"),
-                )
-            ).alias("description_or_sku"),
-            F.countDistinct(
-                F.when(
-                    ~F.col("PAYMENT TYPE").isin(KNOWN_GATEWAYS),
-                    F.concat(F.col("ORDER NO"), F.lit("|"), F.col("PAYMENT TYPE")),
-                )
-            ).alias("unknown_gateway"),
-        ).collect()[0]
-        price_bad = (
-            norm.groupBy("ORDER NO")
-            .agg(
-                F.max(paid).alias("paid"),
-                F.sum(
-                    F.col("ORDER LINE - COUNT").cast("decimal(10,0)")
-                    * F.col("ORDER LINE - UNIT PRICE").cast("decimal(18,2)")
-                    * (
-                        F.lit(100)
-                        - F.coalesce(
-                            F.col("ORDER LINE - DISCOUNT").cast("decimal(18,2)"),
-                            F.lit(0).cast("decimal(18,2)"),
-                        )
-                    )
-                ).alias("total_x100"),
-            )
-            .agg(
-                F.count(
-                    F.when(
-                        F.abs(F.lit(100) * F.col("paid") - F.col("total_x100"))
-                        > F.abs(F.col("paid")),
-                        1,
-                    )
-                ).alias("n")
-            )
-            .collect()[0]["n"]
-        )
-    finally:
-        norm.unpersist()
-    order = [
-        "refunds",
-        "gift_cards",
-        "order_no",
-        "invoice_no",
-        "none_values",
-        "description_or_sku",
-        "price",
-        "unknown_gateway",
-    ]
-    counts = {name: int(flat[name]) for name in order if name != "price"}
-    counts["price"] = int(price_bad)
-    rows = [(name, counts[name], counts[name] == 0) for name in order]
+    (``tripletex.py:204-242``, V1-V8) as one gate row per check, in
+    report order. The counts come from ``verify_invoices``' own count
+    pass over the gateway-renamed (F14) invoice artifact; the pass
+    normalizes empty strings to null (F17) before checking. The
+    offender samples that ``verify_invoices`` collects for a failing
+    check are not part of the gate row."""
+    inv = replace_invoice_gateway(invoice_table(spark, sf_dir), GATEWAY_MAP)
+    totals = offender_totals(check_groups(inv, KNOWN_GATEWAYS))
     return spark.createDataFrame(
-        rows, "check_name string, n_offenders long, passed boolean"
+        [(c, totals[c], totals[c] == 0) for c in CHECKS],
+        "check_name string, n_offenders long, passed boolean",
     )
 
 

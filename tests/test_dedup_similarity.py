@@ -26,6 +26,27 @@ from tests.conftest import SF_SMOKE
 ALWAYS_FITS = STATS_UNKNOWN + 1
 NEVER_FITS = 0
 
+def _sized(spark, df, path):
+    """``df`` read back from parquet. Catalyst sizes a file scan, while
+    a ``createDataFrame`` frame reads as ``STATS_UNKNOWN`` and never
+    takes a size-gated broadcast."""
+    df.write.parquet(str(path))
+    return spark.read.parquet(str(path))
+
+
+def _hinted_broadcasts(spark, build) -> int:
+    """The ``BroadcastExchange`` count of the plan ``build()`` returns,
+    planned with Spark's own size-based broadcast off, so every
+    exchange counted comes from an operator's hint."""
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan = build()._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    return plan.count("BroadcastExchange")
+
+
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat sleeps "
     "on the warm windowsill in the afternoon sun near the garden"
@@ -519,27 +540,33 @@ def test_prefix_filter_jaccard_complete_vs_bruteforce(spark, corpus):
 
 
 def test_prefix_filter_broadcast_and_shuffle_paths_agree(
-    spark, corpus, monkeypatch
+    spark, corpus, tmp_path, monkeypatch
 ):
     """The df-table join has two physical paths — broadcast under the
     plan-time source-size bound, shuffle above it (the 100 TB path).
     Both must produce identical pairs; the shuffle path must not plan
-    a broadcast of the df table."""
+    a broadcast of the df table, and on this under-bound corpus the
+    auto decision must plan it."""
     from shopify_db_spark.operators import dedup
 
+    docs = _sized(spark, corpus, tmp_path / "corpus")
     default = dedup.PREFIX_DF_BROADCAST_SOURCE_BYTES
 
-    def pairs(bound):
+    def run(bound):
         monkeypatch.setattr(dedup, "PREFIX_DF_BROADCAST_SOURCE_BYTES", bound)
+        return dedup.prefix_filter_jaccard_pairs(docs, n=3, threshold=0.3)
+
+    def pairs(bound):
         return {
             (r["doc_a"], r["doc_b"], round(r["jaccard"], 12))
-            for r in dedup.prefix_filter_jaccard_pairs(
-                corpus, n=3, threshold=0.3
-            ).collect()
+            for r in run(bound).collect()
         }
 
     assert pairs(ALWAYS_FITS) == pairs(NEVER_FITS)
     assert pairs(default) == pairs(ALWAYS_FITS)  # auto decision changes nothing
+    on, off, auto = (_hinted_broadcasts(spark, lambda: run(b))
+                     for b in (ALWAYS_FITS, NEVER_FITS, default))
+    assert auto == on > off == 0, (on, off, auto)
 
 
 def test_semantic_dedup_with_trained_codebook(spark, vectors):
@@ -598,32 +625,39 @@ def test_blocked_pair_join_every_pair_exactly_once(spark):
         assert out.distinct().count() == 17 * 23
 
 
-def test_ann_broadcast_gate_paths_agree(spark, vectors, monkeypatch):
+def test_ann_broadcast_gate_paths_agree(spark, vectors, tmp_path, monkeypatch):
     """The ANN query-side broadcast is plan-time gated (it is a
     corpus slice — at 100 TB the hint would ship ~2% of the corpus
     to every executor). The forced-off path — blocked grid for the
     brute-force scorer, plain equi-join on bucket/cell for LSH/IVF —
-    must produce identical rows, and the auto decision must match
-    the broadcast path on this under-bound fixture."""
+    must produce identical rows, and on this under-bound fixture the
+    auto decision must plan the broadcast and match its rows."""
     from shopify_db_spark.operators import similarity as S
 
-    queries = vectors.filter(F.col("vec_id") % 7 == 0)
-    centroids = vectors.filter(F.col("vec_id") % 5 == 0)
+    sized = _sized(spark, vectors, tmp_path / "vectors")
+    queries = sized.filter(F.col("vec_id") % 7 == 0)
+    centroids = sized.filter(F.col("vec_id") % 5 == 0)
     default = S.ANN_QUERY_BROADCAST_SOURCE_BYTES
 
     makers = {
-        "cosine": lambda: S.cosine_topk(queries, vectors, k=3),
+        "cosine": lambda: S.cosine_topk(queries, sized, k=3),
         "lsh": lambda: S.lsh_bucket_ann(
-            queries, vectors, k=3, n_planes=2, dim=8
+            queries, sized, k=3, n_planes=2, dim=8
         ),
-        "ivf": lambda: S.ivf_ann(queries, vectors, centroids, k=3),
+        "ivf": lambda: S.ivf_ann(queries, sized, centroids, k=3),
     }
 
+    def gated(make, bound):
+        def build():
+            monkeypatch.setattr(S, "ANN_QUERY_BROADCAST_SOURCE_BYTES", bound)
+            return make()
+
+        return build
+
     def rows(make, bound):
-        monkeypatch.setattr(S, "ANN_QUERY_BROADCAST_SOURCE_BYTES", bound)
         return sorted(
             (r["query_id"], r["neighbor_id"], round(r["cosine"], 12), r["rank"])
-            for r in make().collect()
+            for r in gated(make, bound)().collect()
         )
 
     for name, make in makers.items():
@@ -632,6 +666,11 @@ def test_ann_broadcast_gate_paths_agree(spark, vectors, monkeypatch):
         auto = rows(make, default)
         assert on == off, f"{name}: broadcast and shuffle paths differ"
         assert auto == on, f"{name}: auto gate diverges on small input"
+        n_on, n_off, n_auto = (
+            _hinted_broadcasts(spark, gated(make, b))
+            for b in (ALWAYS_FITS, NEVER_FITS, default)
+        )
+        assert n_auto == n_on > n_off, f"{name}: {(n_on, n_off, n_auto)}"
 
 
 def test_ann_forced_shuffle_plans_no_query_broadcast(

@@ -239,28 +239,33 @@ def test_invoice_artifact_build_mapping_layer_is_cached(spark):
     ), "the invoice numbering re-derives lines or groups from the tables:\n" + plan
 
 
-def test_q20_and_q61_read_the_invoice_artifact(spark):
+def test_q20_and_q61_read_the_invoice_artifact(spark, monkeypatch):
     """q20 and the verify suite must READ the materialized invoice
     table (the reference's own shape: db.py writes the tripletex
     table, tripletex.py verify queries it), not rebuild the six-join
     pipeline per query. q20's declared plan shows the checkpoint
     scan directly; q61 collects scalar aggregates (its declared plan
-    is a local relation), so the lint targets its input frame
-    ``_normalized_invoices`` instead — the artifact read plus
-    map-side normalization, no joins, no exchanges."""
+    is a local relation), so the lint targets the frame q61 hands to
+    the verify count pass instead: the artifact read plus the
+    map-side gateway rename, no joins."""
     plan = _plan(spark, "q20_invoice_pipeline")
     assert "ExistingRDD" in plan, (
         "q20 no longer reads the invoice artifact "
         "(commerce.invoice_table) — per-query rebuild regressed"
     )
-    from shopify_db_spark.plans.commerce_checks import _normalized_invoices
+    from shopify_db_spark.plans import commerce_checks
 
-    nplan = (
-        _normalized_invoices(spark, SF_SMOKE)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    inputs = []
+    count_pass = commerce_checks.check_groups
+
+    def capture(df, gateways):
+        inputs.append(df)
+        return count_pass(df, gateways)
+
+    monkeypatch.setattr(commerce_checks, "check_groups", capture)
+    commerce_checks.q61_invoice_verify(spark, SF_SMOKE)
+    assert len(inputs) == 1, "q61 no longer runs the verify count pass"
+    nplan = inputs[0]._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in nplan and "Join" not in nplan, (
         "q61's input no longer reads the invoice artifact — "
         "per-query rebuild regressed:\n" + nplan[:800]

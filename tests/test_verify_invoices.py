@@ -20,7 +20,6 @@ from shopify_db_spark.plans.verify_invoices import (
 )
 from shopify_db_spark.sources.csv_io import INVOICE_CSV_SCHEMA
 from tests.commerce_fixtures import build_tables
-from tests.conftest import SF_SMOKE
 
 CHECK_NAMES = [
     "refunds",
@@ -304,17 +303,14 @@ def test_gateways_none_versus_empty_allowlist(spark):
     )
 
 
-def test_offender_counts_match_gated_q61(spark):
-    """Every per-check offender count equals the oracle-gated q61 row
-    for the same normalized invoice table."""
-    from shopify_db_spark.plans.commerce_checks import (
-        KNOWN_GATEWAYS,
-        _normalized_invoices,
-        q61_invoice_verify,
-    )
-
-    report = verify_invoices(_normalized_invoices(spark, SF_SMOKE), KNOWN_GATEWAYS)
-    gated = q61_invoice_verify(spark, SF_SMOKE).collect()
-    assert {c.name: c.n_offenders for c in report.checks} == {
-        r["check_name"]: r["n_offenders"] for r in gated
-    }
+def test_price_tolerance_is_exact_at_one_percent(spark):
+    """A deviation of exactly 1 % of the paid amount passes and one
+    just above it fails. 1 % of 0.35 is a case where the double
+    product ``0.35 * 0.01`` rounds below the decimal 0.0035."""
+    paid = {"PAID_AMOUNT": D("0.35"), "ORDER_LINE_UNIT_PRICE": D("0.35")}
+    lines = [
+        _line("#1", 1, ORDER_LINE_DISCOUNT=D("1.00"), **paid),
+        _line("#2", 2, ORDER_LINE_DISCOUNT=D("1.01"), **paid),
+    ]
+    price = _by_name(verify_invoices(_frame(spark, lines)))["price"]
+    assert (price.n_offenders, price.sample) == (1, [("#2", D("0.003535"))])
